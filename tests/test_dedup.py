@@ -1,5 +1,6 @@
 """Dedup family on crafted documents with known duplicate structure."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from time_series_databse_engine_spark.operators.dedup import (
@@ -748,3 +749,64 @@ def test_modularity_anti_correlated_partition_negative(spark):
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     r = modularity(pairs, labels).collect()[0]
     assert r.modularity < 0.0
+
+
+def _min_label_rounds(pairs, rounds=None):
+    """Reference for dedup_clusters: synchronous min-label propagation for
+    ``rounds`` rounds; ``None`` runs to the fixpoint, where every label is
+    its union-find component's minimum."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    if rounds is None:
+        return {n: find(n) for n in adj}
+    label = {n: n for n in adj}
+    for _ in range(rounds):
+        label = {n: min([label[n]] + [label[m] for m in adj[n]]) for n in adj}
+    return label
+
+
+@pytest.mark.parametrize("id_type", ["long", "double", "decimal(10,2)", "string"])
+def test_dedup_clusters_matches_union_find(spark, id_type):
+    """Property test against union-find over random graphs plus a 12-node
+    chain, for integral, fractional and string ids.  Fractional ids must
+    not take the label-sum convergence shortcut: a real label change from
+    0.12 to 0.01 leaves the decimal(38,0) sum unchanged.  With a small
+    ``max_iters`` the chain cannot converge, so the result must be exactly
+    that many propagation rounds — not an early stop."""
+    import random
+    from decimal import Decimal
+
+    from time_series_databse_engine_spark.operators.dedup import dedup_clusters
+
+    as_id = {
+        "long": lambda k: k,
+        "double": lambda k: (k + 1) / 1000,
+        "decimal(10,2)": lambda k: Decimal(k + 1) / 100,
+        "string": lambda k: f"doc{k:03d}",
+    }[id_type]
+    rng = random.Random(7)
+    nodes = rng.sample(range(12, 60), 40)
+    edges = [tuple(rng.sample(nodes, 2)) for _ in range(30)]
+    edges += [(k, k + 1) for k in range(11)]  # chain 0-1-…-11, diameter 11
+    pairs = [(as_id(a), as_id(b)) for a, b in edges]
+    df = spark.createDataFrame(pairs, f"id1 {id_type}, id2 {id_type}")
+
+    def run(max_iters):
+        out = dedup_clusters(df, max_iters=max_iters).collect()
+        return {r.doc_id: r.cluster_id for r in out}
+
+    assert run(25) == _min_label_rounds(pairs)
+    want = _min_label_rounds(pairs, rounds=4)
+    assert want != _min_label_rounds(pairs)  # the chain needs > 4 rounds
+    assert run(4) == want

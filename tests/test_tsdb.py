@@ -387,3 +387,83 @@ def test_stats_reports_table_health(spark, tmp_path):
     assert s["partitions"] == 2 and s["rows"] == 105
     assert s["files"] >= 2 and s["bytes"] > 0
     assert s["bytes_per_row"] > 0
+
+
+@pytest.mark.parametrize("op", ["compact", "upsert"])
+def test_swap_crash_then_vacuum_keeps_every_row(spark, tmp_path, monkeypatch, op):
+    """A rewrite whose process dies inside the partition swap — the
+    second partition's move-in fails — then ``vacuum()``: every row is
+    still readable.  The interrupted partition lives only in its
+    move-aside (or, without one, only in the staging dir vacuum sweeps),
+    so recovery must restore it before the sweep."""
+    import os
+
+    H = 3_600_000
+    schema = "metric string, ts_ms long, value double"
+    store = TimeSeriesStore(spark, str(tmp_path / "s"))
+    store.ingest(
+        spark.createDataFrame(
+            [("m", h * H + i, float(i)) for h in range(3) for i in range(5)], schema
+        ),
+        target_partitions=2,
+    )
+
+    def keys():
+        return sorted((r.metric, r.ts_ms) for r in store.points().collect())
+
+    before = keys()
+
+    real_move, calls = shutil.move, []
+
+    def crash_on_second_move(src, dst, *a, **k):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("simulated crash mid-swap")
+        return real_move(src, dst, *a, **k)
+
+    monkeypatch.setattr(shutil, "move", crash_on_second_move)
+    with pytest.raises(OSError, match="simulated crash"):
+        if op == "compact":
+            store.compact(target_partitions=2)
+        else:  # corrects one existing point in every hour
+            store.upsert(
+                spark.createDataFrame([("m", h * H + 1, 99.0) for h in range(3)], schema)
+            )
+    monkeypatch.setattr(shutil, "move", real_move)
+
+    store.vacuum()
+    assert keys() == before
+    assert not [e for e in os.listdir(store.path) if e.startswith(".compact-old-")]
+    store.compact()  # the healed table rewrites normally
+    assert keys() == before
+
+
+def test_unreadable_store_raises_instead_of_reading_as_empty(spark, tmp_path):
+    """Only a missing path means "no data": a store whose only data file
+    is garbage makes compact() raise, where a swallowed error would
+    return as if the store were empty."""
+    part = tmp_path / "bad" / "hour_bucket=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not a parquet file" * 8)
+    store = TimeSeriesStore(spark, str(tmp_path / "bad"))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        store.compact()
+    assert (part / "part-00000.parquet").exists()
+
+
+def test_corrupt_rollup_raises_instead_of_falling_back(spark, tmp_path):
+    import glob
+
+    store = TimeSeriesStore(spark, str(tmp_path / "r"))
+    store.ingest(
+        spark.createDataFrame(
+            [("m", t * 60_000, 1.0) for t in range(120)], "metric string, ts_ms long, value double"
+        )
+    )
+    store.materialize_rollup("1 hour")
+    for f in glob.glob(store._rollup_path("1 hour") + "/day_bucket=*/*.parquet"):
+        with open(f, "r+b") as fh:  # clobber the footer and its magic bytes
+            fh.seek(-12, 2)
+            fh.write(b"\0" * 12)
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        store.rollup("1 hour").collect()

@@ -542,12 +542,17 @@ def dedup_clusters(
     # Σlabel is unchanged iff NO label changed — one partial-aggregate
     # on the already-id-partitioned table replaces the old-vs-new join
     # per round (decimal(38,0) keeps the sum exact at any id magnitude).
-    from pyspark.sql.types import NumericType
+    # Only for INTEGRAL ids: fractional ids (float/double, decimals with
+    # scale > 0) lose real label changes in the cast/rounding, and a
+    # NULL sum (overflow) never counts as converged.
+    from pyspark.sql.types import DecimalType, IntegralType
 
-    numeric_ids = isinstance(p.schema["src"].dataType, NumericType)
+    id_type = p.schema["src"].dataType
+    integral_ids = isinstance(id_type, IntegralType) or (
+        isinstance(id_type, DecimalType) and id_type.scale == 0
+    )
     labels = None
-    _UNSET = object()
-    prev_sum: object = _UNSET
+    prev_sum = None
     for _ in range(max_iters):
         if labels is None:
             cand = edges.select(
@@ -565,15 +570,15 @@ def dedup_clusters(
             # in the SAME job (r12 opt: one job per round instead of two)
             .localCheckpoint(eager=False)
         )
-        if numeric_ids:
+        if integral_ids:
             label_sum = new_labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+                F.try_sum(F.col("label").cast("decimal(38,0)")).alias("s")
             ).first()["s"]
-            converged = prev_sum is not _UNSET and label_sum == prev_sum
+            converged = label_sum is not None and label_sum == prev_sum
             prev_sum = label_sum
         elif labels is not None:
-            # non-numeric ids (string doc keys): Σlabel has no monotone —
-            # keep the exact old-vs-new comparison for them
+            # other ids (string doc keys, fractional numbers): no exact
+            # Σlabel monotone — keep the exact old-vs-new comparison
             converged = (
                 new_labels.join(
                     labels.select("id", F.col("label").alias("old")), "id"

@@ -28,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .. import commit
+from ..commit import recover_compact
+
 # a maintenance lease is considered abandoned (crashed owner) after this
 # many seconds without a refresh; takeover is then allowed
 MAINTENANCE_LEASE_TTL_SEC = 3600.0
@@ -180,28 +183,6 @@ def leased(path_arg: int):
     return deco
 
 
-def recover_compact(idx: str, part_col: str) -> None:
-    """Self-heal a compaction that crashed mid-swap: any
-    ``.compact-old-<part_col>=*`` move-aside dir (invisible to Spark —
-    dot prefix) whose live partition directory is MISSING is moved
-    back; the rest are leftovers of completed swaps and are removed.
-    Run by :func:`compact_partitioned` and :func:`vacuum_index` before
-    doing anything else, so no crash window ever loses data."""
-    import os
-    import shutil
-
-    prefix = f".compact-old-{part_col}="
-    for entry in os.listdir(idx):
-        if not entry.startswith(prefix):
-            continue
-        live = os.path.join(idx, entry[len(".compact-old-"):])
-        aside = os.path.join(idx, entry)
-        if os.path.isdir(live):
-            shutil.rmtree(aside, ignore_errors=True)
-        else:
-            os.rename(aside, live)
-
-
 def epoch_append(
     enc: DataFrame, path: str, part_col: str, epoch_id: int | None
 ) -> None:
@@ -212,36 +193,18 @@ def epoch_append(
     are deleted, then the staged files move into the partition
     directories under an ``epoch{id}-`` name prefix — so a streaming
     foreachBatch replay of the same micro-batch converges to exactly
-    one copy at any crash point.  Cost vs the blind append: identical
-    distributed work plus O(touched partitions) driver-side renames."""
+    one copy at any crash point (:func:`commit.move_in`).  Cost vs the
+    blind append: identical distributed work plus O(touched partitions)
+    driver-side renames."""
+    import os
+
     enc = enc.repartition(part_col)
     if epoch_id is None:
         enc.write.mode("append").partitionBy(part_col).parquet(path + "/index")
         return
-    import glob
-    import os
-    import shutil
-
-    prefix = f"epoch{int(epoch_id)}-"
-    for leftover in glob.glob(
-        os.path.join(path, "index", f"{part_col}=*", prefix + "*")
-    ):
-        os.remove(leftover)
     tmp = os.path.join(path, f"index-epoch-{int(epoch_id)}-tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
     enc.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-    for entry in os.listdir(tmp):
-        if not entry.startswith(f"{part_col}="):
-            continue
-        dst_dir = os.path.join(path, "index", entry)
-        os.makedirs(dst_dir, exist_ok=True)
-        for fname in os.listdir(os.path.join(tmp, entry)):
-            if fname.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(tmp, entry, fname),
-                    os.path.join(dst_dir, prefix + fname),
-                )
-    shutil.rmtree(tmp, ignore_errors=True)
+    commit.move_in(tmp, os.path.join(path, "index"), part_col, f"epoch{int(epoch_id)}-")
 
 
 def compact_partitioned(
@@ -259,13 +222,14 @@ def compact_partitioned(
 
     Two safety contracts beyond the basic rewrite-and-swap:
 
-    * **Crash-safe swap.**  Each partition's old directory is MOVED
-      ASIDE (``.compact-old-…``, a dot-dir Spark never reads) before
-      the new one moves in, and the asides are deleted only after every
-      swap completes; a crash at any point leaves all data recoverable,
-      and :func:`recover_compact` (run on the next compact or vacuum)
-      restores any partition whose swap was interrupted.  Nothing is
-      ever rmtree'd while it is the only copy.
+    * **Crash-safe swap** (:func:`commit.swap_partitions`).  Each
+      partition's old directory is MOVED ASIDE (``.compact-old-…``, a
+      dot-dir Spark never reads) before the new one moves in, and the
+      asides are deleted only after every swap completes; a crash at any
+      point leaves all data recoverable, and :func:`recover_compact`
+      (run on the next compact or vacuum) restores any partition whose
+      swap was interrupted.  Nothing is ever rmtree'd while it is the
+      only copy.
 
     * **Replay-aware.**  ``committed_through`` is the last epoch id the
       streaming checkpoint has COMMITTED (see
@@ -283,7 +247,6 @@ def compact_partitioned(
     partitions) — asserted in tests by probe identity before/after."""
     import os
     import re
-    import shutil
 
     idx = path.rstrip("/") + "/index"
     recover_compact(idx, part_col)
@@ -307,7 +270,6 @@ def compact_partitioned(
         return
     df = spark.read.option("basePath", idx).parquet(*files)
     tmp = path.rstrip("/") + "/index-compact-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
     (
         df.repartition(part_col)
         .sortWithinPartitions(*sort_cols)
@@ -316,31 +278,14 @@ def compact_partitioned(
         .partitionBy(part_col)
         .parquet(tmp)
     )
-    swapped = []
-    for entry in os.listdir(tmp):
-        if not entry.startswith(f"{part_col}="):
-            continue
-        src_dir, dst = os.path.join(tmp, entry), os.path.join(idx, entry)
-        if os.path.isdir(dst):
-            aside = os.path.join(idx, ".compact-old-" + entry)
-            os.rename(dst, aside)
-            swapped.append(entry)
-            # carry NON-absorbed (uncommitted-epoch) files into the new
-            # dir by COPY, only after the aside rename: the aside keeps a
-            # complete copy until every swap finishes, so a crash at any
-            # point here leaves the uncommitted bytes recoverable by
-            # recover_compact (a move into the staging dir before the
-            # rename would make index-compact-tmp — which the next
-            # compact unconditionally clears — the only copy)
-            for fname in os.listdir(aside):
-                if fname.endswith(".parquet") and not absorbable(fname):
-                    shutil.copy2(
-                        os.path.join(aside, fname), os.path.join(src_dir, fname)
-                    )
-        shutil.move(src_dir, dst)
-    for entry in swapped:  # all swaps complete — now the asides may go
-        shutil.rmtree(os.path.join(idx, ".compact-old-" + entry), ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
+    # carry NON-absorbed (uncommitted-epoch) files into each new dir; the
+    # swap copies them only after the move-aside, because a move into the
+    # staging dir first would make index-compact-tmp — which the next
+    # compact unconditionally clears — their only copy
+    commit.swap_partitions(
+        tmp, idx, part_col,
+        carry=lambda f: f.endswith(".parquet") and not absorbable(f),
+    )
 
 
 def vacuum_index(path: str, part_col: str) -> int:
@@ -363,8 +308,7 @@ def vacuum_index(path: str, part_col: str) -> int:
 
     removed = 0
     base = path.rstrip("/")
-    if os.path.isdir(os.path.join(base, "index")):
-        recover_compact(os.path.join(base, "index"), part_col)
+    recover_compact(os.path.join(base, "index"), part_col)
     for entry in os.listdir(base):
         if (
             (entry.startswith("index-epoch-") or entry == "index-compact-tmp")

@@ -8,8 +8,12 @@ cluster the same plans run against kafka with checkpointed exactly-once
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window as W
+
+from ..commit import EpochDirs, epoch_dirs, move_in
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -21,6 +25,17 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("props", T.StringType(), True),
     ]
 )
+
+
+def _each_batch(stream: DataFrame, write_batch, checkpoint_dir: str):
+    """The sink shape every ``foreachBatch`` leg here shares: one
+    checkpointed ``write_batch(batch_df, epoch_id)`` call per micro-batch,
+    run until the source is drained."""
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
 
 
 def stream_events(spark: SparkSession, src_dir: str, schema: T.StructType = EVENT_SCHEMA) -> DataFrame:
@@ -142,12 +157,11 @@ def stream_to_store(
     checkpoint_dir: str,
     metric_col: str = "event_type",
     rollup_bucket: str | None = None,
-    exactly_once: bool = True,
 ):
     """``foreachBatch`` sink into the hour-partitioned Parquet TimeSeriesStore:
     each micro-batch becomes one immutable sorted append.
 
-    Delivery semantics — EXACTLY-ONCE by default: each micro-batch is
+    Delivery semantics — EXACTLY-ONCE: each micro-batch is
     written through :meth:`TimeSeriesStore.ingest_epoch`, which keys the
     batch's data files by the streaming ``epoch_id`` and deletes any
     files of a previous attempt of the same epoch before moving the new
@@ -156,10 +170,7 @@ def stream_to_store(
     restart replays the batch — becomes a self-cleaning replay: the
     replayed epoch removes its earlier copy and converges to exactly one
     (idempotent-writer exactly-once, the same contract Spark documents
-    for batchId-keyed foreachBatch sinks).  ``exactly_once=False`` falls
-    back to the plain blind append (no per-epoch renames; duplicates on
-    replay) — only worth it when a downstream ``compact(dedupe=True)``
-    runs anyway.
+    for batchId-keyed foreachBatch sinks).
 
     With ``rollup_bucket`` set, each batch also refreshes the materialized
     rollup incrementally for just the days the batch touched — the
@@ -175,20 +186,13 @@ def stream_to_store(
             F.unix_millis(F.col("ts")).alias("ts_ms"),
             F.col("value"),
         )
-        if exactly_once:
-            store.ingest_epoch(pts, epoch_id)
-        else:
-            store.ingest(pts)
+        store.ingest_epoch(pts, epoch_id)
         if rollup_bucket is not None:
             lo = pts.agg(F.min("ts_ms")).collect()[0][0]
             if lo is not None:
                 store.materialize_rollup(rollup_bucket, since_ms=lo)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def enrich_stream(
@@ -243,11 +247,7 @@ def maintain_ann_index(
             epoch_id=epoch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def maintain_maxsim_index(
@@ -282,11 +282,7 @@ def maintain_maxsim_index(
             epoch_id=epoch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_decode_media(
@@ -314,15 +310,10 @@ def stream_decode_media(
     double-counted corrupt rows).  Metrics aggregate from the STAGED
     features files, so the mapInPandas decode runs once per batch, not
     once per output."""
-    import glob
-    import os
-    import shutil
-
     from ..operators.multimodal import extract_features_safe
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        prefix = f"epoch{int(epoch_id)}-"
         staged = {}
         for name, df_fn in (
             ("features", lambda: extract_features_safe(batch_df)),
@@ -335,26 +326,12 @@ def stream_decode_media(
             ),
         ):
             tmp = os.path.join(out_path, f"{name}-epoch-{int(epoch_id)}-tmp")
-            shutil.rmtree(tmp, ignore_errors=True)
             df_fn().write.mode("overwrite").parquet(tmp)
             staged[name] = tmp
         for name, tmp in staged.items():
-            dst = os.path.join(out_path, name)
-            os.makedirs(dst, exist_ok=True)
-            for leftover in glob.glob(os.path.join(dst, prefix + "*")):
-                os.remove(leftover)
-            for fname in os.listdir(tmp):
-                if fname.endswith(".parquet"):
-                    shutil.move(
-                        os.path.join(tmp, fname), os.path.join(dst, prefix + fname)
-                    )
-            shutil.rmtree(tmp, ignore_errors=True)
+            move_in(tmp, os.path.join(out_path, name), prefix=f"epoch{int(epoch_id)}-")
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_clean_crawl(
@@ -388,8 +365,8 @@ def stream_clean_crawl(
       signal, one k-row scan, never a corpus recount.
 
     Delivery is EXACTLY-ONCE by directory-per-epoch idempotence: a
-    replayed epoch recomputes from the SAME inputs — its own epoch dir
-    is excluded from the fingerprint read, so a replay never dedups a
+    replayed epoch recomputes from the SAME inputs — the fingerprint
+    read takes strictly-prior epochs only, so a replay never dedups a
     page against its previous attempt — then deletes that previous
     attempt's dirs and renames fresh ones in (delete-before-rename, the
     same idempotent-writer contract as :func:`stream_to_store` /
@@ -402,17 +379,11 @@ def stream_clean_crawl(
     fingerprint side stays O(corpus)·16 bytes and the membership probe
     is one hash equi-join — O(batch) work against an ever-growing
     corpus, the :func:`operators.dedup.dedup_incremental` discipline."""
-    import glob
-    import os
-    import shutil
-
     from ..operators import dedup as dedup_ops, text as text_ops, web as web_ops
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        ep = EpochDirs(out_path, epoch_id)
 
         # one pass over page text: strip + ppm + quality + fingerprint
         stripped = web_ops.strip_html(batch_df, html_col, id_col).withColumn(
@@ -441,19 +412,10 @@ def stream_clean_crawl(
                 ).alias("content_hash"),
             )
         )
-        verdicts_tmp = os.path.join(tmp_root, "verdicts")
-        verdicts.write.mode("overwrite").parquet(verdicts_tmp)
-        v = spark.read.parquet(verdicts_tmp)
+        v = ep.staged("verdicts", verdicts)
 
-        # corpus membership: every PRIOR epoch's fingerprints — the
-        # current epoch's dir (a previous attempt of this replay) is
-        # excluded so recomputation is attempt-independent
-        fp_root = os.path.join(out_path, "fingerprints")
-        prior = [
-            d
-            for d in glob.glob(os.path.join(fp_root, "epoch=*"))
-            if os.path.basename(d) != f"epoch={eid}"
-        ]
+        # corpus membership: every PRIOR epoch's fingerprints
+        prior = ep.prior("fingerprints")
         if prior:
             hist = spark.read.parquet(*prior).select("content_hash")
         else:
@@ -475,50 +437,24 @@ def stream_clean_crawl(
         survivors = qs.join(fresh, id_col).select(
             id_col, "n_tokens", "quality", "visible_ppm", "content_hash"
         )
-        corpus_tmp = os.path.join(tmp_root, "corpus")
-        survivors.write.mode("overwrite").parquet(corpus_tmp)
-        surv = spark.read.parquet(corpus_tmp)
-
-        fp_tmp = os.path.join(tmp_root, "fingerprints")
-        surv.select("content_hash").write.mode("overwrite").parquet(fp_tmp)
+        surv = ep.staged("corpus", survivors)
+        ep.stage("fingerprints", surv.select("content_hash"))
 
         counts = v.agg(
             F.count("*").alias("n_pages"),
             F.count_if(F.col("ppm_ok")).alias("n_after_ppm"),
             F.count_if(F.col("q_ok")).alias("n_after_quality"),
         ).collect()[0]
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        spark.createDataFrame(
-            [
-                (
-                    eid,
-                    counts.n_pages,
-                    counts.n_after_ppm,
-                    counts.n_after_quality,
-                    surv.count(),
-                )
-            ],
+        row = (ep.eid, counts.n_pages, counts.n_after_ppm, counts.n_after_quality)
+        metrics = spark.createDataFrame(
+            [row + (surv.count(),)],
             "epoch_id int, n_pages long, n_after_ppm long, "
             "n_after_quality long, n_survivors long",
-        ).coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+        )
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("corpus", "fingerprints", "metrics")
 
-        # publish: delete any previous attempt's epoch dirs, rename in
-        for name, tmp in (
-            ("corpus", corpus_tmp),
-            ("fingerprints", fp_tmp),
-            ("metrics", metrics_tmp),
-        ):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def last_committed_epoch(checkpoint_dir: str) -> int | None:
@@ -578,25 +514,14 @@ def stream_psi_drift(
     read takes STRICTLY-PRIOR epochs only (not merely "not my own
     attempt": later epochs' dirs exist during a replay, and counting
     them would change a replayed epoch's running PSI) — then deletes
-    the previous attempt's dirs and renames fresh ones in (the
-    :func:`stream_clean_crawl` contract; that one can use the weaker
-    exclusion because its fingerprint tables hold SURVIVORS only, which
-    are disjoint from prior epochs' hashes by construction)."""
+    the previous attempt's dirs and renames fresh ones in
+    (:class:`commit.EpochDirs`, the :func:`stream_clean_crawl` contract)."""
     from ..operators.profile import psi_bin_counts
 
-    return (
-        stream.writeStream.foreachBatch(
-            _psi_epoch_writer(
-                ref_counts,
-                lambda b: psi_bin_counts(b, col, bounds),
-                out_path,
-                n_bins,
-                alarm,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    write_batch = _psi_epoch_writer(
+        ref_counts, lambda b: psi_bin_counts(b, col, bounds), out_path, n_bins, alarm
     )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_psi_drift_categorical(
@@ -634,19 +559,14 @@ def stream_psi_drift_categorical(
     batch and stream."""
     from ..operators.profile import _categorical_bin_counts
 
-    return (
-        stream.writeStream.foreachBatch(
-            _psi_epoch_writer(
-                ref_counts,
-                lambda b: _categorical_bin_counts(b, col, categories),
-                out_path,
-                top_k + 1,
-                alarm,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    write_batch = _psi_epoch_writer(
+        ref_counts,
+        lambda b: _categorical_bin_counts(b, col, categories),
+        out_path,
+        top_k + 1,
+        alarm,
     )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_decayed_topk(
@@ -683,20 +603,12 @@ def stream_decayed_topk(
     delete-then-rename epoch dirs, so a crash replay converges to
     bit-identical state and leaderboards.
     """
-    import glob
-    import os
-    import shutil
-
     keys = keys or ["user_id"]
     if half_life_ms <= 0:
         raise ValueError(f"half_life_ms must be positive, got {half_life_ms}")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         anchor = batch_df.agg(F.max(ts_ms)).collect()[0][0]
         if anchor is None:
             return  # empty batch: no state, leaderboard unchanged
@@ -709,20 +621,7 @@ def stream_decayed_topk(
             .agg(F.sum(w).alias("mass"), F.count("*").alias("n_events"))
             .withColumn("anchor_ms", F.lit(int(anchor)))
         )
-        state_tmp = os.path.join(tmp_root, "state")
-        state.write.mode("overwrite").parquet(state_tmp)
-        fresh = spark.read.parquet(state_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "state", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        allst = fresh
-        if prior:
-            allst = fresh.unionByName(
-                spark.read.parquet(*prior).select(fresh.columns)
-            )
+        allst = ep.with_prior("state", ep.staged("state", state))
         amax = allst.agg(F.max("anchor_ms")).collect()[0][0]
         rescale = F.pow(
             F.lit(0.5),
@@ -739,21 +638,10 @@ def stream_decayed_topk(
             )
             .limit(k)
         )
-        topk_tmp = os.path.join(tmp_root, "topk")
-        topk.coalesce(1).write.mode("overwrite").parquet(topk_tmp)
+        ep.stage("topk", topk.coalesce(1))
+        ep.publish("state", "topk")
 
-        for name, tmp in (("state", state_tmp), ("topk", topk_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def _psi_epoch_writer(
@@ -766,38 +654,14 @@ def _psi_epoch_writer(
     prior running reads, exactly-once epoch dirs, metrics row, alarm)
     is monitor-independent.  See :func:`stream_psi_drift` for the full
     delivery contract."""
-    import glob
-    import os
-    import shutil
-
     from ..operators.profile import psi_from_counts
 
     ref_c = ref_counts.select("bin", "cnt")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        cnts = bin_fn(batch_df)
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        # STRICTLY-PRIOR epochs only (not just "not my own attempt"):
-        # a replayed epoch must compute the same running PSI as its
-        # first run, and later epochs' dirs exist during a replay
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = fresh.unionByName(
-                spark.read.parquet(*prior).select("bin", "cnt")
-            )
+        ep = EpochDirs(out_path, epoch_id)
+        fresh = ep.staged("counts", bin_fn(batch_df))
+        running = ep.with_prior("counts", fresh)
         psi_batch = psi_from_counts(ref_c, fresh, n_bins=n_bins)
         psi_run = psi_from_counts(ref_c, running, n_bins=n_bins)
         b_row = psi_batch.select("psi").limit(1).collect()
@@ -805,19 +669,13 @@ def _psi_epoch_writer(
         pb = float(b_row[0].psi) if b_row else 0.0
         pr = float(r_row[0].psi) if r_row else 0.0
         n_rows = fresh.agg(F.sum("cnt")).collect()[0][0] or 0
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        spark.createDataFrame(
-            [(eid, int(n_rows), pb, pr, pr >= alarm)],
+        metrics = batch_df.sparkSession.createDataFrame(
+            [(ep.eid, int(n_rows), pb, pr, pr >= alarm)],
             "epoch_id int, n_rows long, psi_batch double, "
             "psi_running double, alarm boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
-
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        )
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("counts", "metrics")
 
     return write_batch
 
@@ -849,18 +707,10 @@ def stream_burn_rate(
     :func:`stream_psi_drift` contract: strictly-prior running reads
     (later epochs' dirs exist during a replay), delete-then-rename
     epoch dirs, so a replayed epoch is attempt-independent."""
-    import glob
-    import os
-    import shutil
-
     from ..operators.timeseries import burn_from_counts
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         err = F.expr(error_col)
         cnts = (
             batch_df.select(
@@ -872,21 +722,8 @@ def stream_burn_rate(
             .groupBy("bucket_ms")
             .agg(F.count("*").alias("n"), F.sum("e").cast("long").alias("n_err"))
         )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        merged = fresh
-        if prior:
-            merged = fresh.unionByName(
-                spark.read.parquet(*prior).select("bucket_ms", "n", "n_err")
-            )
-        merged = merged.groupBy("bucket_ms").agg(
+        fresh = ep.staged("counts", cnts)
+        merged = ep.with_prior("counts", fresh).groupBy("bucket_ms").agg(
             F.sum("n").alias("n"), F.sum("n_err").alias("n_err")
         )
         burn = burn_from_counts(
@@ -899,11 +736,10 @@ def stream_burn_rate(
         latest = burn.orderBy(F.col("bucket_ms").desc()).limit(1).collect()
         n_rows = fresh.agg(F.sum("n")).collect()[0][0] or 0
         row = latest[0] if latest else None
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        spark.createDataFrame(
+        metrics = batch_df.sparkSession.createDataFrame(
             [
                 (
-                    eid,
+                    ep.eid,
                     int(n_rows),
                     int(row.bucket_ms) if row else None,
                     float(row.burn_short) if row else None,
@@ -913,20 +749,11 @@ def stream_burn_rate(
             ],
             "epoch_id int, n_rows long, latest_bucket_ms long, "
             "burn_short double, burn_long double, alert boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+        )
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("counts", "metrics")
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def scd2_current(spark: SparkSession, out_path: str) -> DataFrame:
@@ -937,13 +764,9 @@ def scd2_current(spark: SparkSession, out_path: str) -> DataFrame:
     partitions its batch touched), so "the snapshot" is the union of
     per-partition latest epochs, not a single epoch dir."""
     import glob
-    import os
 
-    latest = []
-    for pdir in sorted(glob.glob(os.path.join(out_path, "current", "part=*"))):
-        dirs = glob.glob(os.path.join(pdir, "epoch=*"))
-        if dirs:
-            latest.append(max(dirs, key=lambda d: int(d.rsplit("=", 1)[1])))
+    parts = sorted(glob.glob(os.path.join(out_path, "current", "part=*")))
+    latest = [dirs[-1] for dirs in map(epoch_dirs, parts) if dirs]
     if not latest:
         # ADVICE r11: spark.read.parquet(*[]) raises a cryptic "path not
         # specified" — name the actual problem and location instead
@@ -1000,28 +823,13 @@ def stream_scd2(
     between partition renames is healed because the replay re-derives
     every touched partition from strictly-prior epochs only.
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.timeseries import scd2_build
 
     order = order or [ts_ms]
     pcol = F.pmod(F.xxhash64(F.col(key)), F.lit(n_parts))
 
-    def _latest_prior(part: int, eid: int) -> str | None:
-        dirs = glob.glob(
-            os.path.join(out_path, "current", f"part={part}", "epoch=*")
-        )
-        prior = [
-            d for d in dirs
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        return max(prior, key=lambda d: int(d.rsplit("=", 1)[1])) if prior else None
-
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
         # n_parts is baked into the on-disk current/part=K layout: a
         # restart with a different value would re-hash keys to new
         # partitions while stale partitions stayed each key's "latest
@@ -1043,8 +851,7 @@ def stream_scd2(
             os.makedirs(out_path, exist_ok=True)
             with open(marker, "w") as fh:
                 fh.write(str(n_parts))
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        ep = EpochDirs(out_path, epoch_id)
 
         ev_cols = [key, attr, ts_ms] + [
             c for c in order if c not in (key, attr, ts_ms)
@@ -1054,9 +861,9 @@ def stream_scd2(
         parts_touched = sorted(
             r[0] for r in batch.select(pcol.alias("_p")).distinct().collect()
         )
-        prior_dirs = [
-            d for d in (_latest_prior(p, eid) for p in parts_touched) if d
-        ]
+        # the NEWEST strictly-prior epoch of each touched partition
+        cur_parts = [f"current/part={p}" for p in parts_touched]
+        prior_dirs = [dirs[-1] for dirs in map(ep.prior, cur_parts) if dirs]
         if prior_dirs:
             cur = spark.read.parquet(*prior_dirs)
         else:
@@ -1138,35 +945,16 @@ def stream_scd2(
         untouched = cur.join(touched, key, "left_anti")
         new_cur = untouched.unionByName(new_cur_touched)
 
-        closed_tmp = os.path.join(tmp_root, "closed")
-        cur_tmp = os.path.join(tmp_root, "current")
-        closed_now.select(
-            key, attr, "valid_from_ms", "valid_to_ms", "version"
-        ).write.mode("overwrite").parquet(closed_tmp)
-        new_cur.withColumn("part", pcol).write.mode("overwrite").partitionBy(
-            "part"
-        ).parquet(cur_tmp)
+        ep.stage(
+            "closed", closed_now.select(key, attr, "valid_from_ms", "valid_to_ms", "version")
+        )
+        ep.stage("current", new_cur.withColumn("part", pcol), "part")
+        # per-partition publish: only touched partitions get a new epoch.
+        # Every touched key ends the batch with an open run, so each
+        # touched partition always has ≥1 row and Spark wrote its dir
+        ep.publish("closed", *cur_parts)
 
-        dst = os.path.join(out_path, "closed", f"epoch={eid}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.rename(closed_tmp, dst)
-        # per-partition rename: only touched partitions get a new epoch
-        for p in parts_touched:
-            # every touched key ends the batch with an open run, so each
-            # touched partition always has ≥1 row and Spark wrote its dir
-            src = os.path.join(cur_tmp, f"part={p}")
-            pdst = os.path.join(out_path, "current", f"part={p}", f"epoch={eid}")
-            os.makedirs(os.path.dirname(pdst), exist_ok=True)
-            shutil.rmtree(pdst, ignore_errors=True)
-            os.rename(src, pdst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_ks_drift(
@@ -1222,10 +1010,6 @@ def stream_ks_drift(
     (the hazard SCALE.md states; this dial is its remedy, exercised in
     test_streaming_ks_drift_quantize_bounds_state).
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.profile import ks_from_counts
 
     if quantize is not None:
@@ -1237,11 +1021,7 @@ def stream_ks_drift(
         )
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         v_expr = F.col(col)
         if quantize is not None:
             v_expr = F.round(v_expr / F.lit(float(quantize))) * F.lit(float(quantize))
@@ -1251,42 +1031,18 @@ def stream_ks_drift(
             .groupBy(key, "v")
             .agg(F.count("*").alias("cnt"))
         )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = (
-                fresh.unionByName(
-                    spark.read.parquet(*prior).select(key, "v", "cnt")
-                )
-                .groupBy(key, "v")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        metrics = ks_from_counts(ref_vc, running, key).withColumn(
-            "epoch_id", F.lit(eid)
+        running = (
+            ep.with_prior("counts", ep.staged("counts", cnts))
+            .groupBy(key, "v")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+        metrics = ks_from_counts(ref_vc, running, key).withColumn(
+            "epoch_id", F.lit(ep.eid)
+        )
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("counts", "metrics")
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_embedding_drift(
@@ -1327,16 +1083,8 @@ def stream_embedding_drift(
     Exactly-once by the :func:`stream_psi_drift` contract:
     strictly-prior running reads + delete-then-rename epoch dirs.
     """
-    import glob
-    import os
-    import shutil
-
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         moments = (
             batch_df.where(
                 F.col(group_col).isNotNull() & F.col(vec_col).isNotNull()
@@ -1350,22 +1098,11 @@ def stream_embedding_drift(
             .groupBy("g", "d")
             .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
         )
-        state_tmp = os.path.join(tmp_root, "state")
-        moments.write.mode("overwrite").parquet(state_tmp)
-        fresh = spark.read.parquet(state_tmp)
-
-        prior = [
-            p
-            for p in glob.glob(os.path.join(out_path, "state", "epoch=*"))
-            if int(os.path.basename(p).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = (
-                fresh.unionByName(spark.read.parquet(*prior).select("g", "d", "sx", "n"))
-                .groupBy("g", "d")
-                .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
-            )
+        running = (
+            ep.with_prior("state", ep.staged("state", moments))
+            .groupBy("g", "d")
+            .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
+        )
         cur = running.select(
             "g", "d", F.round(F.col("sx") / F.col("n"), 6).alias("mc"), "n"
         )
@@ -1387,22 +1124,11 @@ def stream_embedding_drift(
                 "centroid_cosine"
             ),
             F.when(nrm_r > 0, F.round(nrm_c / nrm_r, 6)).alias("norm_ratio"),
-        ).withColumn("epoch_id", F.lit(eid))
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+        ).withColumn("epoch_id", F.lit(ep.eid))
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("state", "metrics")
 
-        for name, tmp in (("state", state_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_conformal(
@@ -1446,18 +1172,10 @@ def stream_conformal(
     only if you snap UP at serve time (threshold + q/2 covers the
     cell); the exact default is correct for discrete scores.
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.sampling import conformal_from_counts
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         v_expr = F.col(score_col)
         if quantize is not None:
             v_expr = F.round(v_expr / F.lit(float(quantize))) * F.lit(
@@ -1469,42 +1187,18 @@ def stream_conformal(
             .groupBy("g", "v")
             .agg(F.count("*").alias("cnt"))
         )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = (
-                fresh.unionByName(
-                    spark.read.parquet(*prior).select("g", "v", "cnt")
-                )
-                .groupBy("g", "v")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
+        running = (
+            ep.with_prior("counts", ep.staged("counts", cnts))
+            .groupBy("g", "v")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
         metrics = conformal_from_counts(
             running, alpha=alpha, group_out_col=group_col
-        ).withColumn("epoch_id", F.lit(eid))
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+        ).withColumn("epoch_id", F.lit(ep.eid))
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("counts", "metrics")
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
 
 
 def stream_benford(
@@ -1539,18 +1233,10 @@ def stream_benford(
     reads take STRICTLY-PRIOR epochs only, delete-then-rename epoch
     dirs make a replayed epoch attempt-independent.
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.profile import benford_from_counts
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         cents = F.round(F.col(value_col) * 100).cast("long")
         d = F.substring(cents.cast("string"), 1, 1).cast("int")
         cnts = (
@@ -1558,39 +1244,15 @@ def stream_benford(
             .groupBy(F.col(group_col).alias("g"), d.alias("d"))
             .agg(F.count("*").alias("cnt"))
         )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            p
-            for p in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(p).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = (
-                fresh.unionByName(
-                    spark.read.parquet(*prior).select("g", "d", "cnt")
-                )
-                .groupBy("g", "d")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
+        running = (
+            ep.with_prior("counts", ep.staged("counts", cnts))
+            .groupBy("g", "d")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
         metrics = benford_from_counts(
             running, mad_crit=mad_crit, group_out_col=group_col
-        ).withColumn("epoch_id", F.lit(eid))
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+        ).withColumn("epoch_id", F.lit(ep.eid))
+        ep.stage("metrics", metrics.coalesce(1))
+        ep.publish("counts", "metrics")
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _each_batch(stream, write_batch, checkpoint_dir)
