@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from time_series_databse_engine_spark import TimeSeriesStore, get_spark
+from time_series_databse_engine_spark.api import query_points
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_POINTS = 1_000_000  # reference workload size (benchmark.py:11)
@@ -704,6 +705,20 @@ def main():
         times["query_cold_24h"] = round(cold_ts[0], 3)
         extra["query_cold_24h_p50"] = round(_pctl(cold_ts, 0.50), 4)
         extra["query_cold_24h_p99"] = round(_pctl(cold_ts, 0.99), 4)
+        # the same ranges through the serving path the reference measures
+        # (api.query_points: Arrow read, 10,000-point cap); the rows above
+        # stay the Spark DataFrame path
+        api_hot = [
+            timed(lambda: query_points(store, hot_lo, hot_lo + 3_600_000))[0]
+            for _ in range(HOT_RUNS)
+        ]
+        extra["api_hot_1h_p50"] = round(_pctl(api_hot, 0.50), 4)
+        extra["api_hot_1h_p99"] = round(_pctl(api_hot, 0.99), 4)
+        api_cold = [
+            timed(lambda: query_points(store, START_MS, START_MS + 86_400_000))[0]
+            for _ in range(COLD_RUNS)
+        ]
+        extra["api_cold_24h_p99"] = round(_pctl(api_cold, 0.99), 4)
 
         # --- concurrent hot queries: the multi-tenant dashboard shape.
         # Spark's scheduler interleaves independent actions from multiple

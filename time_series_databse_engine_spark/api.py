@@ -14,6 +14,13 @@ Endpoint parity:
     (api/main.py:85-102); ``metric`` echoes the queried series instead of
     the reference's hard-coded ``"cpu.load.avg"``.
 
+Read and write paths: ``query_points`` reads in-process through Arrow
+(:meth:`TimeSeriesStore.read_points` — the queried hour files, no Spark
+job, no cached file listing, so a read sees every earlier write); only a
+range whose limit is still unfilled after READ_FILE_BUDGET files falls
+back to a Spark query.  ``ingest_points`` writes through Spark
+(:meth:`TimeSeriesStore.ingest`); an empty batch writes nothing.
+
 FastAPI is optional in this container: the handler logic lives in plain
 functions (`ingest_points`, `query_points`) so it is fully testable
 in-process; ``create_app()`` wires them to routes only when fastapi is
@@ -33,6 +40,8 @@ BUFFER_CAPACITY = 10_000  # reference api/main.py:85
 
 def ingest_points(store: TimeSeriesStore, points: list[dict[str, Any]]) -> dict[str, Any]:
     """Batch ingest; each point is {metric, timestamp(ms), value}."""
+    if not points:
+        return {"status": "success", "points_ingested": 0}
     df = store.spark.createDataFrame(
         [(str(p["metric"]), int(p["timestamp"]), float(p["value"])) for p in points],
         "metric string, ts_ms long, value double",
@@ -51,13 +60,11 @@ def query_points(
     """Inclusive range query capped at ``limit`` points (reference cap:
     10,000 with silent truncation — here truncation is still silent but
     deterministic: first ``limit`` points in ts order)."""
-    df = store.query_range(
-        start_ts, end_ts, metrics=[metric] if metric else None, limit=limit
-    )
-    rows = df.select("metric", "ts_ms", "value").collect()
+    t = store.read_points(start_ts, end_ts, metrics=[metric] if metric else None, limit=limit)
+    ts, values = t.column("ts_ms").to_pylist(), t.column("value").to_pylist()
     return {
-        "metric": metric or (rows[0].metric if rows else "cpu.load.avg"),
-        "points": [{"timestamp": r.ts_ms, "value": r.value} for r in rows],
+        "metric": metric or (t.column("metric")[0].as_py() if t.num_rows else "cpu.load.avg"),
+        "points": [{"timestamp": a, "value": v} for a, v in zip(ts, values)],
     }
 
 

@@ -29,8 +29,10 @@ window regardless of total table size.  No driver-side loops anywhere.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -45,6 +47,13 @@ POINT_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType(), False),
     ]
 )
+
+#: :meth:`TimeSeriesStore.read_points`' result schema
+ARROW_SCHEMA = pa.schema([("metric", pa.string()), ("ts_ms", pa.int64()), ("value", pa.float64())])
+
+#: files the Arrow read walks before a range whose limit is still unfilled
+#: goes to Spark instead (see :meth:`TimeSeriesStore.read_points`)
+READ_FILE_BUDGET = 256
 
 
 class TimeSeriesStore:
@@ -88,10 +97,7 @@ class TimeSeriesStore:
         writer assumption, same as the reference's one-process engine; an
         external writer would need refreshByPath here."""
         self._points_cache = None
-        try:
-            self.spark.catalog.refreshByPath(self.path)
-        except Exception:
-            pass
+        self.spark.catalog.refreshByPath(self.path)
 
     def _project(self, df: DataFrame) -> DataFrame:
         """The store's point projection from any df with (metric, ts_ms,
@@ -533,10 +539,12 @@ class TimeSeriesStore:
             empty = self.spark.createDataFrame([], POINT_SCHEMA)
             df = empty.withColumn(self.bucket_col, F.lit(0).cast("long"))
         out = df.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-        # cache the lazy handle: re-creating the reader re-lists every
-        # partition directory per query (hundreds of dirs on an hour-
-        # partitioned store — measured ~0.4 s of the ~0.7 s hot-query p50);
-        # the cached plan keeps the file index and is invalidated on writes
+        # cache the lazy handle for DataFrame consumers (query_range,
+        # downsample, rewrites, the analytics tier): re-creating the reader
+        # re-lists every partition directory, a Spark listing job on an
+        # hour-partitioned store.  The cached plan keeps the file index and
+        # is invalidated on writes.  The API's reads skip Spark and this
+        # cache altogether (read_points).
         self._points_cache = out
         return out
 
@@ -571,6 +579,66 @@ class TimeSeriesStore:
             # which short-circuits instead of scanning on (SURVEY §4.2).
             df = df.limit(limit)
         return df
+
+    def read_points(
+        self,
+        start_ms: int,
+        end_ms: int,
+        metrics: list[str] | None = None,
+        limit: int | None = None,
+    ) -> pa.Table:
+        """The (metric, ts_ms, value) rows of :meth:`query_range`, read
+        in-process with Arrow — the reference's read shape (decode the few
+        shard files in range, engine/insight.cpp:26-49) without a Spark
+        job per call.
+
+        Reads the files Spark's file index would: the ``<bucket>=<b>`` dirs
+        in [start, end]'s buckets, ascending, minus hidden names (``_*``,
+        ``.*``, ``*._COPYING_``).  A bucket holds exactly the timestamps
+        [b·bucket_ms, (b+1)·bucket_ms), so the walk stops after the bucket
+        that fills ``limit``.  Once READ_FILE_BUDGET files are read with the
+        limit unfilled and buckets left, the range goes to Spark instead.
+        No cache: every call lists the directories again, so a read sees
+        every earlier write.  A missing store reads as empty; an unreadable
+        file raises."""
+        # imported here: pyarrow.dataset pulls in pandas, ~0.4 s that a
+        # process which never serves reads should not pay at import
+        import pyarrow.dataset as ds
+
+        if limit is not None and limit < 0:
+            raise ValueError(f"limit must be >= 0, got {limit}")
+        try:
+            names = os.listdir(self.path)
+        except FileNotFoundError:
+            return ARROW_SCHEMA.empty_table()
+        lo, hi = start_ms // self.bucket_ms, end_ms // self.bucket_ms
+        part = re.compile(re.escape(self.bucket_col) + r"=(-?[0-9]+)")
+        dirs = sorted(
+            (int(m[1]), name)
+            for name in names
+            if (m := part.fullmatch(name)) and lo <= int(m[1]) <= hi
+        )
+        cond = (ds.field("ts_ms") >= start_ms) & (ds.field("ts_ms") <= end_ms)
+        if metrics:
+            cond &= ds.field("metric").isin(metrics)
+        parts, rows, n_files = [], 0, 0
+        for _, name in dirs:
+            if limit is not None and rows >= limit:
+                break
+            if n_files >= READ_FILE_BUDGET:
+                spark_df = self.query_range(start_ms, end_ms, metrics, limit)
+                return spark_df.select(*ARROW_SCHEMA.names).toArrow().cast(ARROW_SCHEMA)
+            files = [e.path for e in os.scandir(os.path.join(self.path, name)) if _is_data(e)]
+            n_files += len(files)
+            t = ds.dataset(files, schema=ARROW_SCHEMA, format="parquet").to_table(filter=cond)
+            parts.append(t)
+            rows += t.num_rows
+        out = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
+        # Spark's orderBy: ascending, nulls first
+        out = out.sort_by(
+            [("ts_ms", "ascending"), ("metric", "ascending")], null_placement="at_start"
+        )
+        return out if limit is None else out.slice(0, limit)
 
     # --------------------------------------------------------------- rollups
     DAY_MS = 86_400_000
@@ -659,6 +727,14 @@ class TimeSeriesStore:
                 "sum_value",
             )
         )
+
+
+def _is_data(entry: os.DirEntry) -> bool:
+    """Spark's file-index rule for a partition dir's files: ``_*`` and
+    ``.*`` names (``_SUCCESS``, ``.crc``) and in-flight ``*._COPYING_``
+    copies are not data."""
+    name = entry.name
+    return entry.is_file() and not name.startswith(("_", ".")) and not name.endswith("._COPYING_")
 
 
 def _parquet_or_none(reader, path: str) -> DataFrame | None:
