@@ -211,32 +211,6 @@ def test_missing_store_reads_empty_and_negative_limit_raises(spark, tmp_path):
         query_points(store, 0, 10, limit=-1)
 
 
-def test_file_budget_fallback_gives_the_same_answer(spark, three_hours, monkeypatch):
-    """Past READ_FILE_BUDGET files with the limit unfilled and buckets
-    left, the range goes to Spark; under it, Arrow reads every file."""
-    store, H = three_hours, 3_600_000
-    spark_calls = []
-    real_query_range = TimeSeriesStore.query_range
-
-    def counting(self, *a, **k):
-        spark_calls.append(a)
-        return real_query_range(self, *a, **k)
-
-    monkeypatch.setattr(TimeSeriesStore, "query_range", counting)
-    answers = {}
-    for budget in (1, 10_000):
-        monkeypatch.setattr(tsdb, "READ_FILE_BUDGET", budget)
-        for limit in (None, 7, 3):
-            answers.setdefault(limit, []).append(_rows(store.read_points(0, 3 * H, limit=limit)))
-    # budget 1: the first hour's file, then Spark — unless hour 0 fills the limit
-    assert len(spark_calls) == 2
-    for limit, (small, large) in answers.items():
-        assert small == large
-    assert len(answers[None][0]) == 15
-    assert [t for _, t, _ in answers[7][0]] == [0, 1, 2, 3, 4, H, H + 1]
-    assert spark_calls[0] == (0, 3 * H, None, None)
-
-
 # ------------------------------------------------------------------ writes
 def test_empty_ingest_touches_neither_spark_nor_disk(spark, tmp_path, monkeypatch):
     store = TimeSeriesStore(spark, str(tmp_path / "s"))

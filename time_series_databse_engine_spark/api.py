@@ -16,10 +16,11 @@ Endpoint parity:
 
 Read and write paths: ``query_points`` reads in-process through Arrow
 (:meth:`TimeSeriesStore.read_points` — the queried hour files, no Spark
-job, no cached file listing, so a read sees every earlier write); only a
-range whose limit is still unfilled after READ_FILE_BUDGET files falls
-back to a Spark query.  ``ingest_points`` writes through Spark
-(:meth:`TimeSeriesStore.ingest`); an empty batch writes nothing.
+job, no cached file listing, so a read sees every earlier write).
+``ingest_points`` writes through Spark (:meth:`TimeSeriesStore.ingest`);
+an empty batch writes nothing.  The app serves both on a threadpool
+without a lock, so a query that runs while an ingest commits may return
+only part of that batch.
 
 FastAPI is optional in this container: the handler logic lives in plain
 functions (`ingest_points`, `query_points`) so it is fully testable

@@ -29,7 +29,6 @@ window regardless of total table size.  No driver-side loops anywhere.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
 import pyarrow as pa
@@ -50,10 +49,6 @@ POINT_SCHEMA = T.StructType(
 
 #: :meth:`TimeSeriesStore.read_points`' result schema
 ARROW_SCHEMA = pa.schema([("metric", pa.string()), ("ts_ms", pa.int64()), ("value", pa.float64())])
-
-#: files the Arrow read walks before a range whose limit is still unfilled
-#: goes to Spark instead (see :meth:`TimeSeriesStore.read_points`)
-READ_FILE_BUDGET = 256
 
 
 class TimeSeriesStore:
@@ -135,6 +130,18 @@ class TimeSeriesStore:
     def _staging(self, kind: str) -> str:
         """Sibling staging dir ``<store>.<kind>-tmp`` (swept by :meth:`vacuum`)."""
         return self.path.rstrip("/") + f".{kind}-tmp"
+
+    def _partitions(self) -> list[tuple[int, str]]:
+        """(bucket, dir name) of every ``<bucket_col>=<b>`` dir in the
+        table, unordered; none for a missing store."""
+        if not os.path.isdir(self.path):
+            return []
+        prefix = self.bucket_col + "="
+        return [
+            (int(entry.split("=", 1)[1]), entry)
+            for entry in os.listdir(self.path)
+            if entry.startswith(prefix)
+        ]
 
     def _swap(self, tmp: str, touched=()) -> None:
         commit.swap_partitions(tmp, self.path, self.bucket_col, touched)
@@ -436,16 +443,13 @@ class TimeSeriesStore:
         ratio creeping up says "compact"; bytes/row says how the encoding
         is doing."""
         n_parts = n_files = n_bytes = 0
-        if os.path.isdir(self.path):
-            for entry in os.listdir(self.path):
-                if not entry.startswith(self.bucket_col + "="):
-                    continue
-                n_parts += 1
-                pdir = os.path.join(self.path, entry)
-                for fname in os.listdir(pdir):
-                    if fname.endswith(".parquet"):
-                        n_files += 1
-                        n_bytes += os.path.getsize(os.path.join(pdir, fname))
+        for _, entry in self._partitions():
+            n_parts += 1
+            pdir = os.path.join(self.path, entry)
+            for fname in os.listdir(pdir):
+                if fname.endswith(".parquet"):
+                    n_files += 1
+                    n_bytes += os.path.getsize(os.path.join(pdir, fname))
         rows = self.points().count() if n_files else 0
         return {
             "partitions": n_parts,
@@ -489,15 +493,11 @@ class TimeSeriesStore:
         partitions) metadata work, zero data scanned, exactly how TTL must
         work at 100 TB (a filtering rewrite would read the whole table).
         Returns the number of partitions dropped."""
-        if not os.path.isdir(self.path):
-            return 0
         # bucket b covers [b·H, (b+1)·H): expired iff (b+1)·H <= before_ms
         cutoff_bucket = before_ms // self.bucket_ms - 1
         dropped = 0
-        for entry in os.listdir(self.path):
-            if not entry.startswith(self.bucket_col + "="):
-                continue
-            if int(entry.split("=", 1)[1]) <= cutoff_bucket:
+        for b, entry in self._partitions():
+            if b <= cutoff_bucket:
                 shutil.rmtree(os.path.join(self.path, entry))
                 dropped += 1
         if dropped:
@@ -596,40 +596,27 @@ class TimeSeriesStore:
         in [start, end]'s buckets, ascending, minus hidden names (``_*``,
         ``.*``, ``*._COPYING_``).  A bucket holds exactly the timestamps
         [b·bucket_ms, (b+1)·bucket_ms), so the walk stops after the bucket
-        that fills ``limit``.  Once READ_FILE_BUDGET files are read with the
-        limit unfilled and buckets left, the range goes to Spark instead.
-        No cache: every call lists the directories again, so a read sees
-        every earlier write.  A missing store reads as empty; an unreadable
-        file raises."""
+        that fills ``limit``.  No cache: every call lists the directories
+        again, so a read sees every earlier write.  A read is not isolated
+        from a write it overlaps: it may return part of a batch that is
+        still committing, or fail on an hour a rewrite is swapping.  A
+        missing store reads as empty; an unreadable file raises."""
         # imported here: pyarrow.dataset pulls in pandas, ~0.4 s that a
         # process which never serves reads should not pay at import
         import pyarrow.dataset as ds
 
         if limit is not None and limit < 0:
             raise ValueError(f"limit must be >= 0, got {limit}")
-        try:
-            names = os.listdir(self.path)
-        except FileNotFoundError:
-            return ARROW_SCHEMA.empty_table()
         lo, hi = start_ms // self.bucket_ms, end_ms // self.bucket_ms
-        part = re.compile(re.escape(self.bucket_col) + r"=(-?[0-9]+)")
-        dirs = sorted(
-            (int(m[1]), name)
-            for name in names
-            if (m := part.fullmatch(name)) and lo <= int(m[1]) <= hi
-        )
+        dirs = sorted((b, name) for b, name in self._partitions() if lo <= b <= hi)
         cond = (ds.field("ts_ms") >= start_ms) & (ds.field("ts_ms") <= end_ms)
         if metrics:
             cond &= ds.field("metric").isin(metrics)
-        parts, rows, n_files = [], 0, 0
+        parts, rows = [], 0
         for _, name in dirs:
             if limit is not None and rows >= limit:
                 break
-            if n_files >= READ_FILE_BUDGET:
-                spark_df = self.query_range(start_ms, end_ms, metrics, limit)
-                return spark_df.select(*ARROW_SCHEMA.names).toArrow().cast(ARROW_SCHEMA)
             files = [e.path for e in os.scandir(os.path.join(self.path, name)) if _is_data(e)]
-            n_files += len(files)
             t = ds.dataset(files, schema=ARROW_SCHEMA, format="parquet").to_table(filter=cond)
             parts.append(t)
             rows += t.num_rows
