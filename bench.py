@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from time_series_databse_engine_spark import TimeSeriesStore, get_spark
-from time_series_databse_engine_spark.api import query_points
+from time_series_databse_engine_spark.api import ingest_points, query_points
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_POINTS = 1_000_000  # reference workload size (benchmark.py:11)
@@ -226,6 +226,7 @@ HEADLINE = [
 # the suite under its time budget while still pinning the tail)
 HOT_RUNS = 40
 COLD_RUNS = 20
+INGEST_RUNS = 20
 
 
 def _pctl(xs: list[float], q: float) -> float:
@@ -719,6 +720,21 @@ def main():
             for _ in range(COLD_RUNS)
         ]
         extra["api_cold_24h_p99"] = round(_pctl(api_cold, 0.99), 4)
+        # the serving write: 1,000-point batches after the last point
+        # through api.ingest_points (Arrow append), into a copy of the
+        # store so every other row keeps reading the store it always read
+        api_store = TimeSeriesStore(spark, tmp + "/points_api")
+        shutil.copytree(store.path, api_store.path)
+        api_ingest = []
+        for k in range(INGEST_RUNS):
+            first = N_POINTS + k * 1_000
+            batch = [
+                {"metric": "cpu.load.avg", "timestamp": START_MS + i * 1000,
+                 "value": 50.0 + 20.0 * math.sin(i / 100.0)}
+                for i in range(first, first + 1_000)
+            ]
+            api_ingest.append(timed(lambda: ingest_points(api_store, batch))[0])
+        extra["api_ingest_1k_p50"] = round(_pctl(api_ingest, 0.50), 4)
 
         # --- concurrent hot queries: the multi-tenant dashboard shape.
         # Spark's scheduler interleaves independent actions from multiple

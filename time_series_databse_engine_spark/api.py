@@ -2,25 +2,29 @@
 backed by the Spark engine.
 
 Endpoint parity:
-  * ``POST /api/ingest`` accepts ``{metric, timestamp, value}`` and returns
-    ``{"status": "success", "points_ingested": N}`` (reference
-    api/main.py:67-73).  Divergences done on purpose: ``metric`` is kept
-    (the reference drops it, api/main.py:70) and a batch ``points`` list is
-    accepted alongside single points — per-point synchronous writes are the
-    reference's documented bottleneck (README.md:102).
+  * ``POST /api/ingest`` accepts one ``{metric, timestamp, value}`` point
+    and returns ``{"status": "success", "points_ingested": 1}`` (reference
+    api/main.py:67-73).  Divergence done on purpose: ``metric`` is kept
+    (the reference drops it, api/main.py:70).  The in-process
+    ``ingest_points`` takes a list of points and writes it as one batch —
+    per-point synchronous writes are the reference's documented
+    bottleneck (README.md:102); the route passes a one-point list.
   * ``GET /api/query?start_ts&end_ts[&metric][&limit]`` returns
     ``{"metric": ..., "points": [{"timestamp": ms, "value": v}, ...]}``
     with the same inclusive bounds and 10,000-point cap
     (api/main.py:85-102); ``metric`` echoes the queried series instead of
     the reference's hard-coded ``"cpu.load.avg"``.
 
-Read and write paths: ``query_points`` reads in-process through Arrow
-(:meth:`TimeSeriesStore.read_points` — the queried hour files, no Spark
-job, no cached file listing, so a read sees every earlier write).
-``ingest_points`` writes through Spark (:meth:`TimeSeriesStore.ingest`);
-an empty batch writes nothing.  The app serves both on a threadpool
-without a lock, so a query that runs while an ingest commits may return
-only part of that batch.
+Read and write paths — neither starts a Spark job: ``query_points``
+reads in-process through Arrow (:meth:`TimeSeriesStore.read_points` —
+the queried hour files, no cached file listing, so a read sees every
+earlier write).  ``ingest_points`` writes in-process through Arrow
+(:meth:`TimeSeriesStore.append_points` — one sorted Parquet file per
+touched bucket, staged and moved in); an empty batch writes nothing.
+DataFrames go through :meth:`TimeSeriesStore.ingest` and the other Spark
+write paths.  The app serves both calls on a threadpool without a lock,
+so a query that runs while an ingest commits may return only part of
+that batch.
 
 FastAPI is optional in this container: the handler logic lives in plain
 functions (`ingest_points`, `query_points`) so it is fully testable
@@ -40,14 +44,13 @@ BUFFER_CAPACITY = 10_000  # reference api/main.py:85
 
 
 def ingest_points(store: TimeSeriesStore, points: list[dict[str, Any]]) -> dict[str, Any]:
-    """Batch ingest; each point is {metric, timestamp(ms), value}."""
-    if not points:
-        return {"status": "success", "points_ingested": 0}
-    df = store.spark.createDataFrame(
-        [(str(p["metric"]), int(p["timestamp"]), float(p["value"])) for p in points],
-        "metric string, ts_ms long, value double",
-    )
-    store.ingest(df)
+    """Batch ingest; each point is {metric, timestamp(ms), value}.  Every
+    point converts before anything is written, so a bad one raises and
+    the store is left as it was."""
+    metrics = [str(p["metric"]) for p in points]
+    ts_ms = [int(p["timestamp"]) for p in points]
+    values = [float(p["value"]) for p in points]
+    store.append_points(metrics, ts_ms, values)
     return {"status": "success", "points_ingested": len(points)}
 
 

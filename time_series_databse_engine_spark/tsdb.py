@@ -23,15 +23,21 @@ Scale posture (100 TB): ingest shuffles once on ``(hour_bucket, metric)``
 hot-series split option) so each task writes whole bucket×metric groups in
 sorted runs; queries express bucket + ts predicates declaratively so
 partition pruning and row-group min/max pushdown bound I/O to the queried
-window regardless of total table size.  No driver-side loops anywhere.
+window regardless of total table size.  DataFrame data is never looped
+over in Python; the serving path's small batches, which are Python
+values already, are read and written in-process with Arrow
+(``read_points``, ``append_points``).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -88,9 +94,11 @@ class TimeSeriesStore:
     def _invalidate(self) -> None:
         """Drop the cached reader after any write: the cached DataFrame
         pins a file listing (InMemoryFileIndex), which would serve stale
-        partition/file sets after ingest/compact/upsert/expire.  Single-
-        writer assumption, same as the reference's one-process engine; an
-        external writer would need refreshByPath here."""
+        partition/file sets after ingest/compact/upsert/expire.
+        ``refreshByPath`` also drops any other cached plan over the store
+        path in this SparkSession.  :meth:`points` does not see a writer in
+        another process until this store writes again;
+        :meth:`read_points` lists the files on every call."""
         self._points_cache = None
         self.spark.catalog.refreshByPath(self.path)
 
@@ -100,11 +108,17 @@ class TimeSeriesStore:
         bucket partition column."""
         if "ts_ms" not in df.columns:
             df = df.withColumn("ts_ms", F.unix_millis(F.col("ts")))
+        ts = F.col("ts_ms").cast("long")
+        # floor(ts / bucket_ms) in exact long arithmetic, the readers' `//`:
+        # `div` truncates toward zero, so a negative remainder steps down
+        # one.  A double division rounds above 2^53 and would file a point
+        # in the next bucket, where no read looks for it.
+        quotient = F.expr(f"CAST(ts_ms AS BIGINT) div {self.bucket_ms}")
         return df.select(
             F.col("metric").cast("string"),
-            F.col("ts_ms").cast("long"),
+            ts.alias("ts_ms"),
             F.col("value").cast("double"),
-            (F.floor(F.col("ts_ms") / self.bucket_ms)).cast("long").alias(self.bucket_col),
+            (quotient - (ts % self.bucket_ms < 0).cast("long")).alias(self.bucket_col),
         )
 
     def _hashed(self, pts: DataFrame, n: int | None) -> DataFrame:
@@ -220,6 +234,46 @@ class TimeSeriesStore:
         self._write(pts, self.path, mode="append")
         self._invalidate()
         return obs.get if obs is not None else None
+
+    def append_points(self, metrics: list[str], ts_ms: list[int], values: list[float]) -> None:
+        """Append a batch of Python values — the API's write —
+        with no Spark job: the points are bucketed with :meth:`_project`'s
+        floor division, sorted by (bucket, metric, ts_ms) and written as
+        one zstd, v2-page Parquet file per touched bucket, the layout
+        :meth:`ingest` writes.  The files stage under a sibling
+        ``<store>.append-<uuid>-tmp`` dir (one per call, so concurrent
+        appends never share one; :meth:`vacuum` sweeps a crashed one) and
+        are published by :func:`commit.move_in`.  A batch that does not
+        convert to the point schema raises before anything is written."""
+        t = pa.table([metrics, ts_ms, values], schema=ARROW_SCHEMA)
+        if not t.num_rows:
+            return
+        buckets = np.floor_divide(t.column("ts_ms").to_numpy(), self.bucket_ms)
+        t = t.append_column(self.bucket_col, pa.array(buckets)).sort_by(
+            [(self.bucket_col, "ascending"), ("metric", "ascending"), ("ts_ms", "ascending")]
+        )
+        buckets, starts = np.unique(t.column(self.bucket_col).to_numpy(), return_index=True)
+        t = t.drop_columns(self.bucket_col)
+        uid = uuid.uuid4().hex
+        tmp = self._staging(f"append-{uid}")
+        for b, lo, hi in zip(buckets, starts, [*starts[1:], t.num_rows]):
+            part = os.path.join(tmp, f"{self.bucket_col}={b}")
+            os.makedirs(part)
+            pq.write_table(
+                t.slice(lo, hi - lo),
+                os.path.join(part, f"part-{uid}.zstd.parquet"),
+                compression="zstd",
+                data_page_version="2.0",
+                # Spark's v2 writer's encodings: dictionary metric,
+                # delta-packed sorted ts_ms (see _write), plain value
+                # (Spark's reader rejects BYTE_STREAM_SPLIT); no Arrow
+                # schema blob in the footer, which readers are given
+                use_dictionary=["metric"],
+                column_encoding={"ts_ms": "DELTA_BINARY_PACKED", "value": "PLAIN"},
+                store_schema=False,
+            )
+        commit.move_in(tmp, self.path, self.bucket_col)
+        self._invalidate()
 
     def ingest_epoch(
         self,
@@ -467,17 +521,19 @@ class TimeSeriesStore:
         dirs, and one whose live partition is missing holds that
         partition's only copy — it is moved back, the rest are removed
         (:func:`commit.recover_compact`).  Then removes the ``*-tmp``
-        sibling dirs a rewrite or epoch ingest that died mid-write leaves
-        behind: with the asides recovered, data in them was never the
-        only copy of anything visible.  Zero data read; returns the number
-        of staging dirs removed."""
+        sibling dirs a rewrite, epoch ingest or API append that died
+        mid-write leaves behind: with the asides recovered, data in them
+        was never the only copy of anything visible.  A write still in
+        flight stages the same way, so run this when none is.  Zero data
+        read; returns the number of staging dirs removed."""
         self._recover()
         removed = 0
         base = self.path.rstrip("/")
         parent, name = os.path.dirname(base), os.path.basename(base)
         for entry in os.listdir(parent or "."):
-            # compact/upsert/purge staging plus the exactly-once sink's
-            # per-epoch staging (".epoch-<id>-tmp")
+            # compact/upsert/purge staging, the exactly-once sink's
+            # per-epoch staging (".epoch-<id>-tmp") and the API append's
+            # per-call staging (".append-<uuid>-tmp")
             if (
                 entry.startswith(name + ".")
                 and entry.endswith("-tmp")
@@ -543,8 +599,9 @@ class TimeSeriesStore:
         # downsample, rewrites, the analytics tier): re-creating the reader
         # re-lists every partition directory, a Spark listing job on an
         # hour-partitioned store.  The cached plan keeps the file index and
-        # is invalidated on writes.  The API's reads skip Spark and this
-        # cache altogether (read_points).
+        # is invalidated on every write, the API's Arrow appends
+        # (append_points) included.  The API's reads never use it: they
+        # list the files themselves (read_points).
         self._points_cache = out
         return out
 
