@@ -309,6 +309,7 @@ def main():
     queries = entry_mod.queries()
     times: dict[str, float] = {}
     extra: dict[str, float] = {}
+    warmup_errors: dict[str, str] = {}
 
     tmp = tempfile.mkdtemp(prefix="bench_store_")
     try:
@@ -326,8 +327,8 @@ def main():
                 queries[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
                     "overwrite"
                 ).save()
-            except Exception:
-                pass
+            except Exception as e:
+                warmup_errors[name] = repr(e)
 
         # --- ingest: 1M-point sinusoid batch (reference: 5,500 pts/s FFI
         # loop, warm steady state per its README).  Three full ingests into
@@ -870,7 +871,7 @@ def main():
 
     extra.update({f"ctx_{k}": v for k, v in machine_context(cpu_start).items()})
     extra.update({f"ctx_{k}": v for k, v in session_context(spark).items()})
-    emit(times, extra)
+    emit(times, extra, warmup_errors)
 
 
 DETAIL_PATH = os.environ.get(
@@ -880,8 +881,9 @@ DETAIL_PATH = os.environ.get(
 SUMMARY_LIMIT = 2000  # driver stdout capture window
 
 
-def emit(times: dict[str, float], extra: dict[str, float]) -> None:
-    """Full detail to DETAIL_PATH; a <=2,000-char summary as the FINAL
+def emit(times: dict[str, float], extra: dict[str, float], warmup_errors: dict[str, str]) -> None:
+    """Full detail to DETAIL_PATH, with ``warmup_errors`` ({query: repr of
+    the exception} of the warm-up runs); a <=2,000-char summary as the FINAL
     stdout line (the only part the driver reliably captures)."""
     total = round(sum(times.values()), 3)
     detail = {
@@ -893,7 +895,7 @@ def emit(times: dict[str, float], extra: dict[str, float]) -> None:
         "extra": extra,
     }
     with open(DETAIL_PATH, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
+        json.dump({**detail, "warmup_errors": warmup_errors}, fh, indent=1, sort_keys=True)
     slowest = dict(
         sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:10]
     )
@@ -915,16 +917,17 @@ def run_one(name: str) -> None:
     spark = get_spark(app_name=f"bench-iso-{name}")
     queries = entry_mod.queries()
     fn = queries[name]
+    warmup_errors = {}
     try:
         fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
             "overwrite"
         ).save()
-    except Exception:
-        pass
+    except Exception as e:
+        warmup_errors[name] = repr(e)
     t, _ = timed(
         lambda: fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
     )
-    print(json.dumps({"query": name, "isolated_sec": round(t, 3)}))
+    print(json.dumps({"query": name, "isolated_sec": round(t, 3), "warmup_errors": warmup_errors}))
 
 
 def run_isolated(names: list[str]) -> None:

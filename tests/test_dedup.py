@@ -1,5 +1,7 @@
 """Dedup family on crafted documents with known duplicate structure."""
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -806,7 +808,24 @@ def test_dedup_clusters_matches_union_find(spark, id_type):
         out = dedup_clusters(df, max_iters=max_iters).collect()
         return {r.doc_id: r.cluster_id for r in out}
 
-    assert run(25) == _min_label_rounds(pairs)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # a converged call does not warn
+        assert run(25) == _min_label_rounds(pairs)
     want = _min_label_rounds(pairs, rounds=4)
     assert want != _min_label_rounds(pairs)  # the chain needs > 4 rounds
-    assert run(4) == want
+    with pytest.warns(RuntimeWarning, match="dedup_clusters stopped at max_iters=4"):
+        assert run(4) == want
+
+
+def test_dedup_clusters_star_warns_at_its_cap(spark):
+    """Stopping at ``max_iters`` before the edge-set signature is stable
+    warns; a converged call stays silent."""
+    from time_series_databse_engine_spark.operators.dedup import dedup_clusters_star
+
+    df = spark.createDataFrame([(k, k + 1) for k in range(11)], "id1 long, id2 long")
+    with pytest.warns(RuntimeWarning, match="dedup_clusters_star stopped at max_iters=1"):
+        dedup_clusters_star(df, max_iters=1).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = {r.doc_id: r.cluster_id for r in dedup_clusters_star(df).collect()}
+    assert out == {k: 0 for k in range(12)}

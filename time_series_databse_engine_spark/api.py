@@ -17,8 +17,10 @@ Endpoint parity:
 
 Read and write paths — neither starts a Spark job: ``query_points``
 reads in-process through Arrow (:meth:`TimeSeriesStore.read_points` —
-the queried hour files, no cached file listing, so a read sees every
-earlier write).  ``ingest_points`` writes in-process through Arrow
+the row groups of the queried hour files that overlap the range, no
+cached file listing, so a read sees every earlier write) and builds the
+response lists from numpy arrays, not an Arrow scalar per value; a null
+stays ``None``.  ``ingest_points`` writes in-process through Arrow
 (:meth:`TimeSeriesStore.append_points` — one sorted Parquet file per
 touched bucket, staged and moved in); an empty batch writes nothing.
 DataFrames go through :meth:`TimeSeriesStore.ingest` and the other Spark
@@ -36,6 +38,8 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from time_series_databse_engine_spark.tsdb import TimeSeriesStore
@@ -65,11 +69,22 @@ def query_points(
     10,000 with silent truncation — here truncation is still silent but
     deterministic: first ``limit`` points in ts order)."""
     t = store.read_points(start_ts, end_ts, metrics=[metric] if metric else None, limit=limit)
-    ts, values = t.column("ts_ms").to_pylist(), t.column("value").to_pylist()
+    ts, values = _pylist(t.column("ts_ms")), _pylist(t.column("value"))
     return {
         "metric": metric or (t.column("metric")[0].as_py() if t.num_rows else "cpu.load.avg"),
         "points": [{"timestamp": a, "value": v} for a, v in zip(ts, values)],
     }
+
+
+def _pylist(col: pa.ChunkedArray) -> list:
+    """``col.to_pylist()``, value for value and type for type, built from
+    one numpy array instead of an Arrow scalar per value: nulls are
+    filled with 0 for the conversion (so an int column stays ``int`` and
+    no NaN appears), then set back to ``None``."""
+    out = col.fill_null(0).to_numpy().tolist()
+    for i in np.flatnonzero(col.is_null().to_numpy()):
+        out[i] = None
+    return out
 
 
 def create_app(spark: SparkSession, data_path: str):

@@ -10,6 +10,8 @@ the skew risk and are cut by document frequency before the join.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ._util import _parallelize  # noqa: F401  (canonical home: _util; re-exported
@@ -499,6 +501,17 @@ def hamming64(a: str, b: str) -> F.Column:
     return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
 
 
+def _warn_cap(op: str, max_iters: int) -> None:
+    """Say that an iterative operator stopped at its round cap before its
+    convergence check passed: its clusters may not yet be components."""
+    warnings.warn(
+        f"{op} stopped at max_iters={max_iters} before its convergence "
+        "check passed; clusters may be split — raise max_iters",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 def dedup_clusters(
     pairs: DataFrame,
     id1: str = "id1",
@@ -523,7 +536,9 @@ def dedup_clusters(
     Lineage is truncated per round with ``localCheckpoint`` so the plan
     doesn't grow superlinearly.  At extreme diameter, swap the loop body
     for large-star/small-star contraction (Kiveris et al. 2014) for
-    O(log n) rounds; the interface is unchanged.
+    O(log n) rounds; the interface is unchanged.  Stopping at
+    ``max_iters`` before convergence is detected raises a
+    ``RuntimeWarning`` (the labels are then that many rounds' minima).
     """
     # Checkpoint the pair list BEFORE mirroring it: the union references
     # `pairs` twice, and without the cut the (expensive) upstream pair
@@ -593,6 +608,8 @@ def dedup_clusters(
         labels = new_labels
         if converged:
             break
+    else:
+        _warn_cap("dedup_clusters", max_iters)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -616,7 +633,9 @@ def dedup_clusters_star(
     neighbourhood minimum.  Both strictly reduce a monotone potential;
     alternation converges to star graphs rooted at component minima —
     detected here by the (count, hash-sum) edge-set signature going
-    stable.  Lineage is cut per round with ``localCheckpoint``.
+    stable.  Lineage is cut per round with ``localCheckpoint``.  Stopping
+    at ``max_iters`` before the signature is stable raises a
+    ``RuntimeWarning``.
     """
     edges = (
         pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
@@ -664,6 +683,8 @@ def dedup_clusters_star(
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        _warn_cap("dedup_clusters_star", max_iters)
     # converged star graph: every edge is (non-root node → component min);
     # the root itself never appears on the pointing side, so add its
     # (root, root) row — matching dedup_clusters' keep/purge contract

@@ -10,8 +10,8 @@ Reference semantics being reproduced (citations into /root/reference):
   * inclusive range scan ``start <= ts <= end`` — engine/insight.cpp:42.
   * limit/truncation at a caller cap (HTTP layer: 10,000) — api/main.py:85.
   * delta + XOR compression — engine/shard.cpp:107-126 → Parquet v2 encodings
-    (DELTA_BINARY_PACKED for int64 ts, BYTE_STREAM_SPLIT/ZSTD for doubles);
-    no user-space codec.
+    (DELTA_BINARY_PACKED for int64 ts, PLAIN/ZSTD for doubles — Spark's
+    reader rejects BYTE_STREAM_SPLIT); no user-space codec.
 
 Deliberate divergences (SURVEY.md §1.4): results are ordered by ``ts_ms``
 (the reference returns shard-then-insertion order, unreproducible and
@@ -37,6 +37,7 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -651,32 +652,30 @@ class TimeSeriesStore:
 
         Reads the files Spark's file index would: the ``<bucket>=<b>`` dirs
         in [start, end]'s buckets, ascending, minus hidden names (``_*``,
-        ``.*``, ``*._COPYING_``).  A bucket holds exactly the timestamps
-        [b·bucket_ms, (b+1)·bucket_ms), so the walk stops after the bucket
-        that fills ``limit``.  No cache: every call lists the directories
-        again, so a read sees every earlier write.  A read is not isolated
-        from a write it overlaps: it may return part of a batch that is
-        still committing, or fail on an hour a rewrite is swapping.  A
-        missing store reads as empty; an unreadable file raises."""
-        # imported here: pyarrow.dataset pulls in pandas, ~0.4 s that a
-        # process which never serves reads should not pay at import
-        import pyarrow.dataset as ds
-
+        ``.*``, ``*._COPYING_``).  Each file is opened with
+        ``pq.ParquetFile``; only its row groups whose ``ts_ms`` min/max
+        overlaps [start, end] are decoded (:func:`_read_file`).  A bucket
+        holds exactly the timestamps [b·bucket_ms, (b+1)·bucket_ms), so the
+        walk stops after the bucket that fills ``limit``.  No cache: every
+        call lists the directories again, so a read sees every earlier
+        write.  A read is not isolated from a write it overlaps: it may
+        return part of a batch that is still committing, or fail on an
+        hour a rewrite is swapping.  A missing store reads as empty; an
+        unreadable file raises."""
         if limit is not None and limit < 0:
             raise ValueError(f"limit must be >= 0, got {limit}")
         lo, hi = start_ms // self.bucket_ms, end_ms // self.bucket_ms
         dirs = sorted((b, name) for b, name in self._partitions() if lo <= b <= hi)
-        cond = (ds.field("ts_ms") >= start_ms) & (ds.field("ts_ms") <= end_ms)
-        if metrics:
-            cond &= ds.field("metric").isin(metrics)
+        wanted = pa.array(metrics, pa.string()) if metrics else None
         parts, rows = [], 0
         for _, name in dirs:
             if limit is not None and rows >= limit:
                 break
-            files = [e.path for e in os.scandir(os.path.join(self.path, name)) if _is_data(e)]
-            t = ds.dataset(files, schema=ARROW_SCHEMA, format="parquet").to_table(filter=cond)
-            parts.append(t)
-            rows += t.num_rows
+            for e in os.scandir(os.path.join(self.path, name)):
+                if _is_data(e):
+                    t = _read_file(e.path, start_ms, end_ms, wanted)
+                    parts.append(t)
+                    rows += t.num_rows
         out = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
         # Spark's orderBy: ascending, nulls first
         out = out.sort_by(
@@ -779,6 +778,28 @@ def _is_data(entry: os.DirEntry) -> bool:
     copies are not data."""
     name = entry.name
     return entry.is_file() and not name.startswith(("_", ".")) and not name.endswith("._COPYING_")
+
+
+def _read_file(path: str, start_ms: int, end_ms: int, metrics: pa.Array | None) -> pa.Table:
+    """One data file's rows with ``start_ms <= ts_ms <= end_ms`` (and
+    ``metric`` in ``metrics``, when given), as :data:`ARROW_SCHEMA`.  Row
+    groups whose ``ts_ms`` min/max lies outside the range are not read; a
+    group without min/max statistics is read and filtered."""
+    with pq.ParquetFile(path) as f:
+        meta = f.metadata
+        ts_col = f.schema_arrow.get_field_index("ts_ms")
+        groups = []
+        for g in range(meta.num_row_groups):
+            st = meta.row_group(g).column(ts_col).statistics
+            if st is None or not st.has_min_max or (st.min <= end_ms and st.max >= start_ms):
+                groups.append(g)
+        t = f.read_row_groups(groups, columns=ARROW_SCHEMA.names)
+    t = t.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
+    ts = t.column("ts_ms")
+    keep = pc.and_(pc.greater_equal(ts, start_ms), pc.less_equal(ts, end_ms))
+    if metrics is not None:
+        keep = pc.and_(keep, pc.is_in(t.column("metric"), value_set=metrics))
+    return t.filter(keep)
 
 
 def _parquet_or_none(reader, path: str) -> DataFrame | None:
