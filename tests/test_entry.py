@@ -1,10 +1,19 @@
 """Driver-contract smoke: entry() runs, queries()/oracle_sql() are aligned."""
 
+import difflib
+import hashlib
+import json
+import os
 import sys
+import textwrap
+
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod
+
+_PIN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "registry_pin.json")
 
 
 def test_entry_runs(spark):
@@ -87,3 +96,67 @@ def test_docs_count_memo_distinguishes_scale_factors(spark):
     assert n_small == small.count()
     assert n_big == big.count()
     assert n_small != n_big
+
+
+def _snapshot() -> dict:
+    """The pinned facts: the key order of ``queries()`` and the first 16
+    hex digits of each ``oracle_sql()`` string's sha256."""
+    oracles = entry_mod.oracle_sql()
+    return {
+        "keys": list(entry_mod.queries()),
+        "oracle_sha256_16": {
+            k: hashlib.sha256(oracles[k].encode()).hexdigest()[:16]
+            for k in sorted(oracles)
+        },
+    }
+
+
+def _write_pin() -> None:
+    """Re-take the snapshot: ``python tests/test_entry.py``.  Only for a
+    change that means to reorder keys or edit an oracle."""
+    snap = _snapshot()
+
+    def block(items):
+        return textwrap.fill(", ".join(items), 76, initial_indent="  ",
+                             subsequent_indent="  ", break_long_words=False)
+
+    keys = block(json.dumps(k) for k in snap["keys"])
+    digests = block(
+        f"{json.dumps(k)}:{json.dumps(v)}" for k, v in snap["oracle_sha256_16"].items()
+    )
+    with open(_PIN, "w") as fh:
+        fh.write(f'{{\n"keys": [\n{keys}\n],\n"oracle_sha256_16": {{\n{digests}\n}}\n}}\n')
+
+
+def test_registry_matches_the_pinned_snapshot():
+    """``list(queries())`` is the driver order and ``oracle_sql()`` the
+    answers; both are pinned in registry_pin.json so a refactor of the
+    registry cannot reorder a key or touch an oracle unnoticed."""
+    with open(_PIN) as fh:
+        pin = json.load(fh)
+    snap = _snapshot()
+    if snap["keys"] != pin["keys"]:
+        diff = difflib.unified_diff(
+            pin["keys"], snap["keys"], "pinned", "queries()", lineterm=""
+        )
+        pytest.fail("queries() key order differs from the pin:\n" + "\n".join(diff))
+    want, got = pin["oracle_sha256_16"], snap["oracle_sha256_16"]
+    changed = sorted(k for k in want.keys() | got.keys() if want.get(k) != got.get(k))
+    assert not changed, f"oracle_sql() strings differ from the pin: {changed}"
+
+
+def test_bench_list_resolves_through_the_shared_lookup():
+    """bench.py times the registry rows flagged ``bench`` plus its
+    bench-only override; every name must resolve to a builder through the
+    one lookup the warm-up, the timed loop and ``--one`` share."""
+    import bench
+
+    names = bench.BENCH_QUERIES
+    assert len(names) == len(set(names)) == 150
+    assert "column_profile_fast" in names
+    assert all(callable(bench.lookup(n)) for n in names)
+    assert bench.lookup("hilbert_key") is bench.OVERRIDES["hilbert_key"]
+
+
+if __name__ == "__main__":
+    _write_pin()
