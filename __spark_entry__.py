@@ -2557,12 +2557,13 @@ def q_survival_km(spark, sf_dir):
 
 def q_k_core(spark, sf_dir):
     """2-core of the LSH near-dup graph (graph.k_core, Seidman 1983):
-    8 synchronous peeling rounds drop every node that cannot keep >= 2
-    within-subgraph neighbors — separating genuinely clustered template
-    families from the dangling one-off pairs connected components
-    over-credit.  All-integer state; the oracle unrolls the SAME 8
-    rounds as chained CTEs, so even a hypothetically non-converged
-    intermediate hash-matches.  Returns (doc_id, core_degree)."""
+    synchronous peeling rounds (at most 8, stopping at the fixpoint)
+    drop every node that cannot keep >= 2 within-subgraph neighbors —
+    separating genuinely clustered template families from the dangling
+    one-off pairs connected components over-credit.  All-integer
+    state; the oracle unrolls the SAME 8 rounds as chained CTEs, which
+    a fixpoint reached earlier leaves unchanged.  Returns (doc_id,
+    core_degree)."""
     from time_series_databse_engine_spark.operators import graph as graph_ops
 
     docs = _t(spark, sf_dir, "documents")

@@ -609,6 +609,13 @@ def test_k_core_matches_bruteforce_peeling(spark):
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(12)], "id1 long, id2 long")
     assert k_core(chain, k=2, rounds=12).count() == 0
+    # a 12-edge chain loses its two end edges a round: 3 rounds stop
+    # short and say so; the default 8 reach the empty fixpoint silently
+    with pytest.warns(RuntimeWarning, match="k_core stopped at rounds=3"):
+        assert k_core(chain, k=2, rounds=3).count() > 0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert k_core(chain, k=2).count() == 0
 
     tri_tail = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)], "id1 long, id2 long"

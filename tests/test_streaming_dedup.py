@@ -508,12 +508,18 @@ def test_streaming_psi_drift_exactly_once(spark, tmp_path):
 def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
     spark, tmp_path
 ):
-    """The trending leaderboard's live leg: two micro-batches of events
+    """The trending leaderboard's live leg: three micro-batches of events
     whose merged leaderboard must equal the BATCH decayed_topk over the
     union (scores within float tolerance of the rescale identity, rank
     order exact); a full crash replay converges to identical state and
-    leaderboards."""
+    leaderboards.  The newest events arrive FIRST and the last batch is
+    late, so the newest anchor belongs to neither the last epoch nor the
+    newest prior one: a sink that rescaled to either would be off by a
+    power of two in every score."""
+    import glob as g
+    import os
     import shutil
+    import time
 
     from pyspark.sql import functions as F
 
@@ -529,10 +535,17 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
     b2 = [(100 + i, "fresh", 600_000 + i * 1_000) for i in range(4)] + [
         (200, "stale", 601_000)
     ]
+    # batch 3 (late): events from between the other two batches
+    b3 = [(300 + i, "late", 300_000 + i * 1_000) for i in range(6)]
     src = str(tmp_path / "src")
     schema = "event_id long, item string, ts_ms long"
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src + "/b1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(src + "/b2")
+    # the file source orders files by modification time: epochs are
+    # b2 (anchor 603k), then b1 (29k), then b3 (305k)
+    now = time.time()
+    for age, (name, rows) in zip((30, 20, 10), (("b2", b2), ("b1", b1), ("b3", b3))):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/{name}")
+        for f in g.glob(f"{src}/{name}/*.parquet"):
+            os.utime(f, (now - age, now - age))
     out = str(tmp_path / "trend")
 
     def run():
@@ -553,17 +566,17 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
         q.stop()
 
     run()
-    # epoch 1's leaderboard is the final one; compare vs the batch op
-    # (file order into epochs isn't guaranteed, so anchor on max epoch)
-    import glob as g
-
-    last = max(
-        int(d.split("=")[-1]) for d in g.glob(out + "/topk/epoch=*")
-    )
-    live = spark.read.parquet(f"{out}/topk/epoch={last}").orderBy(
+    epochs = sorted(int(d.split("=")[-1]) for d in g.glob(out + "/topk/epoch=*"))
+    anchors = [
+        spark.read.parquet(f"{out}/state/epoch={e}").first()["anchor_ms"]
+        for e in epochs
+    ]
+    assert anchors == [603_000, 29_000, 305_000]
+    # the last epoch's leaderboard is the final one; compare vs the batch op
+    live = spark.read.parquet(f"{out}/topk/epoch={epochs[-1]}").orderBy(
         F.desc("decayed_score")
     ).collect()
-    full = spark.createDataFrame(b1 + b2, schema)
+    full = spark.createDataFrame(b1 + b2 + b3, schema)
     want = decayed_topk(full, ["item"], half_life_ms=hl, k=5).collect()
     assert [r["item"] for r in live] == [r["item"] for r in want]
     assert [r["n_events"] for r in live] == [r["n_events"] for r in want]

@@ -34,6 +34,9 @@ import glob
 import os
 import shutil
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
 ASIDE = ".compact-old-"
 
 
@@ -71,20 +74,39 @@ class EpochDirs:
 
     def staged(self, name: str, df):
         """:meth:`stage` and read the files back, so later steps of the
-        epoch reuse them instead of recomputing ``df``."""
-        return df.sparkSession.read.parquet(self.stage(name, df))
+        epoch reuse them instead of recomputing ``df``.  The read takes
+        ``df``'s schema: inferring it would cost a Spark job."""
+        return df.sparkSession.read.schema(df.schema).parquet(self.stage(name, df))
 
     def prior(self, name: str) -> list[str]:
         """Published dirs of ``<out>/<name>`` from strictly-prior epochs."""
         return epoch_dirs(os.path.join(self.out, name), before=self.eid)
 
     def with_prior(self, name: str, fresh):
-        """``fresh`` ∪ every strictly-prior epoch of table ``name``."""
+        """``fresh`` ∪ every strictly-prior epoch of table ``name``, read
+        with ``fresh``'s schema (no schema-inference job)."""
         prior = self.prior(name)
         if not prior:
             return fresh
-        old = fresh.sparkSession.read.parquet(*prior).select(fresh.columns)
+        old = fresh.sparkSession.read.schema(fresh.schema).parquet(*prior)
         return fresh.unionByName(old)
+
+    def prior_max(self, name: str, col: str):
+        """Max of column ``col`` over every strictly-prior epoch of table
+        ``name`` (None when there is none), from the Parquet footers'
+        min/max statistics: no Spark job and no data page read.  A row
+        group written without statistics is read instead."""
+        highs = []
+        for f in (f for d in self.prior(name) for f in glob.glob(os.path.join(d, "*.parquet"))):
+            pf = pq.ParquetFile(f)
+            j = pf.schema_arrow.get_field_index(col)
+            for g in range(pf.metadata.num_row_groups):
+                st = pf.metadata.row_group(g).column(j).statistics
+                if st is not None and st.has_min_max:
+                    highs.append(st.max)
+                else:
+                    highs.append(pc.max(pf.read_row_group(g, columns=[col])[col]).as_py())
+        return max((h for h in highs if h is not None), default=None)
 
     def publish(self, *names: str) -> None:
         """Move each staged ``name`` to ``<out>/<name>/epoch=N``, replacing

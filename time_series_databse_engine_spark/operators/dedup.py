@@ -501,12 +501,15 @@ def hamming64(a: str, b: str) -> F.Column:
     return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
 
 
-def _warn_cap(op: str, max_iters: int) -> None:
-    """Say that an iterative operator stopped at its round cap before its
-    convergence check passed: its clusters may not yet be components."""
+def _warn_cap(
+    op: str, cap: int, name: str = "max_iters", risk: str = "clusters may be split"
+) -> None:
+    """Say that an iterative operator stopped at its round cap ``name``
+    before its convergence check passed; ``risk`` says what its result
+    may still get wrong."""
     warnings.warn(
-        f"{op} stopped at max_iters={max_iters} before its convergence "
-        "check passed; clusters may be split — raise max_iters",
+        f"{op} stopped at {name}={cap} before its convergence "
+        f"check passed; {risk} — raise {name}",
         RuntimeWarning,
         stacklevel=3,
     )

@@ -9,12 +9,16 @@ connected to the rest of the cluster — the template everything else was
 derived from — which is the standard curation heuristic for boilerplate
 families.
 
-Scale shape: one edge-keyed equi-join + one grouped sum per iteration
-(never materializing anything wider than (id, rank)), iteration count is
-FIXED (no driver-side convergence collect), and each iteration ends in a
-``localCheckpoint`` lineage cut exactly like the label-propagation loop
-in ``dedup.dedup_clusters`` — at 100 TB the per-iteration shuffle volume
-is |edges| + |nodes| rows of two numeric columns.
+Scale shape: ``pagerank`` builds its edge table once (checkpointed,
+hashed on the source) and then runs one equi-join + one grouped sum per
+iteration, never materializing anything wider than (id, rank); its
+iteration count is FIXED, with no driver-side convergence test, and at
+100 TB each iteration shuffles |edges| rows of two numeric columns.
+``k_core`` instead stops at its fixpoint, for one count per round.
+Both end each checkpoint in a count they need anyway.  Under adaptive
+query execution ``localCheckpoint(eager=False)`` is not free: building
+the checkpoint's RDD already runs the plan's shuffle stages as Spark
+jobs, and only the final stage waits for an action.
 
 Determinism: ranks are rounded to 9 dp after every iteration (absorbing
 grouped-float-sum ordering noise, the kmeans-oracle discipline) and the
@@ -25,6 +29,8 @@ engines so constant folding yields bit-identical doubles.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .dedup import _warn_cap
 
 
 def pagerank(
@@ -43,51 +49,38 @@ def pagerank(
 
     Uniform init 1/N; per iteration
     ``rank' = (1-d)/N + d * sum_in(rank/outdeg)``, rank rounded to 9 dp.
-    N rides along as a broadcast one-row aggregate (no driver collect).
+    The mirrored edge table is built once: each edge carries its
+    source's ``outdeg``, the table is hashed on ``src`` and checkpointed
+    by the one job that counts N, so every iteration is one join on
+    ``src`` plus one grouped sum.  No node table rides along: the
+    mirrored edges give every node an in-edge, so the grouped sum
+    already lists every node.
     """
     edges = (
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
         .distinct()
-        # reused by every iteration AND the degree table; eager=False cuts
-        # the lineage without its own blocking job — the final action
-        # materializes it once (r12 opt: one job instead of two+)
-        .localCheckpoint(eager=False)
+    )
+    edges = (
+        edges.join(edges.groupBy("src").agg(F.count("*").alias("outdeg")), "src")
+        .repartition("src")
+        .localCheckpoint(eager=False)  # materialized by the count of N
     )
     nodes = edges.select(F.col("src").alias("id")).distinct()
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    n_row = F.broadcast(nodes.agg(F.count("*").alias("n")))
+    n = F.lit(nodes.count())
     d = F.lit(damping)
-    ranks = nodes.crossJoin(n_row).select(
-        "id", F.round(F.lit(1.0) / F.col("n"), 9).alias("rank")
-    )
+    ranks = nodes.select("id", F.round(F.lit(1.0) / n, 9).alias("rank"))
     for _ in range(iters):
-        contrib = (
+        summed = (
             edges.join(ranks.withColumnRenamed("id", "src"), "src")
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("s"))
         )
-        summed = contrib.groupBy("id").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(summed, "id", "left")
-            .crossJoin(n_row)
-            .select(
-                "id",
-                F.round(
-                    (F.lit(1.0) - d) / F.col("n")
-                    + d * F.coalesce(F.col("s"), F.lit(0.0)),
-                    9,
-                ).alias("rank"),
-            )
-            # no per-iteration checkpoint: each rank table is consumed by
-            # exactly ONE downstream join (a pure chain), so lineage depth
-            # is linear in the fixed iteration count and nothing is ever
-            # recomputed — the eager cut here cost one blocking job per
-            # iteration for zero reuse (r12 opt: 62 → 24 jobs, 3.4 → 2.8 s
-            # at sf0.1, bit-identical output)
+        # no per-iteration checkpoint: each rank table is consumed by
+        # exactly ONE downstream join (a pure chain), so lineage depth is
+        # linear in the fixed iteration count and nothing is recomputed
+        ranks = summed.select(
+            "id", F.round((F.lit(1.0) - d) / n + d * F.col("s"), 9).alias("rank")
         )
     return ranks.select("id", F.round("rank", 6).alias("pagerank"))
 
@@ -350,30 +343,33 @@ def k_core(
     and even triangle counts over-credit (a chain has edges but no
     core); higher k is the standard graph-sparsification pre-filter.
 
-    Synchronous peeling with a FIXED round count (``rounds``), the
-    pagerank/label_propagation discipline — no driver-side convergence
-    collect; a converged graph makes the remaining rounds no-ops, and
-    the SQL oracle unrolls the SAME number of rounds so even a
-    not-yet-converged intermediate state hash-matches (all-integer
-    states; no float noise anywhere).  Peeling removes at least one
-    node per non-converged round, so ``rounds`` >= the fixture
-    diameter bound covers the gate corpus; at 100 TB pick rounds ~
-    log-ish in practice (real graphs converge in a handful of sweeps;
-    the honest worst case is a path, which a 2-core peels end-inward).
+    Synchronous peeling that stops at its fixpoint: peeling only
+    removes edges, so a round that leaves the edge count unchanged
+    changed nothing, and every later round would be a no-op too.  The
+    answer therefore equals the SQL oracle's ``rounds`` unrolled rounds
+    (all-integer states; no float noise anywhere).  Peeling removes at
+    least one node per non-converged round, so ``rounds`` >= the
+    fixture diameter bound covers the gate corpus; real graphs converge
+    in a handful of sweeps, and the honest worst case is a path, which
+    a 2-core peels end-inward, two nodes a round.  Stopping at
+    ``rounds`` while the last round still removed edges warns
+    (``RuntimeWarning``): the result may keep nodes of degree < k.
 
     Scale shape per round: ONE grouped degree count over surviving
     directed edges + one broadcast-eligible semi-join back (the
-    surviving-node table only ever shrinks); lineage cut with
-    localCheckpoint per round like the other iterative graph ops.
-    Returns (id, core_degree) for k-core members — core_degree is the
-    node's degree within the final core.
+    surviving-node table only ever shrinks), then a ``localCheckpoint``
+    and one count, the convergence test.  The count is the job that
+    materializes the checkpoint; an eager checkpoint would add a job of
+    its own.  Returns (id, core_degree) for k-core members —
+    core_degree is the node's degree within the final core.
     """
     edges = (
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=False)  # lineage cut; materialized in-job
+        .localCheckpoint(eager=False)
     )
+    n_edges = edges.count()
     for _ in range(rounds):
         deg = edges.groupBy("src").agg(F.count("*").alias("_deg"))
         keep = deg.where(F.col("_deg") >= k).select("src")
@@ -381,8 +377,13 @@ def k_core(
             edges.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint(eager=False)  # lineage cut; materialized in-job
+            .localCheckpoint(eager=False)
         )
+        before, n_edges = n_edges, edges.count()
+        if n_edges == before:
+            break
+    else:
+        _warn_cap("k_core", rounds, "rounds", "the core may keep nodes of degree < k")
     return (
         edges.groupBy("src")
         .agg(F.count("*").alias("core_degree"))

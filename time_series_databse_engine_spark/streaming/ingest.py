@@ -622,7 +622,10 @@ def stream_decayed_topk(
             .withColumn("anchor_ms", F.lit(int(anchor)))
         )
         allst = ep.with_prior("state", ep.staged("state", state))
-        amax = allst.agg(F.max("anchor_ms")).collect()[0][0]
+        # every state row of an epoch carries that epoch's anchor, so the
+        # prior files' footer statistics give the newest anchor job-free
+        prior = ep.prior_max("state", "anchor_ms")
+        amax = int(anchor) if prior is None else max(int(anchor), prior)
         rescale = F.pow(
             F.lit(0.5),
             (F.lit(int(amax)) - F.col("anchor_ms")) / F.lit(float(half_life_ms)),

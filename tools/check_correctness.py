@@ -11,9 +11,10 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -10,9 +10,11 @@ any Python (Arrow) boundary.  Run after operator changes:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from time_series_databse_engine_spark import get_spark
@@ -66,7 +68,7 @@ def main() -> None:
             )
         except Exception as e:  # streaming/stateful entries may not plan batch-side
             rows.append((name, "-", "-", "-", "-", "-", "-", f"error: {type(e).__name__}"))
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(HEADER)
         for r in rows:
             f.write("| " + " | ".join(str(x) for x in r) + " |\n")
