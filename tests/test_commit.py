@@ -70,17 +70,17 @@ def test_epoch_replay_over_published_dir_and_leftover_staging(tmp_path):
     assert _read(f"{out}/counts/epoch=3/part-new.parquet") == "replay"
 
 
-def test_prior_max_reads_strictly_prior_footers(tmp_path):
+def test_prior_max_reads_every_strictly_prior_epoch(tmp_path):
     """``prior_max`` takes the max over every strictly-prior epoch, not
-    the newest one, and reads a row group that has no statistics."""
+    the newest one."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     out = str(tmp_path)
-    for epoch, anchor, stats in ((0, 29, True), (1, 603, False), (2, 305, True), (3, 900, True)):
+    for epoch, anchor in ((0, 29), (1, 603), (2, 305), (3, 900)):
         os.makedirs(f"{out}/state/epoch={epoch}")
         table = pa.table({"k": ["a", "b"], "anchor_ms": pa.array([anchor] * 2, pa.int64())})
-        pq.write_table(table, f"{out}/state/epoch={epoch}/part-0.parquet", write_statistics=stats)
+        pq.write_table(table, f"{out}/state/epoch={epoch}/part-0.parquet")
     assert [commit.EpochDirs(out, e).prior_max("state", "anchor_ms") for e in range(4)] == [
         None, 29, 603, 603,
     ]

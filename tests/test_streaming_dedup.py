@@ -508,13 +508,14 @@ def test_streaming_psi_drift_exactly_once(spark, tmp_path):
 def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
     spark, tmp_path
 ):
-    """The trending leaderboard's live leg: three micro-batches of events
-    whose merged leaderboard must equal the BATCH decayed_topk over the
-    union (scores within float tolerance of the rescale identity, rank
-    order exact); a full crash replay converges to identical state and
-    leaderboards.  The newest events arrive FIRST and the last batch is
-    late, so the newest anchor belongs to neither the last epoch nor the
-    newest prior one: a sink that rescaled to either would be off by a
+    """The trending leaderboard's live leg: four micro-batches of events;
+    after every epoch the leaderboard must equal the BATCH decayed_topk
+    over the union seen so far (scores within float tolerance of the
+    rescale identity, rank order exact); a full crash replay converges to
+    identical state and leaderboards.  The epochs' anchors run 29k, 603k,
+    4k, 305k: epoch 1's own anchor is the newest, and in epochs 2 and 3
+    the newest anchor belongs to neither the batch nor the newest prior
+    epoch, so a sink that rescaled to the wrong one would be off by a
     power of two in every score."""
     import glob as g
     import os
@@ -535,14 +536,17 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
     b2 = [(100 + i, "fresh", 600_000 + i * 1_000) for i in range(4)] + [
         (200, "stale", 601_000)
     ]
-    # batch 3 (late): events from between the other two batches
+    # batch 0 (late, older than batch 1): "ancient" events at t=2k..4k
+    b0 = [(400 + i, "ancient", 2_000 + i * 1_000) for i in range(3)]
+    # batch 3 (late): events from between batches 1 and 2
     b3 = [(300 + i, "late", 300_000 + i * 1_000) for i in range(6)]
+    batches = [("b1", b1), ("b2", b2), ("b0", b0), ("b3", b3)]
     src = str(tmp_path / "src")
     schema = "event_id long, item string, ts_ms long"
-    # the file source orders files by modification time: epochs are
-    # b2 (anchor 603k), then b1 (29k), then b3 (305k)
+    # the file source orders files by modification time: one epoch per
+    # batch, in the order of ``batches``
     now = time.time()
-    for age, (name, rows) in zip((30, 20, 10), (("b2", b2), ("b1", b1), ("b3", b3))):
+    for age, (name, rows) in zip((40, 30, 20, 10), batches):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/{name}")
         for f in g.glob(f"{src}/{name}/*.parquet"):
             os.utime(f, (now - age, now - age))
@@ -571,17 +575,20 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
         spark.read.parquet(f"{out}/state/epoch={e}").first()["anchor_ms"]
         for e in epochs
     ]
-    assert anchors == [603_000, 29_000, 305_000]
-    # the last epoch's leaderboard is the final one; compare vs the batch op
-    live = spark.read.parquet(f"{out}/topk/epoch={epochs[-1]}").orderBy(
-        F.desc("decayed_score")
-    ).collect()
-    full = spark.createDataFrame(b1 + b2 + b3, schema)
-    want = decayed_topk(full, ["item"], half_life_ms=hl, k=5).collect()
-    assert [r["item"] for r in live] == [r["item"] for r in want]
-    assert [r["n_events"] for r in live] == [r["n_events"] for r in want]
-    for lr, wr in zip(live, want):
-        assert abs(lr["decayed_score"] - wr["decayed_score"]) < 1e-6
+    assert anchors == [29_000, 603_000, 4_000, 305_000]
+    # each epoch's leaderboard vs the batch op over the batches seen so far
+    seen = []
+    for e, (_, rows) in zip(epochs, batches):
+        seen += rows
+        live = spark.read.parquet(f"{out}/topk/epoch={e}").orderBy(
+            F.desc("decayed_score")
+        ).collect()
+        full = spark.createDataFrame(seen, schema)
+        want = decayed_topk(full, ["item"], half_life_ms=hl, k=5).collect()
+        assert [r["item"] for r in live] == [r["item"] for r in want], e
+        assert [r["n_events"] for r in live] == [r["n_events"] for r in want], e
+        for lr, wr in zip(live, want):
+            assert abs(lr["decayed_score"] - wr["decayed_score"]) < 1e-6, e
     # recency won: 4 fresh events outrank 30 stale + 1 recent
     assert live[0]["item"] == "fresh"
 

@@ -93,20 +93,10 @@ class EpochDirs:
 
     def prior_max(self, name: str, col: str):
         """Max of column ``col`` over every strictly-prior epoch of table
-        ``name`` (None when there is none), from the Parquet footers'
-        min/max statistics: no Spark job and no data page read.  A row
-        group written without statistics is read instead."""
-        highs = []
-        for f in (f for d in self.prior(name) for f in glob.glob(os.path.join(d, "*.parquet"))):
-            pf = pq.ParquetFile(f)
-            j = pf.schema_arrow.get_field_index(col)
-            for g in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(g).column(j).statistics
-                if st is not None and st.has_min_max:
-                    highs.append(st.max)
-                else:
-                    highs.append(pc.max(pf.read_row_group(g, columns=[col])[col]).as_py())
-        return max((h for h in highs if h is not None), default=None)
+        ``name`` (None when there is none), read in-process with pyarrow:
+        no Spark job, one column of each prior file."""
+        files = [f for d in self.prior(name) for f in glob.glob(os.path.join(d, "*.parquet"))]
+        return pc.max(pq.read_table(files, columns=[col])[col]).as_py() if files else None
 
     def publish(self, *names: str) -> None:
         """Move each staged ``name`` to ``<out>/<name>/epoch=N``, replacing

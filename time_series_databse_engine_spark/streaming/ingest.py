@@ -623,7 +623,7 @@ def stream_decayed_topk(
         )
         allst = ep.with_prior("state", ep.staged("state", state))
         # every state row of an epoch carries that epoch's anchor, so the
-        # prior files' footer statistics give the newest anchor job-free
+        # prior files' anchor_ms column gives the newest anchor job-free
         prior = ep.prior_max("state", "anchor_ms")
         amax = int(anchor) if prior is None else max(int(anchor), prior)
         rescale = F.pow(
