@@ -11,6 +11,8 @@ both sides; event-time keys are integer epoch-ms (``epoch_ms(ts)`` ↔
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 from collections.abc import Callable
 from typing import NamedTuple
@@ -28,7 +30,7 @@ from time_series_databse_engine_spark.operators import (
     text as text_ops,
     timeseries as ts_ops,
 )
-from time_series_databse_engine_spark.operators._util import _shuffle_width
+from time_series_databse_engine_spark.operators._util import _shuffle_width, memo
 from time_series_databse_engine_spark.sources import load_table
 
 # fixed query window: 2024-01-02 .. 2024-01-03 UTC (events span Jan 1-30)
@@ -38,27 +40,23 @@ WEEK_END = 1_704_758_400_000
 MS_H = 3_600_000
 
 
-# Lazy-plan memo for the driver test tables (optimization guide §1/§6).
-# A bare ``spark.read.parquet`` costs ~80-140 ms per call (footer read +
-# relation resolution) and the ~270 ``_t`` sites re-load the same static
-# tables for every query, so a 153-query bench pays ~20 s of pure
-# re-setup.  The cached value is an UNMATERIALIZED DataFrame — a logical
-# plan over the parquet files; every action on it (and on everything
-# derived from it) still scans the input files, so no result or data is
-# reused across queries, only the plan.  Keyed by applicationId so a new
-# session (fresh JVM) never sees another session's plans.  The inputs are
-# immutable per run (TESTDATA.md); anything the engine writes goes to
-# separate index/temp dirs, never into ``sf_dir``.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        df = load_table(spark, sf_dir, name)
-        _TABLE_CACHE[key] = df
-    return df
+    """A driver table's lazy plan; ``sf_dir`` is never written to."""
+    return memo(spark, (f"{sf_dir}/{name}", "table"), lambda: load_table(spark, sf_dir, name))
+
+
+def _fixture_dir(spark, sf_dir: str, prefix: str, build: Callable[[str], None]) -> str:
+    """The temp dir of a fixture built once per session and ``sf_dir``:
+    ``build(path)`` fills a fresh ``mkdtemp(prefix=prefix)`` dir on first
+    use, and the dir is removed at process exit."""
+
+    def make() -> str:
+        path = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        build(path)
+        return path
+
+    return memo(spark, (sf_dir, prefix), make)
 
 
 # --------------------------------------------------------------------------
@@ -118,19 +116,14 @@ def q_tsdb_roundtrip(spark, sf_dir):
     )
 
 
-_STORES: dict[str, str] = {}
-
-
 def _get_store(spark, sf_dir) -> TimeSeriesStore:
-    if sf_dir not in _STORES:
-        path = tempfile.mkdtemp(prefix="tsdb_store_") + "/points"
-        store = TimeSeriesStore(spark, path)
+    def build(path: str) -> None:
         ev = _t(spark, sf_dir, "events").select(
             F.col("event_type").alias("metric"), "ts_ms", "value"
         )
-        store.ingest(ev)
-        _STORES[sf_dir] = path
-    return TimeSeriesStore(spark, _STORES[sf_dir])
+        TimeSeriesStore(spark, path + "/points").ingest(ev)
+
+    return TimeSeriesStore(spark, _fixture_dir(spark, sf_dir, "tsdb_store_", build) + "/points")
 
 
 # --------------------------------------------------------------------------
@@ -530,9 +523,6 @@ def q_jaccard_pairs(spark, sf_dir):
     return dedup_ops.jaccard_pairs(docs, threshold=0.8)
 
 
-_DOC_COUNTS: dict[int, int] = {}
-
-
 def _docs_count(docs) -> int:
     """Memoized ``docs.count()`` — six entries derive LSH banding from
     the same corpus size, and the footer-metadata count job, while
@@ -545,13 +535,9 @@ def _docs_count(docs) -> int:
     sf0.001 warm-up corpus then served 500 for the sf1 corpus, silently
     reverting LSH banding to base parameters at 100× the data (52,850
     candidate pairs instead of 2,561; the round-7 bench regression)."""
-    key = hash(
-        (tuple(sorted(docs.inputFiles())),
-         docs._jdf.queryExecution().logical().toString())
-    )
-    if key not in _DOC_COUNTS:
-        _DOC_COUNTS[key] = docs.count()
-    return _DOC_COUNTS[key]
+    files = ",".join(sorted(docs.inputFiles()))
+    plan = docs._jdf.queryExecution().logical().toString()
+    return memo(docs.sparkSession, (files, plan), docs.count)
 
 
 def _scaled_banded_pairs(docs):
@@ -1955,23 +1941,6 @@ def q_ivfpq_topk(spark, sf_dir):
     )
 
 
-_ANN_INDEXES: dict[str, str] = {}
-
-
-def _cleanup_ann_indexes() -> None:
-    # mkdtemp dirs hold an encoded-corpus copy each; sweep them at
-    # process exit so repeated gate/bench runs don't accumulate in /tmp
-    import shutil as _shutil
-
-    for p in _ANN_INDEXES.values():
-        _shutil.rmtree(p, ignore_errors=True)
-
-
-import atexit as _atexit
-
-_atexit.register(_cleanup_ann_indexes)
-
-
 def q_ann_index_probe(spark, sf_dir):
     """Persisted-ANN-index probe (similarity.ivf_index_write/ivf_index_probe):
     the build-once/probe-many production shape — IVFADC codes stored as a
@@ -1982,13 +1951,13 @@ def q_ann_index_probe(spark, sf_dir):
     order, tie rule), so the ivfpq oracle applies verbatim: the persisted
     layout must never change answers."""
     emb = _t(spark, sf_dir, "embeddings")
-    if sf_dir not in _ANN_INDEXES:
-        path = tempfile.mkdtemp(prefix="ann_index_")
-        sim_ops.ivf_index_write(emb, path, n_cells=16, m=4, ks=16)
-        _ANN_INDEXES[sf_dir] = path
+    path = _fixture_dir(
+        spark, sf_dir, "ann_index_",
+        lambda p: sim_ops.ivf_index_write(emb, p, n_cells=16, m=4, ks=16),
+    )
     return sim_ops.ivf_index_probe(
         spark,
-        _ANN_INDEXES[sf_dir],
+        path,
         emb.filter(F.col("vec_id") < 5),
         k=5,
         n_probe=4,
@@ -2006,17 +1975,16 @@ def q_ann_index_append(spark, sf_dir):
     match proves append-encoded rows are bit-identical to build-encoded
     ones."""
     emb = _t(spark, sf_dir, "embeddings")
-    key = sf_dir + "#append"
-    if key not in _ANN_INDEXES:
-        path = tempfile.mkdtemp(prefix="ann_index_app_")
+
+    def build(path):
         sim_ops.ivf_index_write(
             emb.filter(F.col("vec_id") < 250), path, n_cells=16, m=4, ks=16
         )
         sim_ops.ivf_index_append(spark, path, emb.filter(F.col("vec_id") >= 250), m=4)
-        _ANN_INDEXES[key] = path
+
     return sim_ops.ivf_index_probe(
         spark,
-        _ANN_INDEXES[key],
+        _fixture_dir(spark, sf_dir, "ann_index_app_", build),
         emb.filter(F.col("vec_id") < 5),
         k=5,
         n_probe=4,
@@ -2050,9 +2018,8 @@ def q_ann_index_compacted(spark, sf_dir):
     the same oracle as ann_index_append — proving compaction
     result-invisible end-to-end, not just in unit tests."""
     emb = _t(spark, sf_dir, "embeddings")
-    key = sf_dir + "#compacted"
-    if key not in _ANN_INDEXES:
-        path = tempfile.mkdtemp(prefix="ann_index_cpt_")
+
+    def build(path):
         sim_ops.ivf_index_write(
             emb.filter(F.col("vec_id") < 250), path, n_cells=16, m=4, ks=16
         )
@@ -2060,10 +2027,10 @@ def q_ann_index_compacted(spark, sf_dir):
             spark, path, emb.filter(F.col("vec_id") >= 250), m=4, epoch_id=0
         )
         sim_ops.ivf_index_compact(spark, path, committed_through=0)
-        _ANN_INDEXES[key] = path
+
     return sim_ops.ivf_index_probe(
         spark,
-        _ANN_INDEXES[key],
+        _fixture_dir(spark, sf_dir, "ann_index_cpt_", build),
         emb.filter(F.col("vec_id") < 5),
         k=5,
         n_probe=4,
@@ -4145,9 +4112,6 @@ def _url_parts_cte(n_docs: int) -> str:
             FROM norm)"""
 
 
-_BUCKETED_DONE: set[str] = set()
-
-
 def q_bucketed_join_storage(spark, sf_dir):
     """Join over co-bucketed STORAGE — pre-pay the shuffle once at write
     time, reuse it on every join: customer and orders saved as 8-bucket
@@ -4161,7 +4125,8 @@ def q_bucketed_join_storage(spark, sf_dir):
 
     tok = _re.sub(r"\W+", "_", sf_dir).strip("_")
     cust_t, ord_t = f"bj_customer_{tok}", f"bj_orders_{tok}"
-    if tok not in _BUCKETED_DONE:
+
+    def build() -> None:
         write_bucketed(
             _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal"),
             cust_t, ("c_custkey",), 8, ("c_custkey",),
@@ -4170,7 +4135,8 @@ def q_bucketed_join_storage(spark, sf_dir):
             _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
             ord_t, ("o_custkey",), 8, ("o_custkey",),
         )
-        _BUCKETED_DONE.add(tok)
+
+    memo(spark, (sf_dir, "bucketed_join_tables"), build)
     c = spark.table(cust_t)
     o = spark.table(ord_t)
     return (
@@ -4249,15 +4215,14 @@ def q_maxsim_index_probe(spark, sf_dir):
     ivf_index_probe discipline applied to sparse retrieval.  Result-
     identical to maxsim_topk by construction, so its oracle applies
     verbatim: the persisted layout must never change answers."""
-    key = sf_dir + "#maxsim"
-    if key not in _ANN_INDEXES:
-        path = tempfile.mkdtemp(prefix="maxsim_index_")
-        text_ops.maxsim_index_write(
-            _t(spark, sf_dir, "documents"), path, dim=64, chunk_size=30
-        )
-        _ANN_INDEXES[key] = path
+    path = _fixture_dir(
+        spark, sf_dir, "maxsim_index_",
+        lambda p: text_ops.maxsim_index_write(
+            _t(spark, sf_dir, "documents"), p, dim=64, chunk_size=30
+        ),
+    )
     qs = spark.createDataFrame(_MAXSIM_QUERIES, "q_id int, q_text string")
-    return text_ops.maxsim_index_probe(spark, _ANN_INDEXES[key], qs, k=20, dim=64)
+    return text_ops.maxsim_index_probe(spark, path, qs, k=20, dim=64)
 
 
 def q_maxsim_index_append(spark, sf_dir):
@@ -4268,9 +4233,7 @@ def q_maxsim_index_append(spark, sf_dir):
     weights carry no cross-corpus state, so the appended index is
     bit-identical to a fresh build of the union and the maxsim_topk
     oracle applies verbatim to the probe."""
-    key = sf_dir + "#maxsim_append"
-    if key not in _ANN_INDEXES:
-        path = tempfile.mkdtemp(prefix="maxsim_index_app_")
+    def build(path):
         docs = _t(spark, sf_dir, "documents")
         text_ops.maxsim_index_write(
             docs.filter(F.col("doc_id") < 250), path, dim=64, chunk_size=30
@@ -4278,9 +4241,10 @@ def q_maxsim_index_append(spark, sf_dir):
         text_ops.maxsim_index_append(
             spark, path, docs.filter(F.col("doc_id") >= 250)
         )
-        _ANN_INDEXES[key] = path
+
+    path = _fixture_dir(spark, sf_dir, "maxsim_index_app_", build)
     qs = spark.createDataFrame(_MAXSIM_QUERIES, "q_id int, q_text string")
-    return text_ops.maxsim_index_probe(spark, _ANN_INDEXES[key], qs, k=20)
+    return text_ops.maxsim_index_probe(spark, path, qs, k=20)
 
 
 def q_maxsim_index_compacted(spark, sf_dir):
@@ -4290,9 +4254,7 @@ def q_maxsim_index_compacted(spark, sf_dir):
     it), then probe.  Result must equal the maxsim_topk oracle — the
     same oracle as maxsim_index_append — proving compaction
     result-invisible end-to-end, not just in unit tests."""
-    key = sf_dir + "#maxsim_compacted"
-    if key not in _ANN_INDEXES:
-        path = tempfile.mkdtemp(prefix="maxsim_index_cpt_")
+    def build(path):
         docs = _t(spark, sf_dir, "documents")
         text_ops.maxsim_index_write(
             docs.filter(F.col("doc_id") < 250), path, dim=64, chunk_size=30
@@ -4301,9 +4263,10 @@ def q_maxsim_index_compacted(spark, sf_dir):
             spark, path, docs.filter(F.col("doc_id") >= 250), epoch_id=0
         )
         text_ops.maxsim_index_compact(spark, path, committed_through=0)
-        _ANN_INDEXES[key] = path
+
+    path = _fixture_dir(spark, sf_dir, "maxsim_index_cpt_", build)
     qs = spark.createDataFrame(_MAXSIM_QUERIES, "q_id int, q_text string")
-    return text_ops.maxsim_index_probe(spark, _ANN_INDEXES[key], qs, k=20)
+    return text_ops.maxsim_index_probe(spark, path, qs, k=20)
 
 
 def q_psi_drift_categorical(spark, sf_dir):

@@ -44,6 +44,7 @@ import __spark_entry__ as entry_mod
 from time_series_databse_engine_spark import TimeSeriesStore, get_spark
 from time_series_databse_engine_spark.api import ingest_points, query_points
 from time_series_databse_engine_spark.operators import similarity as _sim
+from time_series_databse_engine_spark.operators._util import memo
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_POINTS = 1_000_000  # reference workload size (benchmark.py:11)
@@ -669,29 +670,24 @@ def main():
         # here once — recorded as build + first probe — so the timed
         # ann_index_probe row is the serving path: a probe against the
         # existing index
-        def _index_file_count(key):
-            base = entry_mod._ANN_INDEXES.get(key)
-            if base is None:
-                return None
-            sub = os.path.join(base, "index")
-            root = sub if os.path.isdir(sub) else base
-            return sum(
-                1
-                for dp, _, fs in os.walk(root)
-                for f in fs
-                if f.endswith(".parquet")
-            )
+        def _index_file_count(prefix):
+            # the query has just built its index, so the memo holds its dir
+            def unbuilt():
+                raise LookupError(f"no {prefix} index for {SF_DIR}")
 
-        for nm, key in (
-            ("ann_index_probe", SF_DIR),
-            ("ann_index_append", SF_DIR + "#append"),
-            ("ann_index_compacted", SF_DIR + "#compacted"),
+            root = os.path.join(memo(spark, (SF_DIR, prefix), unbuilt), "index")
+            return sum(1 for _, _, fs in os.walk(root) for f in fs if f.endswith(".parquet"))
+
+        for nm, prefix in (
+            ("ann_index_probe", "ann_index_"),
+            ("ann_index_append", "ann_index_app_"),
+            ("ann_index_compacted", "ann_index_cpt_"),
             # bucket-partitioned MaxSim inverted index: same build-once
             # discipline — pay the build here so the timed row is the
             # pruned serving probe
-            ("maxsim_index_probe", SF_DIR + "#maxsim"),
-            ("maxsim_index_append", SF_DIR + "#maxsim_append"),
-            ("maxsim_index_compacted", SF_DIR + "#maxsim_compacted"),
+            ("maxsim_index_probe", "maxsim_index_"),
+            ("maxsim_index_append", "maxsim_index_app_"),
+            ("maxsim_index_compacted", "maxsim_index_cpt_"),
         ):
             if nm not in queries:
                 continue
@@ -700,9 +696,7 @@ def main():
                 .write.format("noop").mode("overwrite").save()
             )
             extra[f"{nm}_build_first_probe_sec"] = round(t, 3)
-            n = _index_file_count(key)
-            if n is not None:
-                extra[f"{nm}_files"] = n
+            extra[f"{nm}_files"] = _index_file_count(prefix)
         # the append index is the compacted index's pre-compaction state
         # (same build + same epoch batch), so files(append) vs
         # files(compacted) IS the before/after compaction file count the

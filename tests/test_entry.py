@@ -160,3 +160,71 @@ def test_bench_list_resolves_through_the_shared_lookup():
 
 if __name__ == "__main__":
     _write_pin()
+
+
+_TWO_SESSIONS = """
+import json, os, sys, tempfile
+sys.path.insert(0, sys.argv[1])
+import __spark_entry__ as entry
+from time_series_databse_engine_spark import get_spark
+
+names = ("bucketed_join_storage", "ann_index_probe", "maxsim_index_probe", "tsdb_roundtrip")
+for session in (0, 1):
+    spark = get_spark(app_name=f"session-{session}", master="local[2]", shuffle_partitions=2)
+    for name in names:
+        try:
+            out = entry.queries()[name](spark, sys.argv[2]).count()
+        except Exception as e:
+            out = f"{type(e).__name__}: {str(e)[:300]}"
+        print(json.dumps({"session": session, "query": name, "rows": out}), flush=True)
+    spark.stop()
+print(json.dumps({"tmp": tempfile.gettempdir(), "dirs": sorted(os.listdir(tempfile.gettempdir()))}))
+"""
+
+_FIXTURE_PREFIXES = ("tsdb_store_", "ann_index_", "maxsim_index_")
+
+
+@pytest.fixture(scope="module")
+def two_sessions(tmp_path_factory, sf_dir):
+    """One subprocess that builds four fixture-backed queries in a
+    session, stops it, and builds them again in a second session; its
+    temp dir and Spark warehouse are private to the run."""
+    import subprocess
+
+    work = tmp_path_factory.mktemp("two_sessions")
+    tmp = work / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _TWO_SESSIONS, root, sf_dir],
+        cwd=work, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = [json.loads(ln) for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    return proc, lines, tmp
+
+
+def test_second_session_in_one_process_rebuilds_its_fixtures(two_sessions):
+    """A fixture memoized in a stopped session (the bucketed catalog
+    tables, an index dir, the store) must be rebuilt for the next
+    session: both sessions answer every query with the same rows."""
+    proc, lines, _ = two_sessions
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rows = {(r["session"], r["query"]): r["rows"] for r in lines if "query" in r}
+    assert len(rows) == 8
+    for (session, name), n in rows.items():
+        assert isinstance(n, int) and n > 0, (session, name, n)
+        assert n == rows[(0, name)], (name, rows[(0, name)], n)
+
+
+def test_fixture_dirs_are_removed_at_process_exit(two_sessions):
+    """Every store and index dir the process made (two of each, one per
+    session) is gone once it exits."""
+    proc, lines, tmp = two_sessions
+    left = [d for d in os.listdir(tmp) if d.startswith(_FIXTURE_PREFIXES)]
+    assert not left, left
+    assert lines[-1]["tmp"] == str(tmp)
+    made = [d for d in lines[-1]["dirs"] if d.startswith(_FIXTURE_PREFIXES)]
+    assert sorted(p for d in made for p in _FIXTURE_PREFIXES if d.startswith(p)) == sorted(
+        _FIXTURE_PREFIXES * 2
+    ), made

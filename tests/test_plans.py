@@ -1249,3 +1249,128 @@ def test_pruning_report_guards(spark, tmp_path):
     r = got[0]
     assert r.col_min is None and r.col_max is None and r.n_rows == 3
     assert r.skippable is False  # no stats => the engine can never skip it
+
+
+# --------------------------------------------------------------------------
+# index rebuilds against the session memo (operators._util.memo): a probe
+# after a rebuild at the same path must see the new index, whatever was
+# memoized before or during the write, and only the rebuilt path's entries
+# may be dropped
+# --------------------------------------------------------------------------
+
+_REBUILD_QS = [(1, "fast hash join"), (2, "window merge sort")]
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _index_inputs(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    qs = spark.createDataFrame(_REBUILD_QS, "q_id int, q_text string")
+    return emb, emb.filter(F.col("vec_id") < 5), docs, qs
+
+
+def test_index_rebuild_with_new_geometry_serves_the_new_index(spark, sf_dir, tmp_path):
+    """Rebuild a MaxSim index with another ``dim`` and an IVF index with
+    another ``n_cells`` at the same path: the next probe equals a probe
+    of a build at a fresh path."""
+    from time_series_databse_engine_spark.operators import similarity as sim
+    from time_series_databse_engine_spark.operators.text import (
+        maxsim_index_probe,
+        maxsim_index_write,
+    )
+
+    emb, q, docs, qs = _index_inputs(spark, sf_dir)
+    ms, ivf = str(tmp_path / "ms"), str(tmp_path / "ivf")
+    maxsim_index_write(docs, ms, dim=64, chunk_size=30)
+    sim.ivf_index_write(emb, ivf, n_cells=16, m=4, ks=16)
+    ms_before = _sorted_rows(maxsim_index_probe(spark, ms, qs, k=20))
+    ivf_before = _sorted_rows(sim.ivf_index_probe(spark, ivf, q, k=5, n_probe=4, m=4))
+
+    maxsim_index_write(docs, ms, dim=32, chunk_size=30)
+    sim.ivf_index_write(emb, ivf, n_cells=8, m=4, ks=16)
+    maxsim_index_write(docs, str(tmp_path / "ms_fresh"), dim=32, chunk_size=30)
+    sim.ivf_index_write(emb, str(tmp_path / "ivf_fresh"), n_cells=8, m=4, ks=16)
+
+    ms_after = _sorted_rows(maxsim_index_probe(spark, ms, qs, k=20))
+    assert ms_after == _sorted_rows(maxsim_index_probe(spark, str(tmp_path / "ms_fresh"), qs, k=20))
+    assert ms_after != ms_before  # the new dim changes the answer
+    ivf_after = _sorted_rows(sim.ivf_index_probe(spark, ivf, q, k=5, n_probe=4, m=4))
+    assert ivf_after == _sorted_rows(
+        sim.ivf_index_probe(spark, str(tmp_path / "ivf_fresh"), q, k=5, n_probe=4, m=4)
+    )
+    assert ivf_after != ivf_before  # the new cell count changes the answer
+
+
+def test_index_rebuild_keeps_other_indexes_memo_entries(spark, sf_dir, tmp_path):
+    """Rebuilding index A drops A's memoized sidecars only: index B's
+    params tuple and sidecar plans are the same objects afterwards."""
+    from time_series_databse_engine_spark.operators import similarity as sim, text
+
+    emb, _, docs, _ = _index_inputs(spark, sf_dir)
+    a, b = str(tmp_path / "index_a"), str(tmp_path / "index_b")
+    for path in (a, b):
+        text.maxsim_index_write(docs, path + "/ms", dim=64, chunk_size=30)
+        sim.ivf_index_write(emb, path + "/ivf", n_cells=16, m=4, ks=16)
+    b_params = text._maxsim_params(spark, b + "/ms")
+    b_cells = sim._sidecar_table(spark, b + "/ivf/cells")
+    a_params = text._maxsim_params(spark, a + "/ms")
+
+    text.maxsim_index_write(docs, a + "/ms", dim=64, chunk_size=30)
+    sim.ivf_index_write(emb, a + "/ivf", n_cells=16, m=4, ks=16)
+
+    assert text._maxsim_params(spark, b + "/ms") is b_params
+    assert sim._sidecar_table(spark, b + "/ivf/cells") is b_cells
+    assert text._maxsim_params(spark, a + "/ms") is not a_params
+
+
+def test_probe_during_index_rebuild_leaves_no_stale_memo(spark, sf_dir, tmp_path, monkeypatch):
+    """A reader that probes an index while its writer is half done (the
+    writer has forgotten the old sidecars but not yet rewritten them)
+    memoizes plans over the old files; the writer's second ``forget``
+    must drop them, so the next probe sees the rebuilt index."""
+    from pyspark.sql import DataFrameWriter
+
+    from time_series_databse_engine_spark.operators import similarity as sim
+    from time_series_databse_engine_spark.operators.text import (
+        maxsim_index_probe,
+        maxsim_index_write,
+    )
+
+    emb, q, docs, qs = _index_inputs(spark, sf_dir)
+    ms, ivf = str(tmp_path / "ms"), str(tmp_path / "ivf")
+    maxsim_index_write(docs, ms, dim=64, chunk_size=30)
+    sim.ivf_index_write(emb, ivf, n_cells=16, m=4, ks=16)
+    # the fresh-path builds come first, so no later write's forget can
+    # mask a stale entry that the rebuild left behind
+    maxsim_index_write(docs, str(tmp_path / "ms_fresh"), dim=32, chunk_size=30)
+    sim.ivf_index_write(emb, str(tmp_path / "ivf_fresh"), n_cells=8, m=4, ks=16)
+
+    real_parquet = DataFrameWriter.parquet
+    mid_write_probes = []
+
+    def probing_parquet(self, path, *args, **kwargs):
+        probe = {ivf + "/cells": lambda: sim.ivf_index_probe(spark, ivf, q, k=5, n_probe=4, m=4),
+                 ms + "/params": lambda: maxsim_index_probe(spark, ms, qs, k=20)}.get(path)
+        if probe is not None:
+            mid_write_probes.append(path)
+            try:
+                probe()
+            except Exception:  # a torn index may fail to probe; what it memoized is the point
+                pass
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", probing_parquet)
+    maxsim_index_write(docs, ms, dim=32, chunk_size=30)
+    sim.ivf_index_write(emb, ivf, n_cells=8, m=4, ks=16)
+    monkeypatch.undo()
+    assert sorted(mid_write_probes) == sorted([ivf + "/cells", ms + "/params"])
+
+    assert _sorted_rows(maxsim_index_probe(spark, ms, qs, k=20)) == _sorted_rows(
+        maxsim_index_probe(spark, str(tmp_path / "ms_fresh"), qs, k=20)
+    )
+    assert _sorted_rows(sim.ivf_index_probe(spark, ivf, q, k=5, n_probe=4, m=4)) == _sorted_rows(
+        sim.ivf_index_probe(spark, str(tmp_path / "ivf_fresh"), q, k=5, n_probe=4, m=4)
+    )

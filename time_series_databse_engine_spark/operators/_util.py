@@ -7,9 +7,14 @@ from __future__ import annotations
 
 import math
 import os
+import threading
+from collections.abc import Callable
+from typing import TypeVar
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def _shuffle_width(spark: SparkSession) -> int:
@@ -88,32 +93,48 @@ def _parallelize(df: DataFrame) -> DataFrame:
     return df
 
 
-# ---------------------------------------------------------------------------
-# Index-sidecar plan memo (r13, VERDICT #8).  A persisted index's sidecars
-# (IVF cells/codebook, MaxSim params) are written ONCE at build time and
-# pinned for the index's lifetime — yet every probe/append re-ran
-# ``spark.read.parquet`` on them (~80 ms each: footer read + relation
-# resolution), pure re-setup on the serving path.  The memo holds the
-# UNMATERIALIZED DataFrame (a lazy plan; every action still reads the
-# files), keyed by (applicationId, path) so a fresh session never sees a
-# stale plan.  The ONLY writers (ivf_index_write / maxsim_index_write)
-# call ``invalidate_sidecars`` for their path, so a rebuilt index gets a
-# fresh plan.
-# ---------------------------------------------------------------------------
-_SIDECAR_MEMO: dict[tuple[str, str], object] = {}
+_MEMO: dict[tuple[str, tuple[str, str]], object] = {}
+_MEMO_LOCK = threading.Lock()
 
 
-def _sidecar_table(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _SIDECAR_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _SIDECAR_MEMO[key] = df
-    return df
+def memo(spark: SparkSession, key: tuple[str, str], build: Callable[[], T]) -> T:
+    """``build()``, computed once per session and ``key``, a
+    ``(path, what)`` pair — the one cache in the engine.
+
+    What it holds is set-up, never results: lazy DataFrame plans over
+    files nothing rewrites (the driver tables, an index's sidecars), a
+    sidecar's parsed params, a corpus count, the dir of a fixture built
+    once.  A bare ``spark.read.parquet`` costs ~80-140 ms (footer read +
+    relation resolution), and the ~270 ``_t`` call sites re-load the same
+    few tables, so without it a 153-query bench pays ~20 s of re-setup;
+    every action on a memoized plan still scans its files.
+
+    Entries are stored under ``(applicationId, key)``: a plan, a catalog
+    table or a temp view belongs to the session that made it, so the
+    first miss under a new applicationId drops every entry of the old
+    one (all entries share one id, so the check is one dict peek on a
+    miss and nothing on a hit).  A ``build`` that raises stores nothing.
+    The lock guards the dict, not ``build``, so builds may nest; two
+    threads that build one key at once both get the first stored value.
+
+    A writer that rewrites files under a memoized path calls
+    :func:`forget` with that path both before and after its write: the
+    first call drops plans over the old files, the second drops any plan
+    a concurrent reader memoized while the write was half done.
+    """
+    app = spark.sparkContext.applicationId
+    with _MEMO_LOCK:
+        if (app, key) in _MEMO:
+            return _MEMO[(app, key)]
+        if _MEMO and next(iter(_MEMO))[0] != app:
+            _MEMO.clear()
+    value = build()
+    with _MEMO_LOCK:
+        return _MEMO.setdefault((app, key), value)
 
 
-def invalidate_sidecars(path_prefix: str) -> None:
-    """Drop memoized sidecar plans under ``path_prefix`` (called by the
-    index writers before/after a rebuild)."""
-    for key in [k for k in _SIDECAR_MEMO if k[1].startswith(path_prefix)]:
-        del _SIDECAR_MEMO[key]
+def forget(prefix: str) -> None:
+    """Drop every memo entry whose path starts with ``prefix``."""
+    with _MEMO_LOCK:
+        for k in [k for k in _MEMO if k[1][0].startswith(prefix)]:
+            del _MEMO[k]

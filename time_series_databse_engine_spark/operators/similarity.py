@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from ._util import _parallelize, _shuffle_width
+from ._util import _parallelize, _shuffle_width, forget, memo
 
 
 def as_double(col) -> F.Column:
@@ -1867,6 +1867,12 @@ def sq8_topk(
 # persisted ANN index: build once, probe many (the repeated-query shape)
 # ---------------------------------------------------------------------------
 
+def _sidecar_table(spark, path: str) -> DataFrame:
+    """The memoized lazy plan over an index sidecar (``cells``,
+    ``codebook``); only :func:`ivf_index_write` rewrites them."""
+    return memo(spark, (path, "sidecar"), lambda: spark.read.parquet(path))
+
+
 def ivf_index_write(
     embeddings: DataFrame,
     path: str,
@@ -1897,9 +1903,7 @@ def ivf_index_write(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from ._util import invalidate_sidecars
-
-    invalidate_sidecars(path)  # a rebuild must not serve stale sidecar plans
+    forget(path)  # and again after the write (see _util.memo)
     cents = hash_sampled_cells(embeddings, n_cells, id_col, vec_col)
     cb = pq_codebook(embeddings, ks, id_col, vec_col)
     enc = _assign_and_encode(embeddings, cents, cb, m, dim, id_col, vec_col, ks=ks)
@@ -1922,12 +1926,15 @@ def ivf_index_write(
     def _write_codebook():
         cb.write.mode("overwrite").parquet(path + "/codebook")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(f) for f in (_write_index, _write_cells, _write_codebook)
-        ]
-        for fut in futures:
-            fut.result()
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futures = [
+                pool.submit(f) for f in (_write_index, _write_cells, _write_codebook)
+            ]
+            for fut in futures:
+                fut.result()
+    finally:
+        forget(path)
 
 
 def ivf_index_probe(
@@ -1961,11 +1968,7 @@ def ivf_index_probe(
     probe time from the ONE broadcast codebook row — the index itself
     stays 250x compressed at rest.
     """
-    from ._util import _sidecar_table
-
     sub = dim // m
-    # memoized lazy plans for the pinned sidecars (r13, VERDICT #8):
-    # ~80 ms of re-resolution per read removed from the serving path
     cents = _sidecar_table(spark, path + "/cells")
     cb = _sidecar_table(spark, path + "/codebook")
 
@@ -2076,8 +2079,6 @@ def ivf_index_append(
     crash point.  Cost vs the blind append: identical distributed work
     plus O(touched cells) driver-side renames.
     """
-    from ._util import _sidecar_table
-
     cents = _sidecar_table(spark, path + "/cells")
     cb = _sidecar_table(spark, path + "/codebook")
     enc = _assign_and_encode(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from . import index_maintenance as _im
+from ._util import forget, memo
 from .dedup import _parallelize
 
 TOKEN_RE = "[^\\s]+"          # whitespace tokens
@@ -1547,37 +1548,29 @@ def maxsim_topk(
     return _maxsim_score(w, qt, k, id_col)
 
 
-_MAXSIM_PARAMS_MEMO: dict[tuple[str, str], tuple[int, int, str]] = {}
-
-
 def _maxsim_params(spark, path: str) -> tuple[int, int, str]:
-    """Read the index's pinned vectorization params sidecar.  The params
-    are immutable for the index's lifetime (append/probe PIN them), so
-    the parsed tuple is memoized per (session, path) — ~100 ms of
-    re-read removed from every probe/append; maxsim_index_write drops
-    the entry when it rebuilds the index (r13, VERDICT #8)."""
-    memo_key = (spark.sparkContext.applicationId, path)
-    hit = _MAXSIM_PARAMS_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
+    """The index's pinned vectorization params sidecar as (dim,
+    chunk_size, id_col), memoized; only maxsim_index_write rewrites it."""
     sidecar = path.rstrip("/") + "/params"
-    try:
-        rows = spark.read.parquet(sidecar).collect()
-    except Exception as exc:  # AnalysisException: path missing / not parquet
-        raise ValueError(
-            f"no params sidecar at {sidecar} — this index predates the "
-            "<path>/index + <path>/params layout (or the sidecar was "
-            "deleted); rebuild it with maxsim_index_write"
-        ) from exc
-    if not rows:
-        raise ValueError(
-            f"params sidecar at {sidecar} is empty — the index is "
-            "corrupt; rebuild it with maxsim_index_write"
-        )
-    r = rows[0]
-    out = (int(r.dim), int(r.chunk_size), str(r.id_col))
-    _MAXSIM_PARAMS_MEMO[memo_key] = out
-    return out
+
+    def read() -> tuple[int, int, str]:
+        try:
+            rows = spark.read.parquet(sidecar).collect()
+        except Exception as exc:  # AnalysisException: path missing / not parquet
+            raise ValueError(
+                f"no params sidecar at {sidecar} — this index predates the "
+                "<path>/index + <path>/params layout (or the sidecar was "
+                "deleted); rebuild it with maxsim_index_write"
+            ) from exc
+        if not rows:
+            raise ValueError(
+                f"params sidecar at {sidecar} is empty — the index is "
+                "corrupt; rebuild it with maxsim_index_write"
+            )
+        r = rows[0]
+        return int(r.dim), int(r.chunk_size), str(r.id_col)
+
+    return memo(spark, (sidecar, "params"), read)
 
 
 def maxsim_index_write(
@@ -1606,19 +1599,22 @@ def maxsim_index_write(
     score on different chunk norms, i.e. corrupt the index while
     looking like a refresh (the ivf_index_append pinning argument,
     similarity.py)."""
-    _MAXSIM_PARAMS_MEMO.clear()  # a rebuild must not serve stale params
+    forget(path)  # and again after the write (see _util.memo)
     w = _maxsim_chunk_vectors(docs, dim, chunk_size, text_col, id_col)
-    (
-        w.repartition("bucket")
-        .sortWithinPartitions("bucket", id_col)
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path.rstrip("/") + "/index")
-    )
-    docs.sparkSession.createDataFrame(
-        [(int(dim), int(chunk_size), id_col)],
-        "dim int, chunk_size int, id_col string",
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/params")
+    try:
+        (
+            w.repartition("bucket")
+            .sortWithinPartitions("bucket", id_col)
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(path.rstrip("/") + "/index")
+        )
+        docs.sparkSession.createDataFrame(
+            [(int(dim), int(chunk_size), id_col)],
+            "dim int, chunk_size int, id_col string",
+        ).write.mode("overwrite").parquet(path.rstrip("/") + "/params")
+    finally:
+        forget(path)
 
 
 def maxsim_index_probe(

@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
+from bench import lookup
 from time_series_databse_engine_spark import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,13 +50,12 @@ def main() -> None:
     tag = sys.argv[1]
     names = [n for n in sys.argv[2].split(",") if n]
     spark = get_spark(app_name=f"profile-{tag}")
-    queries = entry_mod.queries()
     os.makedirs(PLANS_DIR, exist_ok=True)
 
     # warm-up: identical to bench.py (pays codegen + python worker spawn)
     for name in names:
         try:
-            queries[name](spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
+            lookup(name)(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
         except Exception as e:  # noqa: BLE001
             print(json.dumps({"query": name, "warmup_error": str(e)[:200]}))
 
@@ -65,7 +64,7 @@ def main() -> None:
         # one failing query must not abort the batch or lose collected
         # timings (advisor r12): record the error, write incrementally
         try:
-            fn = queries[name]
+            fn = lookup(name)
             ts = []
             for _ in range(REPS):
                 spark.sparkContext.setJobDescription(f"profile:{name}")
