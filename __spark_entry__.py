@@ -48,15 +48,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _fixture_dir(spark, sf_dir: str, prefix: str, build: Callable[[str], None]) -> str:
     """The temp dir of a fixture built once per session and ``sf_dir``:
     ``build(path)`` fills a fresh ``mkdtemp(prefix=prefix)`` dir on first
-    use, and the dir is removed at process exit."""
+    use.  The dir is removed when the memo drops a stopped session's
+    entries, on the next session's first miss, or at process exit."""
+
+    def remove(path: str) -> None:
+        shutil.rmtree(path, ignore_errors=True)
 
     def make() -> str:
         path = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        atexit.register(remove, path)
         build(path)
         return path
 
-    return memo(spark, (sf_dir, prefix), make)
+    return memo(spark, (sf_dir, prefix), make, drop=remove)
 
 
 # --------------------------------------------------------------------------

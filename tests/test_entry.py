@@ -158,6 +158,77 @@ def test_bench_list_resolves_through_the_shared_lookup():
     assert bench.lookup("hilbert_key") is bench.OVERRIDES["hilbert_key"]
 
 
+def _emit_line(monkeypatch, tmp_path, capsys, times, extra, layers=None):
+    """``bench.emit`` into a private detail file; its last stdout line."""
+    import bench
+
+    monkeypatch.setattr(bench, "DETAIL_PATH", str(tmp_path / "detail.json"))
+    bench.emit(times, extra, {"q000": "ValueError('warm-up')"}, layers or {})
+    return capsys.readouterr().out.strip().splitlines()[-1]
+
+
+def _r14_extra() -> dict:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH_LOCAL_sf0.01_r14.json")) as fh:
+        return json.load(fh)["extra"]
+
+
+_TIMES = {f"q{i:03d}": round(0.5 + 0.01 * i, 3) for i in range(150)}
+
+
+def test_bench_summary_fits_with_150_queries_and_the_r14_extras(monkeypatch, tmp_path, capsys):
+    import bench
+
+    line = _emit_line(monkeypatch, tmp_path, capsys, _TIMES, _r14_extra())
+    assert len(line) <= bench.SUMMARY_LIMIT
+    assert json.loads(line)["n_queries"] == 150
+
+
+def test_bench_summary_fits_when_the_extras_alone_are_over_the_cap(monkeypatch, tmp_path, capsys):
+    """The summary sheds extras once no query is left to shed; the
+    detail file keeps every one of them."""
+    import bench
+
+    extra = {**_r14_extra(), **{f"padding_extra_{i:03d}": 123456.789 for i in range(40)}}
+    assert len(json.dumps(extra)) > bench.SUMMARY_LIMIT
+    line = _emit_line(monkeypatch, tmp_path, capsys, _TIMES, extra)
+    assert len(line) <= bench.SUMMARY_LIMIT
+    summary = json.loads(line)
+    assert summary["n_queries"] == 150
+    assert summary["extra"].items() <= extra.items()
+    with open(tmp_path / "detail.json") as fh:
+        assert json.load(fh)["extra"] == extra
+
+
+def test_bench_detail_holds_every_time_warmup_errors_and_layers(monkeypatch, tmp_path, capsys):
+    layers = {n: {"build_ms": 1.5, "run_ms": 10.0, "steal_frac": 0.0, "jobs": 2} for n in _TIMES}
+    _emit_line(monkeypatch, tmp_path, capsys, _TIMES, _r14_extra(), layers)
+    with open(tmp_path / "detail.json") as fh:
+        detail = json.load(fh)
+    assert detail["queries"] == _TIMES
+    assert detail["warmup_errors"] == {"q000": "ValueError('warm-up')"}
+    assert detail["layers"] == layers
+
+
+def test_bench_hot_cold_percentile_rows_keep_their_values():
+    """Nearest-rank, as the rows were before they used the harness's
+    ``percentile``: over 1..40 p50 is 20 and p99 is 40; over 1..20 p99
+    is 20."""
+    import random
+
+    import bench
+
+    forty = [float(i) for i in range(1, 41)]
+    random.Random(0).shuffle(forty)
+    assert bench.pct_extras("query_hot_1h", forty) == {
+        "query_hot_1h_p50": 20.0, "query_hot_1h_p99": 40.0,
+    }
+    twenty = [float(i) for i in range(1, 21)]
+    assert bench.pct_extras("query_cold_24h", twenty) == {
+        "query_cold_24h_p50": 10.0, "query_cold_24h_p99": 20.0,
+    }
+
+
 if __name__ == "__main__":
     _write_pin()
 
@@ -218,13 +289,14 @@ def test_second_session_in_one_process_rebuilds_its_fixtures(two_sessions):
 
 
 def test_fixture_dirs_are_removed_at_process_exit(two_sessions):
-    """Every store and index dir the process made (two of each, one per
-    session) is gone once it exits."""
+    """The first session's store and index dirs are removed once the
+    second session builds its own, so one of each is left before exit,
+    and none after it."""
     proc, lines, tmp = two_sessions
     left = [d for d in os.listdir(tmp) if d.startswith(_FIXTURE_PREFIXES)]
     assert not left, left
     assert lines[-1]["tmp"] == str(tmp)
     made = [d for d in lines[-1]["dirs"] if d.startswith(_FIXTURE_PREFIXES)]
     assert sorted(p for d in made for p in _FIXTURE_PREFIXES if d.startswith(p)) == sorted(
-        _FIXTURE_PREFIXES * 2
+        _FIXTURE_PREFIXES
     ), made

@@ -127,6 +127,20 @@ def test_memo_rollover_forget_and_failed_build(monkeypatch):
     assert builds == ["a1", "b1", "a3", "b3", "cb3", "a5"]
 
 
+def test_memo_rollover_drops_the_old_sessions_values(monkeypatch):
+    """Spark-free: the rollover calls ``drop`` on each dropped entry that
+    was stored with one (a fixture's temp dir), and a hit calls nothing."""
+    monkeypatch.setattr(_util, "_MEMO", {})
+    dropped = []
+    old, new = _session("app-old"), _session("app-new")
+    assert memo(old, ("/a", "dir"), lambda: "a-old", drop=dropped.append) == "a-old"
+    assert memo(old, ("/b", "table"), lambda: "b-old") == "b-old"
+    assert memo(old, ("/a", "dir"), lambda: "a2", drop=dropped.append) == "a-old"
+    assert dropped == []
+    assert memo(new, ("/a", "dir"), lambda: "a-new", drop=dropped.append) == "a-new"
+    assert dropped == ["a-old"]
+
+
 def test_memo_threads_get_one_value_per_key(monkeypatch):
     """Eight threads memoizing five keys at once, with a short switch
     interval: every thread gets the same object for a key, even when

@@ -93,11 +93,16 @@ def _parallelize(df: DataFrame) -> DataFrame:
     return df
 
 
-_MEMO: dict[tuple[str, tuple[str, str]], object] = {}
+_MEMO: dict[tuple[str, tuple[str, str]], tuple[object, Callable | None]] = {}
 _MEMO_LOCK = threading.Lock()
 
 
-def memo(spark: SparkSession, key: tuple[str, str], build: Callable[[], T]) -> T:
+def memo(
+    spark: SparkSession,
+    key: tuple[str, str],
+    build: Callable[[], T],
+    drop: Callable[[T], object] | None = None,
+) -> T:
     """``build()``, computed once per session and ``key``, a
     ``(path, what)`` pair — the one cache in the engine.
 
@@ -113,7 +118,8 @@ def memo(spark: SparkSession, key: tuple[str, str], build: Callable[[], T]) -> T
     table or a temp view belongs to the session that made it, so the
     first miss under a new applicationId drops every entry of the old
     one (all entries share one id, so the check is one dict peek on a
-    miss and nothing on a hit).  A ``build`` that raises stores nothing.
+    miss and nothing on a hit), calling ``drop(value)`` for each dropped
+    entry stored with one.  A ``build`` that raises stores nothing.
     The lock guards the dict, not ``build``, so builds may nest; two
     threads that build one key at once both get the first stored value.
 
@@ -123,14 +129,19 @@ def memo(spark: SparkSession, key: tuple[str, str], build: Callable[[], T]) -> T
     a concurrent reader memoized while the write was half done.
     """
     app = spark.sparkContext.applicationId
+    stale = []
     with _MEMO_LOCK:
         if (app, key) in _MEMO:
-            return _MEMO[(app, key)]
+            return _MEMO[(app, key)][0]
         if _MEMO and next(iter(_MEMO))[0] != app:
+            stale = list(_MEMO.values())
             _MEMO.clear()
+    for old, on_drop in stale:
+        if on_drop is not None:
+            on_drop(old)
     value = build()
     with _MEMO_LOCK:
-        return _MEMO.setdefault((app, key), value)
+        return _MEMO.setdefault((app, key), (value, drop))[0]
 
 
 def forget(prefix: str) -> None:

@@ -314,12 +314,14 @@ def stream_decode_media(
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
+        features = extract_features_safe(batch_df)
         staged = {}
         for name, df_fn in (
-            ("features", lambda: extract_features_safe(batch_df)),
+            ("features", lambda: features),
             (
                 "metrics",
-                lambda: spark.read.parquet(staged["features"])
+                lambda: spark.read.schema(features.schema)
+                .parquet(staged["features"])
                 .groupBy("ok", "err_kind")
                 .agg(F.count("*").alias("n"))
                 .withColumn("epoch_id", F.lit(int(epoch_id))),
@@ -417,7 +419,7 @@ def stream_clean_crawl(
         # corpus membership: every PRIOR epoch's fingerprints
         prior = ep.prior("fingerprints")
         if prior:
-            hist = spark.read.parquet(*prior).select("content_hash")
+            hist = spark.read.schema("content_hash string").parquet(*prior)
         else:
             hist = spark.createDataFrame([], "content_hash string")
 
@@ -867,15 +869,12 @@ def stream_scd2(
         # the NEWEST strictly-prior epoch of each touched partition
         cur_parts = [f"current/part={p}" for p in parts_touched]
         prior_dirs = [dirs[-1] for dirs in map(ep.prior, cur_parts) if dirs]
+        # the snapshot's schema, so a read of it runs no inference job
+        state = T.StructType(batch.schema.fields).add("version", "long").add("valid_from_ms", "long")
         if prior_dirs:
-            cur = spark.read.parquet(*prior_dirs)
+            cur = spark.read.schema(state).parquet(*prior_dirs)
         else:
-            cur = spark.createDataFrame(
-                [],
-                batch.schema.add("version", "long").add("valid_from_ms", "long"),
-            ).select(
-                *[F.col(c) for c in ev_cols], "version", "valid_from_ms"
-            )
+            cur = spark.createDataFrame([], state)
 
         touched = batch.select(key).distinct()
         base = cur.join(touched, key)
