@@ -323,6 +323,8 @@ def stream_legs(spark, tmp: str, pts) -> dict[str, float]:
         writer = sink(stream, f"{tmp}/{key}")
         t0 = time.perf_counter()
         sq = writer.start()
+        # drains the default trigger of the heavy-hitters leg as well as
+        # the available-now trigger of the others, which end by themselves
         sq.processAllAvailable()
         sq.stop()
         dt = time.perf_counter() - t0
