@@ -525,7 +525,7 @@ def main():
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    la1, la5, la15 = os.getloadavg()
+    _, la5, la15 = os.getloadavg()
     ctx = {**host.read(), "loadavg_5m": round(la5, 2), "loadavg_15m": round(la15, 2)}
     extra.update({f"ctx_{k}": v for k, v in {**ctx, **session_context(spark)}.items()})
     emit(times, extra, warmup_errors, layers)
@@ -554,12 +554,10 @@ def emit(
         "unit": "sec",
         "sf": SF_DIR,
     }
-    detail = {**head, "queries": times, "extra": extra}
+    detail = {**head, "queries": times, "extra": extra, "warmup_errors": warmup_errors,
+              "layers": layers}
     with open(DETAIL_PATH, "w") as fh:
-        json.dump(
-            {**detail, "warmup_errors": warmup_errors, "layers": layers},
-            fh, indent=1, sort_keys=True,
-        )
+        json.dump(detail, fh, indent=1, sort_keys=True)
     shown = dict(sorted(times.items(), key=lambda kv: kv[1], reverse=True)[:10])
     kept = dict(extra)
     summary = {**head, "queries": shown, "extra": kept, "n_queries": len(times),
