@@ -48,8 +48,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _fixture_dir(spark, sf_dir: str, prefix: str, build: Callable[[str], None]) -> str:
     """The temp dir of a fixture built once per session and ``sf_dir``:
     ``build(path)`` fills a fresh ``mkdtemp(prefix=prefix)`` dir on first
-    use.  The dir is removed when the memo drops a stopped session's
-    entries, on the next session's first miss, or at process exit."""
+    use.  The fixtures are the store, the ANN and MaxSim indexes and the
+    corpus's LSH pair table (:func:`_scaled_banded_pairs`); each is
+    derived from the driver tables alone, and reusing it for the whole
+    session relies on the rule that ``sf_dir`` is never written to.  The
+    dir is removed when the memo drops a stopped session's entries, on
+    the next session's first miss, or at process exit."""
 
     def remove(path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
@@ -528,9 +532,10 @@ def q_jaccard_pairs(spark, sf_dir):
 
 
 def _docs_count(docs) -> int:
-    """Memoized ``docs.count()`` — six entries derive LSH banding from
-    the same corpus size, and the footer-metadata count job, while
-    cheap, needn't run six times per gate/bench pass.
+    """Memoized ``docs.count()`` — every LSH entry that derives its
+    banding from corpus size (the shared pair fixture and the queries
+    that band on their own) reads it here, so the footer-metadata count
+    job runs once per corpus and session, not once per entry.
 
     The key is the scan's RESOLVED INPUT FILES (plus the plan string),
     NOT the logical plan alone: the logical plan of ``read.parquet(dir)``
@@ -544,28 +549,42 @@ def _docs_count(docs) -> int:
     return memo(docs.sparkSession, (files, plan), docs.count)
 
 
-def _scaled_banded_pairs(docs):
-    """MinHash+LSH candidate pairs with corpus-derived banding
-    (``dedup.lsh_params_for``): the base (8 hashes, 4 bands × 2 rows)
-    at every oracle-checked SF, +2 rows/band per 10× docs beyond —
-    keeps chance band collisions from growing ~n² (SCALE.md round-6
-    scale-up section; measured 67× candidates at 10× data with fixed
-    params vs ~true-near-dups-only with the rule).  The count is a
-    parquet footer-metadata pass, memoized per corpus."""
-    p = dedup_ops.lsh_params_for(_docs_count(docs))
-    sigs = dedup_ops.minhash_signatures(
-        docs, num_hashes=p["num_hashes"], shingle_n=3
-    )
-    return dedup_ops.lsh_candidate_pairs(
-        sigs, bands=p["bands"], rows_per_band=p["rows_per_band"]
-    )
+def _scaled_banded_pairs(spark, sf_dir: str) -> DataFrame:
+    """The documents' MinHash+LSH candidate pairs (id1 < id2) with
+    corpus-derived banding (``dedup.lsh_params_for``): the base (8
+    hashes, 4 bands × 2 rows) at every oracle-checked SF, +2 rows/band
+    per 10× docs beyond — keeps chance band collisions from growing ~n²
+    (SCALE.md round-6 scale-up section; measured 67× candidates at 10×
+    data with fixed params vs ~true-near-dups-only with the rule).
+
+    Built once per session and ``sf_dir`` into a Parquet fixture
+    (:func:`_fixture_dir`) that every pair consumer scans, with the
+    known schema so no inference job runs: the first consumer pays for
+    signatures, banding and the write, and the rest read a pair-sized
+    file.  ``sf_dir`` is never written to, so the pairs cannot go
+    stale."""
+
+    def scan() -> DataFrame:
+        docs = _t(spark, sf_dir, "documents")
+        p = dedup_ops.lsh_params_for(_docs_count(docs))
+        sigs = dedup_ops.minhash_signatures(docs, num_hashes=p["num_hashes"], shingle_n=3)
+        pairs = dedup_ops.lsh_candidate_pairs(
+            sigs, bands=p["bands"], rows_per_band=p["rows_per_band"]
+        )
+        path = _fixture_dir(
+            spark, sf_dir, "lsh_pairs_", lambda d: pairs.write.parquet(d + "/pairs")
+        )
+        return spark.read.schema(pairs.schema).parquet(path + "/pairs")
+
+    return memo(spark, (sf_dir, "lsh_pairs"), scan)
 
 
 def q_minhash_lsh(spark, sf_dir):
     """MinHash(8) + LSH(4 bands × 2) candidate pairs over all documents —
     the raw banding primitive at its named fixed parameters (the
-    pipeline entries derive parameters from corpus size via
-    `_scaled_banded_pairs`)."""
+    pipeline entries derive parameters from corpus size and share one
+    pair table via `_scaled_banded_pairs`); it computes its own pairs
+    from documents, so every pass measures the LSH kernel."""
     docs = _t(spark, sf_dir, "documents")
     sigs = dedup_ops.minhash_signatures(docs, num_hashes=8, shingle_n=3)
     return dedup_ops.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
@@ -1329,8 +1348,7 @@ def q_dedup_clusters(spark, sf_dir):
     """Duplicate-cluster formation: connected components (min-label
     propagation) over the minhash_lsh candidate pairs — the purge-list step
     of a real dedup pipeline.  Oracle: recursive-CTE reachability."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     return dedup_ops.dedup_clusters(pairs)
 
 
@@ -1339,17 +1357,13 @@ def q_clean_corpus(spark, sf_dir):
     near-dup cluster purge → quality gate → deterministic sample, all
     md5-keyed (pipeline.clean_corpus docstring).  One oracle re-derives
     all four gates in SQL — the composition itself is hash-verified.
-    Banding is corpus-derived (lsh_params_for — base params at every
+    The near-dup step reads the session's shared pair table, whose
+    banding is corpus-derived (lsh_params_for — base params at every
     oracle-checked SF, so the oracle's fixed 8/4×2 replay stays exact)."""
     from time_series_databse_engine_spark.pipeline import clean_corpus
 
-    docs = _t(spark, sf_dir, "documents")
-    p = dedup_ops.lsh_params_for(_docs_count(docs))
     return clean_corpus(
-        docs,
-        num_hashes=p["num_hashes"],
-        bands=p["bands"],
-        rows_per_band=p["rows_per_band"],
+        _t(spark, sf_dir, "documents"), pairs=_scaled_banded_pairs(spark, sf_dir)
     )
 
 
@@ -1606,7 +1620,7 @@ def q_dedup_keep_best(spark, sf_dir):
     the cluster table is id-keyed, quality is a zero-shuffle scan, one
     clusters-sized aggregate."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     clusters = dedup_ops.dedup_clusters(pairs)
     q = text_ops.quality_score(docs).select("doc_id", "quality")
     return (
@@ -1687,7 +1701,7 @@ def q_edit_verify(spark, sf_dir):
     # row then pays an O(len²) Levenshtein DP — a per-row cost byte-based
     # coalescing cannot see (measured ~0.65 s serialized at sf0.1)
     width = _shuffle_width(spark)
-    pairs = _scaled_banded_pairs(docs).repartition(width, "id1")
+    pairs = _scaled_banded_pairs(spark, sf_dir).repartition(width, "id1")
     a = docs.select(F.col("doc_id").alias("id1"), F.col("text").alias("_t1"))
     b = docs.select(F.col("doc_id").alias("id2"), F.col("text").alias("_t2"))
     d = F.levenshtein("_t1", "_t2")
@@ -2052,8 +2066,7 @@ def q_pagerank(spark, sf_dir):
     share."""
     from time_series_databse_engine_spark.operators import graph as graph_ops
 
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     pr = graph_ops.pagerank(pairs, damping=0.85, iters=5)
     return pr.select(F.col("id").alias("doc_id"), "pagerank")
 
@@ -2067,8 +2080,7 @@ def q_label_propagation(spark, sf_dir):
     identical (count DESC, label ASC) argmax."""
     from time_series_databse_engine_spark.operators import graph as graph_ops
 
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     lp = graph_ops.label_propagation(pairs, iters=3)
     return lp.select(F.col("id").alias("doc_id"), "community")
 
@@ -2164,8 +2176,7 @@ def q_triangle_count(spark, sf_dir):
     on both engines, so counts match bit for bit."""
     from time_series_databse_engine_spark.operators import graph as graph_ops
 
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     tc = graph_ops.triangle_count(pairs)
     return tc.select(F.col("id").alias("doc_id"), "degree", "triangles", "lcc")
 
@@ -2470,12 +2481,10 @@ def q_modularity(spark, sf_dir):
     degree/label joins, then community-sized finish."""
     from time_series_databse_engine_spark.operators import graph as graph_ops
 
-    docs = _t(spark, sf_dir, "documents")
-    # the pair list feeds THREE plan branches (component labels, the
-    # degree table, the within-community edge count) — cut the lineage
-    # once so the minhash+banding pipeline runs once, not per branch
-    # (pair-list-sized state, the dedup_clusters iteration discipline)
-    pairs = _scaled_banded_pairs(docs).localCheckpoint(eager=False)
+    # the pair list feeds three plan branches (component labels, the
+    # degree table, the within-community edge count); each re-scans the
+    # pair fixture, which costs no job over a lineage-cutting checkpoint
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     labels = dedup_ops.dedup_clusters(pairs)
     return graph_ops.modularity(
         pairs, labels, id_col="doc_id", community_col="cluster_id"
@@ -2537,8 +2546,7 @@ def q_k_core(spark, sf_dir):
     core_degree)."""
     from time_series_databse_engine_spark.operators import graph as graph_ops
 
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     return graph_ops.k_core(pairs, k=2, rounds=8).select(
         F.col("id").alias("doc_id"), "core_degree"
     )
@@ -2623,8 +2631,7 @@ def q_dedup_clusters_star(spark, sf_dir):
     contraction (O(log n) rounds — the variant for long-chain components;
     dedup.dedup_clusters_star docstring).  Same output contract and the
     same recursive-CTE oracle as `dedup_clusters`."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _scaled_banded_pairs(docs)
+    pairs = _scaled_banded_pairs(spark, sf_dir)
     return dedup_ops.dedup_clusters_star(pairs)
 
 

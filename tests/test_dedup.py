@@ -11,6 +11,7 @@ from time_series_databse_engine_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingle_array,
     simhash64,
 )
 
@@ -25,6 +26,35 @@ DOCS = [
 
 def _docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
+
+
+def _py_shingles(text, n=3):
+    """Pure-Python shingle_array: distinct n-word shingles of the
+    lowered text in first-seen order, the whole text when shorter."""
+    import re
+
+    toks = re.split(r"\s+", text.lower())
+    out = []
+    for i in range(max(len(toks) - (n - 1), 1)):
+        s = " ".join(toks[i : i + n])
+        if s not in out:
+            out.append(s)
+    return out
+
+
+def test_shingle_array_matches_python_reference(spark):
+    import random
+
+    rng = random.Random(7)
+    vocab = ["Alpha", "beta", "GAMMA", "delta", "eps"]  # small: shingles repeat
+    long_doc = " ".join(rng.choice(vocab) for _ in range(300))
+    texts = [long_doc, "Two  words", ""]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {r.doc_id: r.sh for r in df.select("doc_id", shingle_array(3).alias("sh")).collect()}
+    for i, text in enumerate(texts):
+        assert got[i] == _py_shingles(text), (i, got[i][:5])
+    assert len(_py_shingles(long_doc)) < 298  # array_distinct did drop repeats
+    assert got[1] == ["two words"] and got[2] == [""]
 
 
 def test_exact_dedup(spark):

@@ -98,6 +98,37 @@ def test_docs_count_memo_distinguishes_scale_factors(spark):
     assert n_small != n_big
 
 
+def test_pair_consumers_share_one_lsh_pair_build(spark, sf_dir, monkeypatch):
+    """k_core and dedup_clusters in one session sign the corpus once:
+    the second reads the first's pair fixture, which equals the pairs
+    computed directly from the documents."""
+    from time_series_databse_engine_spark.operators import _util, dedup as dedup_ops
+
+    monkeypatch.setattr(_util, "_MEMO", {})  # this test's session starts unbuilt
+    calls = []
+    sign = dedup_ops.minhash_signatures
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs)
+        return sign(*args, **kwargs)
+
+    monkeypatch.setattr(dedup_ops, "minhash_signatures", counted)
+    for name in ("k_core", "dedup_clusters"):
+        assert entry_mod.queries()[name](spark, sf_dir).count() > 0
+    assert len(calls) == 1, calls
+
+    docs = entry_mod._t(spark, sf_dir, "documents")
+    p = dedup_ops.lsh_params_for(docs.count())
+    direct = dedup_ops.lsh_candidate_pairs(
+        sign(docs, num_hashes=p["num_hashes"], shingle_n=3),
+        bands=p["bands"], rows_per_band=p["rows_per_band"],
+    )
+    shared = entry_mod._scaled_banded_pairs(spark, sf_dir)
+    assert len(calls) == 1
+    assert shared.columns == ["id1", "id2"]
+    assert sorted(shared.collect()) == sorted(direct.collect())
+
+
 def _snapshot() -> dict:
     """The pinned facts: the key order of ``queries()`` and the first 16
     hex digits of each ``oracle_sql()`` string's sha256."""
@@ -239,7 +270,8 @@ sys.path.insert(0, sys.argv[1])
 import __spark_entry__ as entry
 from time_series_databse_engine_spark import get_spark
 
-names = ("bucketed_join_storage", "ann_index_probe", "maxsim_index_probe", "tsdb_roundtrip")
+names = ("bucketed_join_storage", "ann_index_probe", "maxsim_index_probe", "tsdb_roundtrip",
+         "dedup_clusters")
 for session in (0, 1):
     spark = get_spark(app_name=f"session-{session}", master="local[2]", shuffle_partitions=2)
     for name in names:
@@ -252,12 +284,12 @@ for session in (0, 1):
 print(json.dumps({"tmp": tempfile.gettempdir(), "dirs": sorted(os.listdir(tempfile.gettempdir()))}))
 """
 
-_FIXTURE_PREFIXES = ("tsdb_store_", "ann_index_", "maxsim_index_")
+_FIXTURE_PREFIXES = ("tsdb_store_", "ann_index_", "maxsim_index_", "lsh_pairs_")
 
 
 @pytest.fixture(scope="module")
 def two_sessions(tmp_path_factory, sf_dir):
-    """One subprocess that builds four fixture-backed queries in a
+    """One subprocess that builds five fixture-backed queries in a
     session, stops it, and builds them again in a second session; its
     temp dir and Spark warehouse are private to the run."""
     import subprocess
@@ -277,19 +309,20 @@ def two_sessions(tmp_path_factory, sf_dir):
 
 def test_second_session_in_one_process_rebuilds_its_fixtures(two_sessions):
     """A fixture memoized in a stopped session (the bucketed catalog
-    tables, an index dir, the store) must be rebuilt for the next
-    session: both sessions answer every query with the same rows."""
+    tables, an index dir, the store, the LSH pairs) must be rebuilt for
+    the next session: both sessions answer every query with the same
+    rows."""
     proc, lines, _ = two_sessions
     assert proc.returncode == 0, proc.stderr[-2000:]
     rows = {(r["session"], r["query"]): r["rows"] for r in lines if "query" in r}
-    assert len(rows) == 8
+    assert len(rows) == 10
     for (session, name), n in rows.items():
         assert isinstance(n, int) and n > 0, (session, name, n)
         assert n == rows[(0, name)], (name, rows[(0, name)], n)
 
 
 def test_fixture_dirs_are_removed_at_process_exit(two_sessions):
-    """The first session's store and index dirs are removed once the
+    """The first session's store, index and pair dirs are removed once the
     second session builds its own, so one of each is left before exit,
     and none after it."""
     proc, lines, tmp = two_sessions

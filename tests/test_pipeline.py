@@ -45,6 +45,23 @@ def test_sample_gate_and_determinism(spark):
     assert samp_ids == again     # reproducible membership
 
 
+def test_clean_corpus_with_given_pairs_equals_computed_pairs(spark):
+    """``pairs=`` (the caller's LSH pair table) gives the same survivors
+    as clean_corpus computing the pairs itself."""
+    from time_series_databse_engine_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    docs = _docs(spark)
+    pairs = lsh_candidate_pairs(minhash_signatures(docs))
+    assert pairs.count() > 0  # the near dup (1, 3) is a candidate
+    for q in (0.0, 0.3):
+        own = clean_corpus(docs, quality_threshold=q, rate_16ths=16)
+        given = clean_corpus(docs, quality_threshold=q, rate_16ths=16, pairs=pairs)
+        assert sorted(given.collect()) == sorted(own.collect())
+
+
 def test_clean_crawl_cascade(spark):
     from time_series_databse_engine_spark.pipeline import clean_crawl
 

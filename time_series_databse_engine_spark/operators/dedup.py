@@ -195,10 +195,19 @@ def duplicate_span_ranges(
 
 def shingle_array(n: int = 3, text_col: str = "text") -> F.Column:
     """Distinct n-word shingles of a document as an array column.
-    Documents shorter than n words contribute their full text as one shingle."""
+    Documents shorter than n words contribute their full text as one shingle.
+
+    The token array is bound once per row by a one-element ``transform``:
+    higher-order functions evaluate interpreted with no CSE, so a shingle
+    lambda that read ``split(lower(text))`` itself would re-lower and
+    re-split the whole document per shingle — O(words²) per doc."""
+
+    def _shingles(toks):
+        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
+        return F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
+
     toks = F.split(F.lower(F.col(text_col)), "\\s+")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
+    return F.element_at(F.transform(F.array(toks), _shingles), 1)
 
 
 def shingles(df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -462,9 +471,16 @@ def simhash64_md5_sliced(
     )
     hs = F.transform(
         toks,
-        lambda t: F.array(
-            F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-            F.conv(F.substring(F.md5(t), 16, 15), 16, 10).cast("long"),
+        # bind the digest once per token (no CSE inside a lambda)
+        lambda t: F.element_at(
+            F.transform(
+                F.array(F.md5(t)),
+                lambda d: F.array(
+                    F.conv(F.substring(d, 1, 15), 16, 10).cast("long"),
+                    F.conv(F.substring(d, 16, 15), 16, 10).cast("long"),
+                ),
+            ),
+            1,
         ),
     )
     tok_pm = F.transform(

@@ -100,22 +100,37 @@ def lang_id_ngram(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     each language by the fraction of bigrams found in its profile, argmax
     (ties → lexicographically first language).  Like :func:`lang_id` but
     n-gram-based — robust to languages without whitespace-delimited words.
-    One scan, zero shuffles."""
-    t = F.lower(F.col(text_col))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - 1, F.lit(1))),
-        lambda i: F.substring(t, i, 2),
-    )
+    One scan, zero shuffles.
+
+    The lowered text and then the bigram array are each bound once per
+    row by a one-element ``transform`` (lambdas get no CSE), and the
+    scores come out as one struct that ``inline`` expands, so each row
+    builds its bigrams once, not once per bigram and per language."""
     langs = sorted(NGRAM_PROFILES)
-    scores = [
-        F.round(
-            F.size(F.filter(grams, lambda g: g.isin([*NGRAM_PROFILES[lang]])))
-            / F.greatest(F.size(grams), F.lit(1)),
-            6,
-        ).alias(f"score_{lang}")
-        for lang in langs
-    ]
-    scored = df.select(F.col(id_col), *scores)
+
+    def _scores(grams):
+        return F.struct(
+            *[
+                F.round(
+                    F.size(F.filter(grams, lambda g: g.isin([*NGRAM_PROFILES[lang]])))
+                    / F.greatest(F.size(grams), F.lit(1)),
+                    6,
+                ).alias(f"score_{lang}")
+                for lang in langs
+            ]
+        )
+
+    def _bigrams(t):
+        return F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(t) - 1, F.lit(1))),
+            lambda i: F.substring(t, i, 2),
+        )
+
+    scores = F.transform(
+        F.array(F.lower(F.col(text_col))),
+        lambda t: F.element_at(F.transform(F.array(_bigrams(t)), _scores), 1),
+    )
+    scored = df.select(F.col(id_col), F.inline(scores))
     best = F.greatest(*[F.col(f"score_{l}") for l in langs])
     guess = F.coalesce(*[F.when(F.col(f"score_{l}") == best, F.lit(l)) for l in langs])
     return scored.select(id_col, guess.alias("lang_guess"), best.alias("lang_score"))
@@ -205,9 +220,15 @@ def winnow_fingerprint(
     faster via Arrow-batched Python).
     """
     toks = F.split(F.lower(F.col(text_col)), "\\s+")
-    hs = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k))),
+    hs = F.element_at(
+        F.transform(
+            F.array(toks),  # bind the tokens once, for the same reason
+            lambda ts: F.transform(
+                F.sequence(F.lit(1), F.greatest(F.size(ts) - (k - 1), F.lit(1))),
+                lambda i: F.md5(F.concat_ws(" ", F.slice(ts, i, k))),
+            ),
+        ),
+        1,
     )
     fp = F.element_at(
         F.transform(
@@ -279,22 +300,28 @@ def chunk_documents(
     slice + explode): one scan, zero shuffles, output rows = Σ⌈tokens/size⌉.
     A UDTF variant exists for API parity (`ChunkDocumentsUDTF`); this
     expression form is the production path (JVM-side, codegen)."""
-    toks = F.split(F.col(text_col), "\\s+")
-    n_chunks = F.greatest(
-        F.floor((F.size(toks) + (chunk_size - 1)) / chunk_size).cast("int"), F.lit(1)
-    )
-    chunks = F.transform(
-        F.sequence(F.lit(1), n_chunks),
-        lambda i: F.struct(
-            i.cast("int").alias("chunk_idx"),
-            F.concat_ws(" ", F.slice(toks, (i - 1) * chunk_size + 1, chunk_size)).alias(
-                "chunk_text"
+
+    def _chunks(toks):
+        n_chunks = F.greatest(
+            F.floor((F.size(toks) + (chunk_size - 1)) / chunk_size).cast("int"), F.lit(1)
+        )
+        return F.transform(
+            F.sequence(F.lit(1), n_chunks),
+            lambda i: F.struct(
+                i.cast("int").alias("chunk_idx"),
+                F.concat_ws(" ", F.slice(toks, (i - 1) * chunk_size + 1, chunk_size)).alias(
+                    "chunk_text"
+                ),
+                F.least(F.lit(chunk_size), F.size(toks) - (i - 1) * chunk_size)
+                .cast("int")
+                .alias("n_tokens"),
             ),
-            F.least(F.lit(chunk_size), F.size(toks) - (i - 1) * chunk_size)
-            .cast("int")
-            .alias("n_tokens"),
-        ),
-    )
+        )
+
+    # the token array is bound once per row (one-element transform): a
+    # chunk lambda that read split(text) itself would re-split per chunk
+    toks = F.split(F.col(text_col), "\\s+")
+    chunks = F.element_at(F.transform(F.array(toks), _chunks), 1)
     return df.select(F.col(id_col), F.explode(chunks).alias("c")).select(
         id_col, "c.chunk_idx", "c.chunk_text", "c.n_tokens"
     )

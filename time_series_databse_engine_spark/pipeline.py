@@ -35,6 +35,7 @@ def clean_corpus(
     rows_per_band: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
+    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """The standard corpus-cleaning cascade, one DataFrame in → one out.
 
@@ -49,12 +50,18 @@ def clean_corpus(
     for surviving documents (text is dropped — downstream tokenization
     re-reads it by id; keeping it out of the result avoids shuffling
     payloads through the joins).
+
+    ``pairs`` is the corpus's LSH candidate pair table (id1, id2), when
+    the caller already has it; step 2 then clusters it instead of
+    computing signatures and banding from ``docs`` (the MinHash and
+    banding arguments are unused).
     """
     keepers = dedup_ops.exact_dedup(docs, text_col, id_col).select(
         F.col("keeper_id").alias(id_col)
     )
-    sigs = dedup_ops.minhash_signatures(docs, num_hashes, shingle_n, text_col, id_col)
-    pairs = dedup_ops.lsh_candidate_pairs(sigs, bands, rows_per_band, id_col)
+    if pairs is None:
+        sigs = dedup_ops.minhash_signatures(docs, num_hashes, shingle_n, text_col, id_col)
+        pairs = dedup_ops.lsh_candidate_pairs(sigs, bands, rows_per_band, id_col)
     clusters = dedup_ops.dedup_clusters(pairs)
     purge = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(id_col)
 
