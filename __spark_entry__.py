@@ -50,7 +50,7 @@ def _fixture_dir(spark, sf_dir: str, prefix: str, build: Callable[[str], None]) 
     ``build(path)`` fills a fresh ``mkdtemp(prefix=prefix)`` dir on first
     use.  The fixtures are the store, the ANN and MaxSim indexes and the
     corpus's LSH pair table (:func:`_scaled_banded_pairs`); each is
-    derived from the driver tables alone, and reusing it for the whole
+    derived from the ``sf_dir`` tables alone, and reusing it for the whole
     session relies on the rule that ``sf_dir`` is never written to.  The
     dir is removed when the memo drops a stopped session's entries, on
     the next session's first miss, or at process exit."""

@@ -29,6 +29,11 @@ under its own Spark job group, ``build_ms`` (the Python builder) plus
 ``run_ms`` (the noop-sink run), the host's ``steal_frac`` over those two,
 and the group's ``jobs``, ``stages``, ``tasks``, ``task_run_ms``,
 ``task_cpu_ms``, ``shuffle_bytes``, ``spill_bytes`` and ``input_rows``.
+A row's ``steal_frac`` is tick-quantized: ``/proc/stat`` counts 100 ticks
+per CPU-second, so on 4 CPUs one tick is 0.008 of a 300 ms query, and a
+sub-second query reads 0 or a multiple of that.  It is not a per-query
+gate; a steal gate needs the run's ``ctx_steal_frac`` or a sum over
+queries.
 
 Isolated-timing mode (VERDICT r6 "Next round" #7): in-suite session-state
 position tax distorts per-query comparisons by up to ~1 s at sf0.1

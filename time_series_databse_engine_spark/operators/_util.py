@@ -107,7 +107,7 @@ def memo(
     ``(path, what)`` pair — the one cache in the engine.
 
     What it holds is set-up: lazy DataFrame plans over files nothing
-    rewrites (the driver tables, an index's sidecars), a sidecar's
+    rewrites (the ``sf_dir`` tables, an index's sidecars), a sidecar's
     parsed params, a corpus count, the dir of a fixture built once.  The
     one shared result is a fixture too: the corpus's LSH candidate pair
     table, written once per session and ``sf_dir`` and then scanned by
