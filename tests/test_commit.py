@@ -86,6 +86,28 @@ def test_prior_max_reads_every_strictly_prior_epoch(tmp_path):
     ]
 
 
+def test_prior_max_counts_this_epochs_staged_table(tmp_path):
+    """Once the epoch has staged ``name``, its rows count in the max too
+    (null anchors are ignored); ``staged_rows`` counts them from the
+    footers, so an empty staged table reads 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path)
+    os.makedirs(f"{out}/state/epoch=0")
+    pq.write_table(pa.table({"anchor_ms": pa.array([29], pa.int64())}), f"{out}/state/epoch=0/p.parquet")
+    ep = commit.EpochDirs(out, 1)
+    assert ep.prior_max("state", "anchor_ms") == 29 and ep.staged_rows("state") == 0
+    os.makedirs(os.path.join(ep.tmp, "state"))
+    staged = os.path.join(ep.tmp, "state", "p.parquet")
+    pq.write_table(pa.table({"anchor_ms": pa.array([603, None], pa.int64())}), staged)
+    assert ep.prior_max("state", "anchor_ms") == 603
+    assert ep.staged_rows("state") == 2
+    pq.write_table(pa.table({"anchor_ms": pa.array([], pa.int64())}), staged)
+    assert ep.prior_max("state", "anchor_ms") == 29
+    assert ep.staged_rows("state") == 0
+
+
 def test_epoch_publish_per_partition(tmp_path):
     """A partitioned table publishes one ``epoch=N`` dir per touched
     partition; untouched partitions keep their older epochs."""

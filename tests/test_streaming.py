@@ -142,6 +142,55 @@ def test_stream_to_store_checkpointless_replay_no_duplicates(
         assert store.points().count() == src
 
 
+def test_stream_to_store_writes_one_file_per_hour_per_epoch(spark, tmp_path):
+    """Three one-file epochs, each spanning two hours and five metrics:
+    every hour partition holds exactly one data file per epoch that
+    touched it, also after a checkpoint-wiped replay.  A fixed shuffle
+    count would spread an hour's five metrics over several files."""
+    import datetime as dt
+    import glob
+    import os
+    import time
+    from collections import Counter
+
+    from time_series_databse_engine_spark.streaming.ingest import EVENT_SCHEMA
+
+    H = 3_600
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp()
+    src = str(tmp_path / "src")
+    now = time.time()
+    for e in range(3):
+        rows = [
+            (e * 1_000 + i, dt.datetime.fromtimestamp(t0 + (e + i % 2) * H + i, dt.timezone.utc),
+             i % 7, f"m{i % 5}", float(i), None)
+            for i in range(200)
+        ]
+        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.parquet(f"{src}/b{e}")
+        for f in glob.glob(f"{src}/b{e}/*.parquet"):
+            os.utime(f, (now - 30 + 10 * e, now - 30 + 10 * e))
+    store = TimeSeriesStore(spark, str(tmp_path / "points"))
+
+    def files_per_hour_and_epoch():
+        names = glob.glob(str(tmp_path / "points" / "hour_bucket=*" / "epoch*.parquet"))
+        return Counter(
+            (os.path.basename(os.path.dirname(f)), os.path.basename(f).split("-", 1)[0])
+            for f in names
+        )
+
+    for _ in range(2):
+        stream = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(
+            src + "/*"
+        )
+        q = stream_to_store(stream, store, str(tmp_path / "ckpt")).start()
+        q.awaitTermination(120)
+        q.stop()
+        counts = files_per_hour_and_epoch()
+        # epoch e touches hours e and e + 1, so 6 (hour, epoch) pairs
+        assert len(counts) == 6 and set(counts.values()) == {1}, counts
+        assert store.points().count() == 600
+        shutil.rmtree(str(tmp_path / "ckpt"))
+
+
 def test_stream_stream_join_matches_batch(spark, staged_events, sf_dir):
     from time_series_databse_engine_spark.streaming import stream_stream_join
 

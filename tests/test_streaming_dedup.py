@@ -540,13 +540,15 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
     b0 = [(400 + i, "ancient", 2_000 + i * 1_000) for i in range(3)]
     # batch 3 (late): events from between batches 1 and 2
     b3 = [(300 + i, "late", 300_000 + i * 1_000) for i in range(6)]
-    batches = [("b1", b1), ("b2", b2), ("b0", b0), ("b3", b3)]
+    # batch 4: a null timestamp counts in n_events but adds no mass
+    b4 = [(500, "late", None), (501, "fresh", 620_000)]
+    batches = [("b1", b1), ("b2", b2), ("b0", b0), ("b3", b3), ("b4", b4)]
     src = str(tmp_path / "src")
     schema = "event_id long, item string, ts_ms long"
     # the file source orders files by modification time: one epoch per
     # batch, in the order of ``batches``
     now = time.time()
-    for age, (name, rows) in zip((40, 30, 20, 10), batches):
+    for age, (name, rows) in zip((50, 40, 30, 20, 10), batches):
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/{name}")
         for f in g.glob(f"{src}/{name}/*.parquet"):
             os.utime(f, (now - age, now - age))
@@ -571,11 +573,15 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
 
     run()
     epochs = sorted(int(d.split("=")[-1]) for d in g.glob(out + "/topk/epoch=*"))
+    # each key is anchored at its own newest timestamp in the epoch; the
+    # epoch's max anchor is the batch's newest timestamp
     anchors = [
-        spark.read.parquet(f"{out}/state/epoch={e}").first()["anchor_ms"]
+        spark.read.parquet(f"{out}/state/epoch={e}").agg(F.max("anchor_ms")).first()[0]
         for e in epochs
     ]
-    assert anchors == [29_000, 603_000, 4_000, 305_000]
+    assert anchors == [29_000, 603_000, 4_000, 305_000, 620_000]
+    state1 = spark.read.parquet(f"{out}/state/epoch={epochs[1]}").collect()
+    assert {r["item"]: r["anchor_ms"] for r in state1} == {"fresh": 603_000, "stale": 601_000}
     # each epoch's leaderboard vs the batch op over the batches seen so far
     seen = []
     for e, (_, rows) in zip(epochs, batches):
@@ -593,20 +599,52 @@ def test_streaming_decayed_topk_matches_batch_and_replays_exactly_once(
     assert live[0]["item"] == "fresh"
 
     # crash replay: wipe checkpoint, re-run, state + topk bit-identical
-    before_state = sorted(
-        tuple(r) for r in spark.read.parquet(out + "/state").collect()
-    )
-    before_top = sorted(
-        tuple(r) for r in spark.read.parquet(out + "/topk").collect()
-    )
+    # (sorted by repr: "late"'s epoch-4 state row has a null mass and anchor)
+    def rows(table):
+        return sorted((tuple(r) for r in spark.read.parquet(f"{out}/{table}").collect()), key=repr)
+
+    before_state, before_top = rows("state"), rows("topk")
     shutil.rmtree(str(tmp_path / "ckpt"))
     run()
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(out + "/state").collect()
-    ) == before_state
-    assert sorted(
-        tuple(r) for r in spark.read.parquet(out + "/topk").collect()
-    ) == before_top
+    assert rows("state") == before_state
+    assert rows("topk") == before_top
+
+
+def test_streaming_decayed_topk_empty_epoch_publishes_nothing(spark, tmp_path):
+    """An epoch over a zero-row source file publishes no state and no
+    leaderboard and leaves no ``_tmp/epoch-N`` staging dir; the next
+    epoch merges over the one before it."""
+    import glob as g
+    import os
+    import time
+
+    from time_series_databse_engine_spark.streaming.ingest import (
+        last_committed_epoch,
+        stream_decayed_topk,
+    )
+
+    schema = "event_id long, item string, ts_ms long"
+    src = str(tmp_path / "src")
+    now = time.time()
+    batches = [[(1, "a", 1_000)], [], [(2, "b", 2_000)]]
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/b{i}")
+        for f in g.glob(f"{src}/b{i}/*.parquet"):
+            os.utime(f, (now - 30 + 10 * i, now - 30 + 10 * i))
+    out = str(tmp_path / "trend")
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/*")
+    q = stream_decayed_topk(
+        stream, out, str(tmp_path / "ckpt"), keys=["item"], half_life_ms=60_000, k=5
+    ).start()
+    q.awaitTermination(120)
+    q.stop()
+    assert last_committed_epoch(str(tmp_path / "ckpt")) == 2
+    for table in ("state", "topk"):
+        assert sorted(os.listdir(f"{out}/{table}")) == ["epoch=0", "epoch=2"]
+    assert not os.path.exists(f"{out}/_tmp/epoch-1")
+    assert g.glob(f"{out}/_tmp/*") == []
+    top = spark.read.parquet(f"{out}/topk/epoch=2").orderBy("item").collect()
+    assert [(r["item"], r["n_events"]) for r in top] == [("a", 1), ("b", 1)]
 
 
 def test_streaming_burn_rate_matches_batch_and_replays_exactly_once(

@@ -93,10 +93,17 @@ class EpochDirs:
 
     def prior_max(self, name: str, col: str):
         """Max of column ``col`` over every strictly-prior epoch of table
-        ``name`` (None when there is none), read in-process with pyarrow:
-        no Spark job, one column of each prior file."""
-        files = [f for d in self.prior(name) for f in glob.glob(os.path.join(d, "*.parquet"))]
+        ``name`` and this epoch's staged ``name``, if one is staged (None
+        when no row has a non-null value), read in-process with pyarrow:
+        no Spark job, one column of each file."""
+        dirs = self.prior(name) + [os.path.join(self.tmp, name)]
+        files = [f for d in dirs for f in glob.glob(os.path.join(d, "*.parquet"))]
         return pc.max(pq.read_table(files, columns=[col])[col]).as_py() if files else None
+
+    def staged_rows(self, name: str) -> int:
+        """Rows of the staged table ``name``, from its files' footers."""
+        files = glob.glob(os.path.join(self.tmp, name, "*.parquet"))
+        return sum(pq.read_metadata(f).num_rows for f in files)
 
     def publish(self, *names: str) -> None:
         """Move each staged ``name`` to ``<out>/<name>/epoch=N``, replacing

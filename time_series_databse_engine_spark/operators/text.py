@@ -100,7 +100,8 @@ def lang_id_ngram(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     each language by the fraction of bigrams found in its profile, argmax
     (ties → lexicographically first language).  Like :func:`lang_id` but
     n-gram-based — robust to languages without whitespace-delimited words.
-    One scan, zero shuffles.
+    One scan, and the guarded repartition of :func:`lang_id` (a no-op at
+    scale), so a one-file table does not score every row on one core.
 
     The lowered text and then the bigram array are each bound once per
     row by a one-element ``transform`` (lambdas get no CSE), and the
@@ -130,7 +131,7 @@ def lang_id_ngram(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         F.array(F.lower(F.col(text_col))),
         lambda t: F.element_at(F.transform(F.array(_bigrams(t)), _scores), 1),
     )
-    scored = df.select(F.col(id_col), F.inline(scores))
+    scored = _parallelize(df).select(F.col(id_col), F.inline(scores))
     best = F.greatest(*[F.col(f"score_{l}") for l in langs])
     guess = F.coalesce(*[F.when(F.col(f"score_{l}") == best, F.lit(l)) for l in langs])
     return scored.select(id_col, guess.alias("lang_guess"), best.alias("lang_score"))
@@ -297,7 +298,8 @@ def chunk_documents(
 ) -> DataFrame:
     """Split each document into fixed-size token chunks — the standard
     LLM-context-window chunking pass.  Pure array expressions (transform +
-    slice + explode): one scan, zero shuffles, output rows = Σ⌈tokens/size⌉.
+    slice + explode): one scan behind the guarded repartition of
+    :func:`lang_id` (a no-op at scale), output rows = Σ⌈tokens/size⌉.
     A UDTF variant exists for API parity (`ChunkDocumentsUDTF`); this
     expression form is the production path (JVM-side, codegen)."""
 
@@ -322,7 +324,7 @@ def chunk_documents(
     # chunk lambda that read split(text) itself would re-split per chunk
     toks = F.split(F.col(text_col), "\\s+")
     chunks = F.element_at(F.transform(F.array(toks), _chunks), 1)
-    return df.select(F.col(id_col), F.explode(chunks).alias("c")).select(
+    return _parallelize(df).select(F.col(id_col), F.explode(chunks).alias("c")).select(
         id_col, "c.chunk_idx", "c.chunk_text", "c.n_tokens"
     )
 

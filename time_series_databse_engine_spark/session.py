@@ -5,6 +5,18 @@ so the same code scales to a multi-executor cluster: AQE for runtime
 re-planning (skew joins, partition coalescing), UTC session time zone so
 event-time arithmetic matches the ANSI-SQL oracle, Arrow for any
 Python-side exchange, ZSTD Parquet as the storage codec.
+
+Streaming checkpoints (offsets, commits, source logs) are written through
+Spark's ``FileSystemBasedCheckpointFileManager``, not the default
+FileContext one.  Without the native Hadoop library, the local file
+system runs some file calls as child processes: the FileContext manager's
+rename forks ``readlink`` four times per metadata-log entry, on top of the
+``chmod`` that any local create forks (the temp file and its ``.crc``,
+whichever manager writes them).  The FileSystem manager writes the same
+temp file and publishes it with ``FileSystem.rename``, which forks
+nothing and is atomic on the local file system and on HDFS, so a log
+entry is still either absent or complete.  An object store without
+atomic rename would need the FileContext manager back.
 """
 
 from __future__ import annotations
@@ -62,6 +74,12 @@ def get_spark(
         # entries bounds the cache at a few hundred MB of driver heap
         # worst-case and covers the suite with headroom.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # see the module docstring: no forked readlink per log entry
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -594,11 +594,18 @@ def stream_decayed_topk(
     Two epoch-partitioned tables land under ``out_path``:
 
     * ``state/epoch=N/`` — the batch's per-key (mass, anchor_ms,
-      n_events), anchored at the batch's own max timestamp;
+      n_events), each key anchored at its OWN newest timestamp in the
+      batch (a window max over the keys, which shares the aggregation's
+      shuffle, so no driver collect finds a batch-wide anchor first);
     * ``topk/epoch=N/``  — the merged leaderboard after this epoch:
-      all strictly-prior states rescaled to the newest anchor, summed,
-      rounded to 6 dp, top-k with the keys as tiebreak — the batch
-      operator's exact output shape.
+      this and all strictly-prior states rescaled to the newest anchor
+      among them (read from the state files with pyarrow, no Spark job),
+      summed, rounded to 6 dp, top-k with the keys as tiebreak — the
+      batch operator's exact output shape.
+
+    An event with a null timestamp counts in ``n_events`` but adds no
+    mass, as in the batch operator.  An empty batch publishes nothing
+    and leaves no staging dir.
 
     Exactly-once by the :func:`stream_psi_drift` contract: strictly-
     prior state reads (later epochs' dirs exist during a replay) and
@@ -609,33 +616,31 @@ def stream_decayed_topk(
     if half_life_ms <= 0:
         raise ValueError(f"half_life_ms must be positive, got {half_life_ms}")
 
+    def decay(anchor, ts):
+        return F.pow(F.lit(0.5), (anchor - ts) / F.lit(float(half_life_ms)))
+
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         ep = EpochDirs(out_path, epoch_id)
-        anchor = batch_df.agg(F.max(ts_ms)).collect()[0][0]
-        if anchor is None:
-            return  # empty batch: no state, leaderboard unchanged
-        w = F.pow(
-            F.lit(0.5),
-            (F.lit(int(anchor)) - F.col(ts_ms)) / F.lit(float(half_life_ms)),
-        )
         state = (
-            batch_df.groupBy(*keys)
-            .agg(F.sum(w).alias("mass"), F.count("*").alias("n_events"))
-            .withColumn("anchor_ms", F.lit(int(anchor)))
+            batch_df.withColumn("anchor_ms", F.max(ts_ms).over(W.partitionBy(*keys)))
+            .groupBy(*keys)
+            .agg(
+                F.sum(decay(F.col("anchor_ms"), F.col(ts_ms))).alias("mass"),
+                F.count("*").alias("n_events"),
+                F.max("anchor_ms").alias("anchor_ms"),
+            )
         )
         allst = ep.with_prior("state", ep.staged("state", state))
-        # every state row of an epoch carries that epoch's anchor, so the
-        # prior files' anchor_ms column gives the newest anchor job-free
-        prior = ep.prior_max("state", "anchor_ms")
-        amax = int(anchor) if prior is None else max(int(anchor), prior)
-        rescale = F.pow(
-            F.lit(0.5),
-            (F.lit(int(amax)) - F.col("anchor_ms")) / F.lit(float(half_life_ms)),
-        )
+        if not ep.staged_rows("state"):
+            ep.publish()  # empty batch: drop the staging, publish nothing
+            return
+        amax = ep.prior_max("state", "anchor_ms")
         topk = (
             allst.groupBy(*keys)
             .agg(
-                F.round(F.sum(F.col("mass") * rescale), 6).alias("decayed_score"),
+                F.round(
+                    F.sum(F.col("mass") * decay(F.lit(amax), F.col("anchor_ms"))), 6
+                ).alias("decayed_score"),
                 F.sum("n_events").alias("n_events"),
             )
             .orderBy(

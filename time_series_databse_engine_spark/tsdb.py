@@ -124,8 +124,14 @@ class TimeSeriesStore:
 
     def _hashed(self, pts: DataFrame, n: int | None) -> DataFrame:
         """One hash shuffle on (bucket, metric): each task owns whole
-        bucket×metric groups, so no sampling pass is needed."""
-        n = n or self.spark.sparkContext.defaultParallelism
+        bucket×metric groups, so no sampling pass is needed.  With no
+        count ``n`` the shuffle has ``spark.sql.shuffle.partitions``
+        buckets and AQE coalesces them to its size target: a 5,000-row
+        stream epoch is one write task and one file per hour, where a
+        fixed count wrote up to ``n`` files per hour; a batch big enough
+        to fill every partition keeps all of them."""
+        if not n:
+            return pts.repartition(self.bucket_col, "metric")
         return pts.repartition(n, self.bucket_col, "metric")
 
     def _write(self, pts: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -305,6 +311,9 @@ class TimeSeriesStore:
         Cost vs :meth:`ingest`: identical distributed write work plus
         O(touched partitions) driver-side renames (:func:`commit.move_in`:
         per-epoch files are moved in, never replacing existing data).
+        Without ``target_partitions`` AQE sizes the shuffle
+        (:meth:`_hashed`), so a small epoch adds one file per hour it
+        touches; a given count is kept.
         """
         tmp = self._staging(f"epoch-{int(epoch_id)}")
         self._write(self._hashed(self._project(df), target_partitions), tmp)
