@@ -30,7 +30,7 @@ from time_series_databse_engine_spark.operators import (
     text as text_ops,
     timeseries as ts_ops,
 )
-from time_series_databse_engine_spark.operators._util import _shuffle_width, memo
+from time_series_databse_engine_spark.operators._util import _parallelize, _shuffle_width, memo
 from time_series_databse_engine_spark.sources import load_table
 
 # fixed query window: 2024-01-02 .. 2024-01-03 UTC (events span Jan 1-30)
@@ -903,10 +903,11 @@ def q_stratified_sample(spark, sf_dir):
 
 
 def q_winnow_fingerprint(spark, sf_dir):
-    """Rolling-hash (winnowing) document fingerprint — Schleimer et al. 2003.
-    Arrow fast path; the pure-expression form is equality-tested against it
-    (test_text) and both are hash-checked against the DuckDB oracle."""
-    return text_ops.winnow_fingerprint_pandas(_t(spark, sf_dir, "documents"))
+    """Rolling-hash (winnowing) document fingerprint — Schleimer et al. 2003,
+    through the one Arrow-batched implementation (text.winnow_fingerprint);
+    hash-checked against the DuckDB oracle, which test_text also replays on
+    planted edge-case docs."""
+    return text_ops.winnow_fingerprint(_t(spark, sf_dir, "documents"))
 
 
 def q_cosine_near_dup(spark, sf_dir):
@@ -1205,6 +1206,16 @@ def q_profile_incremental(spark, sf_dir):
     inc_a = profile_registers(o.filter(F.col("o_orderkey") % 2 == 0), _PROFILE_COLS)
     inc_b = profile_registers(o.filter(F.col("o_orderkey") % 2 != 0), _PROFILE_COLS)
     return merge_profiles(inc_a.unionByName(inc_b))
+
+
+def q_column_profile_fast(spark, sf_dir):
+    """The production profiler config: column_profile's one-scan HLL plan
+    with Spark-native ``xxhash64`` in place of the replayable md5
+    (profile.profile_registers docstring).  Rows-only: DuckDB has no
+    xxhash64, so column_profile is its oracle-checked twin."""
+    from time_series_databse_engine_spark.operators.profile import profile_table
+
+    return profile_table(_t(spark, sf_dir, "orders"), _PROFILE_COLS, hash_fn="xxhash64")
 
 
 def q_column_profile_exact(spark, sf_dir):
@@ -1893,10 +1904,11 @@ def q_interval_join_bucketed(spark, sf_dir):
 def q_hilbert_key(spark, sf_dir):
     """Hilbert-curve clustering key over events' (ts_ms, value) — same
     quantization as q_zorder_key, then the continuous-curve walk
-    (layout.hilbert_key: one aggregate fold over bit levels, integer
-    JVM expressions).  Tighter per-file rectangles than Morton at the
-    quadrant seams; the comparative skip test quantifies it.  Oracle:
-    recursive-CTE replay of the identical walk."""
+    (layout.hilbert_key: the Arrow-batched numpy xy→d walk, the one
+    implementation production layout jobs use).  Tighter per-file
+    rectangles than Morton at the quadrant seams; the comparative skip
+    test quantifies it.  Oracle: recursive-CTE replay of the identical
+    integer walk."""
     from time_series_databse_engine_spark.operators import layout as layout_ops
 
     ev = _t(spark, sf_dir, "events")
@@ -3139,7 +3151,7 @@ def q_cms_topk(spark, sf_dir):
     # the counter build and the distinct-item count run wide — inside
     # cms_topk the stream is already exploded and a repartition there
     # would sort-shuffle every token row (measured slower)
-    toks = dedup_ops._parallelize(docs).select(
+    toks = _parallelize(docs).select(
         F.explode(
             F.filter(F.split(F.lower(F.col("text")), "\\s+"), lambda t: t != "")
         ).alias("item")
@@ -3547,9 +3559,10 @@ def q_semantic_dedup_served(spark, sf_dir):
     at sf0.1, 157 at sf1, 469 at sf3), selected here by sf_dir.  Mean
     cell stays at the 128-row target everywhere, so the bench measures
     the CORRECT production recipe at each scale instead of a drifting
-    pin.  Past k=32 assignment switches to the BLAS pandas_udf path
-    (the interpreted fold is O(N·k·d)); the hash-gated scales keep the
-    fold for bit-exact oracle parity.  semantic_dedup's guard stays on:
+    pin.  semantic_dedup's guard counts the book, and past k=32 its
+    assignment switches to the BLAS pandas_udf path (the interpreted
+    fold is O(N·k·d)); the hash-gated scales keep the fold for
+    bit-exact oracle parity.  The guard also checks the corpus size:
     a corpus outgrowing ANY pin past 4× the target warns with the
     auto_n_cells re-train k; past 16× it refuses."""
     from time_series_databse_engine_spark.fixtures.kmeans_cells import cells_for
@@ -3559,10 +3572,7 @@ def q_semantic_dedup_served(spark, sf_dir):
     cells = spark.createDataFrame(
         [(cid, c) for cid, c in book], "cell_id long, cent array<double>"
     ).withColumn("cent_n", sim_ops.norm(F.col("cent")))
-    return sim_ops.semantic_dedup(
-        emb, threshold=0.3, cells=cells,
-        assign="auto" if len(book) <= 32 else "numpy",
-    )
+    return sim_ops.semantic_dedup(emb, threshold=0.3, cells=cells)
 
 
 def _semantic_dedup_served_oracle_sql() -> str:
@@ -4652,6 +4662,7 @@ REGISTRY: tuple[Query, ...] = (
     Query("maxsim_index_probe", q_maxsim_index_probe, True),
     Query("maxsim_index_append", q_maxsim_index_append, True),
     Query("maxsim_index_compacted", q_maxsim_index_compacted, True),
+    Query("column_profile_fast", q_column_profile_fast, True),
 )
 
 
@@ -4815,7 +4826,8 @@ def _hilbert_sql(bits: int = 16) -> str:
     """Quantize (ts_ms, value) exactly as _zorder_sql, then replay the
     classic Hilbert xy→d walk (accumulate s²·((3rx) XOR ry), rotate the
     frame) as a recursive CTE stepping s from 2^(bits−1) down to 0 —
-    integer-only, so it matches layout.hilbert_key's fold bit for bit."""
+    integer-only, so it matches layout.hilbert_key's numpy walk bit for
+    bit."""
     top = (1 << bits) - 1
     scale = f"{float(1 << bits):.1f}e0".replace(".0e0", "e0")
     return f"""

@@ -3,8 +3,10 @@
 Mirrors the reference benchmark (benchmark.py: 1 M sinusoid points, hot
 1-hour / cold 24-hour range queries, storage efficiency — BASELINE.md)
 plus this engine's headline analytical queries at $SPARK_GRAFT_SF_DIR:
-``BENCH_QUERIES``, the ``__spark_entry__.REGISTRY`` rows flagged ``bench``
-plus the bench-only overrides, each resolved by ``lookup()``.
+``BENCH_QUERIES``, the ``__spark_entry__.REGISTRY`` rows flagged ``bench``.
+The warm-up, the timed loop and ``--one`` all build a query through
+``__spark_entry__.queries()[name]``, so bench.py times exactly the code
+the oracle gate checks, and keeps no builders of its own.
 
 It measures through ``perfbench/harness.py`` and keeps no copy of it:
 nearest-rank ``percentile`` for the hot/cold rows, ``HostSampler`` for
@@ -64,7 +66,6 @@ import __spark_entry__ as entry_mod
 from perfbench.harness import HostSampler, SparkStats, percentile
 from time_series_databse_engine_spark import TimeSeriesStore, get_spark
 from time_series_databse_engine_spark.api import ingest_points, query_points
-from time_series_databse_engine_spark.operators import similarity as _sim
 from time_series_databse_engine_spark.operators._util import memo
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -74,85 +75,10 @@ N_POINTS = 1_000_000  # reference workload size (benchmark.py:11)
 START_MS = 1_700_000_000_000
 
 
-# Production twins timed in place of a registry builder, plus the one
-# bench-only name (column_profile_fast).  The two Σ|bucket|² ops run with
-# auto-sized bucket spaces here — the production path, which holds average
-# occupancy constant as data grows (similarity.auto_num_planes /
-# auto_n_cells; fixed sizes are kept in queries() for oracle parity, where
-# the SQL carries plane/cell literals).  This is what turned 13.7× / 7.4×
-# at 10× data into ~linear (SCALE.md "10× scale-up").
-def _near_dup_auto(spark, sf_dir):
-    emb = spark.read.parquet(sf_dir + "/embeddings.parquet")
-    return _sim.cosine_near_dup_lsh(emb, threshold=0.4, num_planes="auto", dim=64)
-
-
-def _semantic_dedup_auto(spark, sf_dir):
-    emb = spark.read.parquet(sf_dir + "/embeddings.parquet")
-    return _sim.semantic_dedup(emb, threshold=0.3, n_cells="auto")
-
-
-def _column_profile_fast(spark, sf_dir):
-    # the PRODUCTION profiler config: same one-scan HLL plan,
-    # Spark-native xxhash64 instead of the oracle's replayable
-    # md5 (profile.profile_registers docstring) — the
-    # column_profile row times the md5 oracle twin
-    from time_series_databse_engine_spark.operators.profile import (
-        profile_table,
-    )
-
-    o = spark.read.parquet(sf_dir + "/orders.parquet")
-    return profile_table(o, entry_mod._PROFILE_COLS, hash_fn="xxhash64")
-
-
-def _hilbert_key_fast(spark, sf_dir):
-    # production layout path: Arrow-batched numpy walk
-    # (layout.hilbert_key_pandas) — BIT-IDENTICAL to the
-    # expression form queries() keeps for the oracle (pinned by
-    # test_plans); the expression fold is interpreted-HOF-bound
-    from time_series_databse_engine_spark.operators import (
-        layout as layout_ops,
-    )
-    from time_series_databse_engine_spark.sources import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    mm = F.broadcast(
-        ev.agg(
-            F.min("ts_ms").alias("tlo"),
-            F.max("ts_ms").alias("thi"),
-            F.min("value").alias("vlo"),
-            F.max("value").alias("vhi"),
-        )
-    )
-    q = ev.crossJoin(mm).select(
-        "event_id",
-        layout_ops.quantize(F.col("ts_ms"), F.col("tlo"), F.col("thi"), 16).alias("qa"),
-        layout_ops.quantize(F.col("value"), F.col("vlo"), F.col("vhi"), 16).alias("qb"),
-    )
-    return q.select(
-        "event_id",
-        layout_ops.hilbert_key_pandas(F.col("qa"), F.col("qb"), 16).alias("hkey"),
-    )
-
-
-OVERRIDES = {
-    "cosine_near_dup_lsh": _near_dup_auto,
-    "semantic_dedup": _semantic_dedup_auto,
-    "column_profile_fast": _column_profile_fast,
-    "hilbert_key": _hilbert_key_fast,
-}
-
 # The timed queries: every registry row flagged ``bench``, in registry
-# order, then the overrides the registry does not know.
-BENCH_QUERIES = [q.name for q in entry_mod.REGISTRY if q.bench] + [
-    n for n in OVERRIDES if n not in entry_mod.queries()
-]
-
-
-def lookup(name: str):
-    """The one name -> builder lookup, the override first, then the
-    registry; the suite's warm-up, index builds and timed loop and
-    ``--one`` all time what it returns."""
-    return OVERRIDES[name] if name in OVERRIDES else entry_mod.queries()[name]
+# order.  A production variant worth timing is a registry row of its own
+# (as column_profile_fast is), never a builder kept here.
+BENCH_QUERIES = [q.name for q in entry_mod.REGISTRY if q.bench]
 
 # repeated-run latency distribution for the reference's hot/cold point
 # queries (benchmark.py:98-124 reports p99 over 100 runs; 40/20 runs keep
@@ -187,7 +113,7 @@ def warm_up(spark, names) -> dict[str, str]:
     errors = {}
     for name in names:
         try:
-            run_noop(lookup(name)(spark, WARM_SF_DIR))
+            run_noop(entry_mod.queries()[name](spark, WARM_SF_DIR))
         except Exception as e:
             errors[name] = repr(e)
     return errors
@@ -201,7 +127,7 @@ def time_query(spark, stats: SparkStats, name: str) -> tuple[float, dict]:
     spark.sparkContext.setJobGroup(name, name)
     host = HostSampler()
     t0 = time.perf_counter()
-    df = lookup(name)(spark, SF_DIR)
+    df = entry_mod.queries()[name](spark, SF_DIR)
     t1 = time.perf_counter()
     run_noop(df)
     t2 = time.perf_counter()
@@ -231,6 +157,7 @@ def stream_legs(spark, tmp: str, pts) -> dict[str, float]:
     drain (an index, a reference artifact), so the number is the
     steady-state per-epoch cost, not a build.  Sizes are the sf tables'
     own: small at sf0.1, so these are fixed-cost-per-epoch floors."""
+    from time_series_databse_engine_spark.operators.similarity import ivf_index_write
     from time_series_databse_engine_spark.operators.text import maxsim_index_write
     from time_series_databse_engine_spark.sources import load_table
     from time_series_databse_engine_spark.streaming import ingest as si
@@ -239,7 +166,7 @@ def stream_legs(spark, tmp: str, pts) -> dict[str, float]:
     ev = load_table(spark, SF_DIR, "events")
     emb = load_table(spark, SF_DIR, "embeddings")
     docs = load_table(spark, SF_DIR, "documents")
-    _sim.ivf_index_write(emb.filter(F.col("vec_id") % 2 == 0), tmp + "/maint_ann", n_cells=16)
+    ivf_index_write(emb.filter(F.col("vec_id") % 2 == 0), tmp + "/maint_ann", n_cells=16)
     maxsim_index_write(
         docs.filter(F.col("doc_id") % 2 == 0), tmp + "/maint_ms", dim=64, chunk_size=30
     )
@@ -518,7 +445,7 @@ def main():
         ):
             if nm not in BENCH_QUERIES:
                 continue
-            t, _ = timed(lambda: run_noop(lookup(nm)(spark, SF_DIR)))
+            t, _ = timed(lambda: run_noop(entry_mod.queries()[nm](spark, SF_DIR)))
             extra[f"{nm}_build_first_probe_sec"] = round(t, 3)
             extra[f"{nm}_files"] = _index_file_count(prefix)
         # the append index is the compacted index's pre-compaction state

@@ -33,6 +33,7 @@ def test_oracle_keys_subset_of_queries():
     rows_only = q - o
     assert rows_only <= {
         "simhash",            # xxhash64 — no cross-engine hash; anchored by simhash_md5
+        "column_profile_fast",  # xxhash64 HLL — anchored by column_profile (md5)
         "bpe_tokenize",       # iterative rank-priority merge — not SQL-expressible
         "pca_fit_project",    # driver eigensolve — not SQL-replayable
                               # (pca_project pins the committed basis and
@@ -177,16 +178,17 @@ def test_registry_matches_the_pinned_snapshot():
 
 
 def test_bench_list_resolves_through_the_shared_lookup():
-    """bench.py times the registry rows flagged ``bench`` plus its
-    bench-only override; every name must resolve to a builder through the
-    one lookup the warm-up, the timed loop and ``--one`` share."""
+    """bench.py times exactly the registry rows flagged ``bench``, in
+    registry order, and keeps no builders of its own: the production
+    profiler variant is a registry row, outside the driver window."""
     import bench
 
     names = bench.BENCH_QUERIES
+    assert names == [q.name for q in entry_mod.REGISTRY if q.bench]
     assert len(names) == len(set(names)) == 150
-    assert "column_profile_fast" in names
-    assert all(callable(bench.lookup(n)) for n in names)
-    assert bench.lookup("hilbert_key") is bench.OVERRIDES["hilbert_key"]
+    assert names[-1] == "column_profile_fast"
+    assert "column_profile_fast" not in list(entry_mod.queries())[:50]
+    assert not hasattr(bench, "OVERRIDES") and not hasattr(bench, "lookup")
 
 
 def _emit_line(monkeypatch, tmp_path, capsys, times, extra, layers=None):

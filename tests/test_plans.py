@@ -79,15 +79,19 @@ def test_lsh_self_join_reuses_exchange(spark, sf_dir):
 def test_scan_shaped_ops_have_zero_shuffles(spark, sf_dir):
     from time_series_databse_engine_spark.operators.sampling import deterministic_sample
     from time_series_databse_engine_spark.operators.text import (
+        chunk_documents,
         quality_score,
         redact_pii,
         winnow_fingerprint,
     )
-    from time_series_databse_engine_spark.plans import num_shuffle_exchanges
+    from time_series_databse_engine_spark.plans import num_shuffle_exchanges, num_shuffles
 
     docs = load_table(spark, sf_dir, "documents")
-    for op in (deterministic_sample, quality_score, redact_pii, winnow_fingerprint):
+    for op in (deterministic_sample, quality_score, redact_pii, winnow_fingerprint, chunk_documents):
         assert num_shuffle_exchanges(op(docs)) == 0, op.__name__
+    # num_shuffle_exchanges does not match a round-robin Exchange; chunking
+    # costs less than the guarded repartition's shuffle, so it has none
+    assert num_shuffles(chunk_documents(docs)) == 0
 
 
 def test_cosine_topk_streams_candidates_once(spark, sf_dir):
@@ -366,10 +370,11 @@ def test_zorder_key_n_generalizes_two_dim_and_interleaves(spark):
 
 def test_hilbert_key_matches_reference_walk_and_prunes_at_least_as_well(spark, sf_dir, tmp_path):
     """(1) layout.hilbert_key equals the classic xy→d reference walk on a
-    grid sweep; (2) consecutive keys are ADJACENT cells (the continuity
-    Morton lacks); (3) on the same skewed workload as the z-order test,
-    the Hilbert layout skips at least as many files for a value-band
-    scan."""
+    grid sweep, on random 16-bit points and on null coordinates (a null
+    counts as 0, NOT null propagation), and refuses bits=0; (2)
+    consecutive keys are ADJACENT cells (the continuity Morton lacks);
+    (3) on the same skewed workload as the z-order test, the Hilbert
+    layout skips at least as many files for a value-band scan."""
     from time_series_databse_engine_spark.operators.layout import (
         hilbert_key,
         quantize,
@@ -398,6 +403,15 @@ def test_hilbert_key_matches_reference_walk_and_prunes_at_least_as_well(spark, s
         for r in grid.select("x", "y", hilbert_key(F.col("x"), F.col("y"), bits=4).alias("d")).collect()
     }
     assert got == {(x, y): xy2d(16, x, y) for x in range(16) for y in range(16)}
+    pts = [((x * 2654435761) % 65536, (x * 40503) % 65536) for x in range(500)]
+    pts += [(None, 3), (7, None), (None, None)]
+    wide = spark.createDataFrame(pts, "x long, y long").select(
+        "x", "y", hilbert_key(F.col("x"), F.col("y"), bits=16).alias("d")
+    )
+    for r in wide.collect():
+        assert r.d == xy2d(1 << 16, r.x or 0, r.y or 0), (r.x, r.y, r.d)
+    with pytest.raises(ValueError):
+        hilbert_key(F.col("x"), F.col("y"), bits=0)
     inv = {d: xy for xy, d in got.items()}
     assert all(
         abs(inv[d][0] - inv[d + 1][0]) + abs(inv[d][1] - inv[d + 1][1]) == 1
@@ -1110,36 +1124,6 @@ def test_pca_project_expr_compiles_under_codegen_and_matches_unrolled(
     got = {(r.vec_id, r.dim_idx): r.value for r in rows}
     for r in unrolled.collect():
         assert got[(r.vec_id, r.dim_idx)] == r.value
-
-
-def test_hilbert_key_pandas_bit_identical_incl_nulls(spark):
-    """The Arrow fast path equals the expression form value-for-value on
-    a grid sweep plus random 16-bit points, and treats nulls the same
-    way (the expression's when/otherwise fold reads null bits as 0, so
-    the fast path must too — NOT null propagation)."""
-    from time_series_databse_engine_spark.operators.layout import (
-        hilbert_key,
-        hilbert_key_pandas,
-    )
-
-    rows = [(x, y) for x in range(16) for y in range(16)]
-    rows += [((x * 2654435761) % 65536, (x * 40503) % 65536) for x in range(500)]
-    rows += [(None, 3), (7, None), (None, None)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    for bits in (4, 16):
-        sub = df if bits == 16 else df.filter("x < 16 and y < 16 or x is null or y is null")
-        both = sub.select(
-            "x", "y",
-            hilbert_key(F.col("x"), F.col("y"), bits=bits).alias("expr_d"),
-            hilbert_key_pandas(F.col("x"), F.col("y"), bits=bits).alias("fast_d"),
-        ).collect()
-        assert len(both) > 0
-        for r in both:
-            assert r.expr_d == r.fast_d, (r.x, r.y, bits, r.expr_d, r.fast_d)
-    import pytest
-
-    with pytest.raises(ValueError):
-        hilbert_key_pandas(F.col("x"), F.col("y"), bits=0)
 
 
 def test_domain_cap_map_side_window_group_limit(spark):

@@ -88,17 +88,42 @@ def test_redact_pii_planted_fixtures(spark):
     assert [got[i].was_redacted for i in (1, 2, 3, 4)] == [True, True, True, False]
 
 
-def test_winnow_pandas_fast_path_matches_expression(spark, sf_dir):
-    from time_series_databse_engine_spark.operators.text import (
-        winnow_fingerprint,
-        winnow_fingerprint_pandas,
-    )
-    from time_series_databse_engine_spark.sources import load_table
+def test_winnow_oracle_replay_matches_on_planted_docs(spark):
+    """The DuckDB oracle of the winnow_fingerprint query must agree with
+    text.winnow_fingerprint on the docs where tokenizing and windowing go
+    wrong first: an empty text (one empty token), fewer than k tokens
+    (one shingle of all of them), fewer shingles than a window, repeated
+    shingles (equal window minima collapse), and case and whitespace
+    runs the lowered ``\\s+`` split must fold."""
+    import duckdb
+    import pandas as pd
 
-    docs = load_table(spark, sf_dir, "documents")
-    a = {tuple(r) for r in winnow_fingerprint(docs).collect()}
-    b = {tuple(r) for r in winnow_fingerprint_pandas(docs).collect()}
-    assert a == b
+    import __spark_entry__ as entry_mod
+    from time_series_databse_engine_spark.operators.text import winnow_fingerprint
+
+    rows = [
+        (1, ""),                                   # empty text
+        (2, "two words"),                          # fewer than k tokens
+        (3, "one two three four"),                 # 2 shingles < one window
+        (4, "a b c a b c a b c a b c a b c"),     # repeated shingles
+        (5, "Mixed  CASE\tand   tabs mixed case"),  # case + whitespace runs
+        (6, "the quick brown fox jumps over the lazy dog again and again"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {tuple(r) for r in winnow_fingerprint(df).collect()}
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    sql = entry_mod.oracle_sql()["winnow_fingerprint"]
+    want = {
+        (int(r.doc_id), int(r.n_fp), r.fingerprint)
+        for r in con.execute(sql).df().itertuples()
+    }
+    assert got == want
+    fp = {r[0]: r for r in got}
+    assert fp[1][1] == fp[2][1] == fp[3][1] == 1
+    # every window of 4 shingles holds all 3 distinct ones: one minimum
+    assert fp[4][1] == 1
 
 
 def test_lang_id_ngram_planted_fixtures(spark):

@@ -14,8 +14,7 @@ import warnings
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ._util import _parallelize  # noqa: F401  (canonical home: _util; re-exported
-# here because similarity/text/profile/pipeline and tests import it from dedup)
+from ._util import _parallelize
 
 
 def fingerprint(col, normalize: bool = False) -> F.Column:

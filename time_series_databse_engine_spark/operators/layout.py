@@ -11,10 +11,10 @@ stats become tight in EVERY interleaved dimension at once, and a
 selective filter on any of them skips most files (the Delta/Iceberg
 ``OPTIMIZE ZORDER BY`` layout, built here from primitives).
 
-All expressions are static shift/and/or chains — whole-stage-codegen
-friendly, no UDFs — and every float step is written in the fixed order
-the SQL oracle replays (subtract in native type, one division, one
-multiply, floor, clamp).
+The Z-order keys are static shift/and/or chains — whole-stage-codegen
+friendly, no UDFs; :func:`hilbert_key` is one Arrow-batched numpy walk.
+Every float step is written in the fixed order the SQL oracle replays
+(subtract in native type, one division, one multiply, floor, clamp).
 """
 
 from __future__ import annotations
@@ -121,45 +121,14 @@ def hilbert_key(a, b, bits: int = 16) -> F.Column:
 
     Classic xy→d walk (public domain, e.g. Wikipedia "Hilbert curve"):
     from the top bit level down, accumulate ``s²·((3·rx) XOR ry)`` and
-    rotate/reflect the quadrant frame.  The per-level state (x, y, d) is
-    carried through ONE ``aggregate`` fold over the static level array —
-    pure integer JVM expressions, association-free, no UDF; the oracle
-    replays the identical walk in a recursive CTE."""
-    if not 1 <= bits <= 31:
-        raise ValueError("bits must be in [1, 31]")
-    levels = F.array(*[F.lit(1 << i) for i in range(bits - 1, -1, -1)])
-    init = F.struct(
-        a.cast("long").alias("x"), b.cast("long").alias("y"), F.lit(0).cast("long").alias("d")
-    )
-
-    def step(acc, s):
-        rx = F.when(acc["x"].bitwiseAND(s) > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        ry = F.when(acc["y"].bitwiseAND(s) > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        d = acc["d"] + s * s * ((F.lit(3) * rx).bitwiseXOR(ry))
-        # rotate/reflect only when ry == 0; when rx == 1 also point-reflect
-        xf = F.when(rx == 1, s - 1 - acc["x"]).otherwise(acc["x"])
-        yf = F.when(rx == 1, s - 1 - acc["y"]).otherwise(acc["y"])
-        x2 = F.when(ry == 0, yf).otherwise(acc["x"])
-        y2 = F.when(ry == 0, xf).otherwise(acc["y"])
-        return F.struct(x2.alias("x"), y2.alias("y"), d.alias("d"))
-
-    return F.aggregate(levels, init, step)["d"]
-
-
-def hilbert_key_pandas(a, b, bits: int = 16) -> F.Column:
-    """Arrow-batched fast path of :func:`hilbert_key` — bit-identical
-    output (same xy→d walk, same integer algebra), measured 8.5× faster
-    (8.77 s → 1.03 s, 600k-row isolated run at sf1, bits=16)
-    because the per-level fold runs vectorized numpy int64 ops instead of
-    Catalyst's interpreted higher-order-function evaluator (HOFs never
-    enter whole-stage codegen; the fold is 16 levels × ~8 expression
-    nodes interpreted per ROW, where numpy pays ~128 vectorized ops per
-    BATCH).  A null coordinate contributes 0 bits at every level — the
-    expression form's ``when(x & s > 0, 1).otherwise(0)`` sends null
-    comparisons down the otherwise branch, so null behaves as 0 there
-    too; bit-identity including that case is test-pinned.  Use this in
-    production layout jobs; keep :func:`hilbert_key` where a plan must
-    stay JVM-only or an engine-replayable oracle matters."""
+    rotate/reflect the quadrant frame.  It runs as an Arrow-batched
+    ``pandas_udf`` over numpy int64 arrays: ~128 vectorized ops per
+    BATCH, where an ``aggregate`` fold over the levels would interpret
+    16 levels × ~8 expression nodes per ROW (higher-order functions never
+    enter whole-stage codegen; such a fold measured 8.5× slower, 8.77 s →
+    1.03 s on a 600k-row isolated run at sf1, bits=16).  A null
+    coordinate contributes 0 bits at every level.  The oracle replays the
+    same integer walk in a recursive CTE."""
     if not 1 <= bits <= 31:
         raise ValueError("bits must be in [1, 31]")
     from pyspark.sql.functions import pandas_udf

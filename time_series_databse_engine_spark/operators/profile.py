@@ -194,7 +194,7 @@ def profile_table_exact(df: DataFrame, cols: list[str]) -> DataFrame:
     """Exact profile via one wide aggregate (n_cols ``countDistinct`` →
     Catalyst Expand ×(n_cols+1)) unpivoted to per-column rows.  The
     oracle/cross-check twin of :func:`profile_table`."""
-    from .dedup import _parallelize
+    from ._util import _parallelize
 
     # the Expand ×(n_cols+1) multiplies every input row before the
     # partial aggregate; a single-file local table arrives as ONE scan

@@ -278,29 +278,13 @@ def ivf_topk(
     )
 
 
-def auto_num_planes(n_rows: int, target_bucket: int = 128) -> int:
-    """Plane count that holds average sign-LSH bucket occupancy at
-    ``target_bucket`` as the corpus grows: ``2^planes ≈ n/target``.
-
-    Candidate-pair volume inside a bucket is quadratic in occupancy
-    (Σ|bucket|² ≈ n²/2^planes), so a FIXED plane count turns a 10×
-    corpus into 100× pair work — the one superlinear scaling the r4
-    10× bench measurement caught (cosine_near_dup_lsh 13.7× at 10×
-    data).  Holding occupancy constant makes pair work ≈ n·target —
-    linear — at the documented recall trade (more planes → more pairs
-    split across buckets; at the production threshold 0.9 sign
-    agreement is near-total and recall stays ~1, see SCALE.md).
-    """
-    import math
-
-    return max(1, math.ceil(math.log2(max(2.0, n_rows / target_bucket))))
-
-
 def auto_n_cells(n_rows: int, target_cell: int = 128) -> int:
-    """Cell count that holds average SemDeDup cell size at ``target_cell``
-    — the same Σ|cell|² ≈ n·target linearization as
-    :func:`auto_num_planes`, and what Abbas et al. 2023 do by fixing
-    cluster count proportional to corpus size (100k clusters for LAION).
+    """Cell count that holds average SemDeDup cell size at ``target_cell``:
+    within-cell pair work is Σ|cell|² ≈ n·target, linear in n, which is
+    what Abbas et al. 2023 do by fixing cluster count proportional to
+    corpus size (100k clusters for LAION).  Sizes the committed
+    per-scale codebooks (tools/gen_kmeans_cells.py) and the re-train k
+    that :func:`semantic_dedup`'s guard names.
     """
     import math
 
@@ -505,7 +489,7 @@ def ann_params_for(
 def cosine_near_dup_lsh(
     embeddings: DataFrame,
     threshold: float = 0.9,
-    num_planes: int | str = 4,
+    num_planes: int = 4,
     dim: int = 64,
     seed: int = 42,
     id_col: str = "vec_id",
@@ -526,16 +510,7 @@ def cosine_near_dup_lsh(
     stress threshold of 0.5 on isotropic vectors; at the production
     threshold (0.9) true pairs agree on nearly all signs and bucket
     recall is ~1.
-
-    ``num_planes="auto"`` sizes the bucket space from a corpus count so
-    average occupancy stays constant as data grows (see
-    :func:`auto_num_planes`) — the fixed-plane form is kept for
-    oracle-parity queries where the SQL carries plane literals.  The
-    count is one cheap column-pruned job, amortized over the quadratic
-    work it prevents.
     """
-    if num_planes == "auto":
-        num_planes = auto_num_planes(embeddings.select(id_col).count())
     planes = random_planes(num_planes, dim, seed)
     # L2 norm is a per-VECTOR quantity: compute it once here, before the
     # self-join, instead of letting cosine() re-fold both norms inside
@@ -567,11 +542,10 @@ def cosine_near_dup_lsh(
 def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.5,
-    n_cells: int | str = 16,
+    n_cells: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cells: DataFrame | None = None,
-    assign: str = "auto",
     guard: bool = True,
     target_cell: int = 128,
 ) -> DataFrame:
@@ -598,12 +572,6 @@ def semantic_dedup(
     :func:`cosine_near_dup_lsh`'s buckets; SemDeDup accepts it for the
     n²→Σ|cell|² cut).
 
-    ``n_cells="auto"`` sizes the codebook from a corpus count so average
-    cell size stays constant as data grows (:func:`auto_n_cells` — the
-    Σ|cell|² linearization; Abbas et al. scale cluster count with the
-    corpus for the same reason).  Fixed ``n_cells`` is kept for
-    oracle-parity queries whose SQL enumerates the sampled cells.
-
     Served-codebook guard (``guard=True``, VERDICT r9 #1): a PINNED
     codebook trained at one corpus scale silently turns quadratic when
     the corpus outgrows it — the measured hazard is a k=8 pin at 10×
@@ -623,9 +591,16 @@ def semantic_dedup(
     caller-chosen k (stale-pin drift can't apply) or when the counts
     themselves would re-trigger an expensive training lineage — both
     cases should say so in a comment.
+
+    Assignment runs the exact interpreted fold for codebooks of up to 32
+    cells (oracle parity bit for bit) and the BLAS pandas_udf
+    (:func:`assign_nearest_cell_np`) past that, where the fold's
+    O(N·k·d) interpretation dominates the pipeline.  The size is
+    ``n_cells`` for sampled cells and the guard's count for a pinned
+    codebook; with ``guard=False`` nothing counts the codebook (that
+    would run its training lineage at plan-build time), so it folds.
     """
-    if n_cells == "auto":
-        n_cells = auto_n_cells(embeddings.select(id_col).count(), target_cell)
+    k = n_cells if cells is None else 0
     if cells is not None and guard:
         import warnings
 
@@ -655,14 +630,7 @@ def semantic_dedup(
         "nrm", norm(F.col("v"))
     )
     cents = cells if cells is not None else hash_sampled_cells(embeddings, n_cells, id_col, vec_col)
-    # assignment path: the exact interpreted fold for small codebooks
-    # (oracle-parity bit-for-bit), the BLAS pandas_udf past k≈32 where
-    # the fold's per-element interpretation dominates the whole pipeline
-    # (see assign_nearest_cell_np).  "auto" decides from n_cells; a
-    # caller passing a trained ``cells`` codebook states the path
-    # explicitly (counting it here would trigger its whole training
-    # lineage at plan-build time)
-    if assign == "numpy" or (assign == "auto" and cells is None and n_cells > 32):
+    if k > 32:
         a = assign_nearest_cell_np(e, cents, "v")
     else:
         a = assign_nearest_cell(e, cents, F.col("v"), F.col("nrm"))
@@ -701,7 +669,6 @@ def kmeans_lloyd(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "auto",
 ) -> DataFrame:
     """Spherical k-means, ``iters`` Lloyd rounds, fully deterministic:
     initial centroids are the ``k`` vectors with the smallest
@@ -737,7 +704,7 @@ def kmeans_lloyd(
         # same (sim DESC, cid ASC) argmax the old rank-1 window computed,
         # as a broadcast-array fold: one row in, one row out.  Past k≈32
         # the interpreted fold dominates the whole pipeline (O(N·k·d)
-        # interpreter steps — see assign_nearest_cell_np), so "auto"
+        # interpreter steps — see assign_nearest_cell_np), so it
         # switches to the BLAS pandas_udf there; training is offline
         # (never hash-gated), and the 6-dp centroid quantization absorbs
         # the two paths' float-summation-order difference except at
@@ -746,7 +713,7 @@ def kmeans_lloyd(
             F.col("cid").alias("cell_id"), F.col("c").alias("cent")
         ).withColumn("cent_n", norm(F.col("cent")))
         pts = points.withColumn("_vn", norm(F.col("v")))
-        if assign == "numpy" or (assign == "auto" and k > 32):
+        if k > 32:
             out = assign_nearest_cell_np(pts, codebook, "v")
         else:
             out = assign_nearest_cell(pts, codebook, F.col("v"), F.col("_vn"))
@@ -999,7 +966,6 @@ def _assign_and_encode(
     dim: int,
     id_col: str,
     vec_col: str,
-    encode: str = "auto",
     ks: int | None = None,
 ) -> DataFrame:
     """The ONE corpus pass shared by :func:`ivfpq_topk`,
@@ -1011,15 +977,14 @@ def _assign_and_encode(
     bit-identical.  Encode path: exact interpreted fold at small
     codebooks (oracle parity), BLAS mapInPandas past m*ks ~ 64 where
     the fold's interpretation dominates (measured 2.7-3.0x at sf0.1 —
-    see pq_encode_np); mirrors semantic_dedup's assign="auto"."""
+    see pq_encode_np); mirrors semantic_dedup's k > 32 switch."""
     c = embeddings.select(
         F.col(id_col).alias("cand_id"), as_double(vec_col).alias("cvec")
     ).withColumn("cn", norm(F.col("cvec")))
     c_assigned = assign_nearest_cell(c, cents, F.col("cvec"), F.col("cn"))
-    if ks is None and encode == "auto":
+    if ks is None:
         ks = cb.count()  # k-row sidecar — a trivial job, callers may pass ks
-    use_np = encode == "numpy" or (encode == "auto" and m * (ks or 0) > 64)
-    enc_fn = pq_encode_np if use_np else pq_encode
+    enc_fn = pq_encode_np if m * ks > 64 else pq_encode
     return enc_fn(
         c_assigned, cb, m, dim, id_col="cand_id", vec_col="cvec", carry=("cell_id",)
     )
@@ -1063,7 +1028,6 @@ def ivfpq_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode: str = "auto",
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011 §IV): the production ANN shape — IVF
     (body shared with the persisted index via :func:`_assign_and_encode`
@@ -1093,7 +1057,7 @@ def ivfpq_topk(
     # single-file local scan serializes it on one core (measured ~1.3 s
     # single-task at sf0.1); guarded repartition, no-op at scale
     enc = _assign_and_encode(
-        _parallelize(embeddings), cents, cb, m, dim, id_col, vec_col, encode, ks=ks
+        _parallelize(embeddings), cents, cb, m, dim, id_col, vec_col, ks=ks
     )
     q_probes = _probe_cells(queries, cents, n_probe, id_col, vec_col)
 

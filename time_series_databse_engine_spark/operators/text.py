@@ -10,8 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from . import index_maintenance as _im
-from ._util import forget, memo
-from .dedup import _parallelize
+from ._util import _parallelize, forget, memo
 
 TOKEN_RE = "[^\\s]+"          # whitespace tokens
 WORD_RE = "[A-Za-z]+"          # alphabetic words
@@ -209,60 +208,15 @@ def winnow_fingerprint(
 
     Hash = md5 of the shingle text (lexicographic min), chosen so the DuckDB
     oracle reproduces values exactly; at scale swap in ``xxhash64`` — the
-    winnowing algebra is unchanged.  Everything is per-row array expressions:
-    one scan, zero shuffles.
+    winnowing algebra is unchanged.  Tokens are the lowered text split on
+    whitespace runs, as Spark's ``split(lower(text), '\\s+')``: an empty or
+    null text is one empty token, and a doc of fewer than k tokens is one
+    shingle of all of them.
 
-    The shingle-hash array is bound as a lambda variable (a one-element
-    ``transform``) before the winnow step references it: referencing the
-    raw expression from inside the winnow lambda re-evaluates every md5
-    per window position — O(m²) per doc, measured 232 s vs 6 s at sf0.1.
-    Higher-order functions evaluate interpreted (no codegen); for the hot
-    path see :func:`winnow_fingerprint_pandas` (identical output, ~6×
-    faster via Arrow-batched Python).
-    """
-    toks = F.split(F.lower(F.col(text_col)), "\\s+")
-    hs = F.element_at(
-        F.transform(
-            F.array(toks),  # bind the tokens once, for the same reason
-            lambda ts: F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(ts) - (k - 1), F.lit(1))),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(ts, i, k))),
-            ),
-        ),
-        1,
-    )
-    fp = F.element_at(
-        F.transform(
-            F.array(hs),  # bind once; hsx below is the materialized array
-            lambda hsx: F.array_sort(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.greatest(F.size(hsx) - (w - 1), F.lit(1))),
-                        lambda j: F.array_min(F.slice(hsx, j, w)),
-                    )
-                )
-            ),
-        ),
-        1,
-    )
-    return df.select(
-        F.col(id_col),
-        F.size(fp).alias("n_fp"),
-        F.concat_ws("|", fp).alias("fingerprint"),
-    )
-
-
-def winnow_fingerprint_pandas(
-    df: DataFrame,
-    k: int = 3,
-    w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arrow-batched fast path of :func:`winnow_fingerprint` — bit-identical
-    output (same md5/split/lower algebra), ~6× faster because the winnow
-    loop runs compiled C (hashlib) instead of interpreted Catalyst HOFs.
-    Still one scan, zero shuffles; parallelism = input partitions."""
+    Arrow-batched ``mapInPandas``: the winnow loop runs hashlib (C) per
+    batch.  An expression form of the same algebra (nested higher-order
+    lambdas, interpreted per row with no codegen) measured ~6× slower.
+    One scan, zero shuffles; parallelism = input partitions."""
     out_schema = f"{id_col} long, n_fp int, fingerprint string"
 
     def run(batches):
@@ -298,8 +252,10 @@ def chunk_documents(
 ) -> DataFrame:
     """Split each document into fixed-size token chunks — the standard
     LLM-context-window chunking pass.  Pure array expressions (transform +
-    slice + explode): one scan behind the guarded repartition of
-    :func:`lang_id` (a no-op at scale), output rows = Σ⌈tokens/size⌉.
+    slice + explode): one scan, zero shuffles, output rows = Σ⌈tokens/size⌉.
+    No guarded repartition: the chunking costs less per row than the
+    round-robin shuffle that would spread it (callers that do more per
+    chunk, like :func:`maxsim_topk`'s vectors, parallelize first).
     A UDTF variant exists for API parity (`ChunkDocumentsUDTF`); this
     expression form is the production path (JVM-side, codegen)."""
 
@@ -324,7 +280,7 @@ def chunk_documents(
     # chunk lambda that read split(text) itself would re-split per chunk
     toks = F.split(F.col(text_col), "\\s+")
     chunks = F.element_at(F.transform(F.array(toks), _chunks), 1)
-    return _parallelize(df).select(F.col(id_col), F.explode(chunks).alias("c")).select(
+    return df.select(F.col(id_col), F.explode(chunks).alias("c")).select(
         id_col, "c.chunk_idx", "c.chunk_text", "c.n_tokens"
     )
 

@@ -108,7 +108,7 @@ def clean_crawl(
     Returns (id, n_tokens, quality, visible_ppm) for survivors.
     """
     from .operators import web as web_ops
-    from .operators.dedup import _parallelize
+    from .operators._util import _parallelize
 
     # strip_html's per-row expression work replays once per downstream
     # branch (quality, survivors, keepers) — a single-file scan would
