@@ -368,10 +368,47 @@ def test_zorder_key_n_generalizes_two_dim_and_interleaves(spark):
     assert len(seen3) == len(rows)
 
 
+def _hilbert_xy2d(order, x, y):
+    """The classic xy→d Hilbert walk on an order×order grid."""
+    d, s = 0, order // 2
+    while s > 0:
+        rx = 1 if (x & s) > 0 else 0
+        ry = 1 if (y & s) > 0 else 0
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:
+            if rx == 1:
+                x, y = s - 1 - x, s - 1 - y
+            x, y = y, x
+        s //= 2
+    return d
+
+
+def test_hilbert_key_pandas_bit_identical_incl_nulls(spark):
+    """The Arrow walk behind layout.hilbert_key equals the reference walk
+    value-for-value on a grid sweep plus random 16-bit points, and reads
+    a null coordinate as 0 (NOT null propagation); bits=0 is refused."""
+    from time_series_databse_engine_spark.operators.layout import hilbert_key
+
+    rows = [(x, y) for x in range(16) for y in range(16)]
+    rows += [((x * 2654435761) % 65536, (x * 40503) % 65536) for x in range(500)]
+    rows += [(None, 3), (7, None), (None, None)]
+    df = spark.createDataFrame(rows, "x long, y long")
+    for bits in (4, 16):
+        sub = df if bits == 16 else df.filter("x < 16 and y < 16 or x is null or y is null")
+        got = sub.select(
+            "x", "y", hilbert_key(F.col("x"), F.col("y"), bits=bits).alias("d")
+        ).collect()
+        assert len(got) > 0
+        for r in got:
+            want = _hilbert_xy2d(1 << bits, r.x or 0, r.y or 0)
+            assert r.d == want, (r.x, r.y, bits, r.d, want)
+    with pytest.raises(ValueError):
+        hilbert_key(F.col("x"), F.col("y"), bits=0)
+
+
 def test_hilbert_key_matches_reference_walk_and_prunes_at_least_as_well(spark, sf_dir, tmp_path):
     """(1) layout.hilbert_key equals the classic xy→d reference walk on a
-    grid sweep, on random 16-bit points and on null coordinates (a null
-    counts as 0, NOT null propagation), and refuses bits=0; (2)
+    grid sweep (random points and nulls: the test above); (2)
     consecutive keys are ADJACENT cells (the continuity Morton lacks);
     (3) on the same skewed workload as the z-order test, the Hilbert
     layout skips at least as many files for a value-band scan."""
@@ -382,19 +419,6 @@ def test_hilbert_key_matches_reference_walk_and_prunes_at_least_as_well(spark, s
         zorder_write,
     )
 
-    def xy2d(order, x, y):
-        d, s = 0, order // 2
-        while s > 0:
-            rx = 1 if (x & s) > 0 else 0
-            ry = 1 if (y & s) > 0 else 0
-            d += s * s * ((3 * rx) ^ ry)
-            if ry == 0:
-                if rx == 1:
-                    x, y = s - 1 - x, s - 1 - y
-                x, y = y, x
-            s //= 2
-        return d
-
     grid = spark.createDataFrame(
         [(x, y) for x in range(16) for y in range(16)], "x long, y long"
     )
@@ -402,16 +426,7 @@ def test_hilbert_key_matches_reference_walk_and_prunes_at_least_as_well(spark, s
         (r.x, r.y): r.d
         for r in grid.select("x", "y", hilbert_key(F.col("x"), F.col("y"), bits=4).alias("d")).collect()
     }
-    assert got == {(x, y): xy2d(16, x, y) for x in range(16) for y in range(16)}
-    pts = [((x * 2654435761) % 65536, (x * 40503) % 65536) for x in range(500)]
-    pts += [(None, 3), (7, None), (None, None)]
-    wide = spark.createDataFrame(pts, "x long, y long").select(
-        "x", "y", hilbert_key(F.col("x"), F.col("y"), bits=16).alias("d")
-    )
-    for r in wide.collect():
-        assert r.d == xy2d(1 << 16, r.x or 0, r.y or 0), (r.x, r.y, r.d)
-    with pytest.raises(ValueError):
-        hilbert_key(F.col("x"), F.col("y"), bits=0)
+    assert got == {(x, y): _hilbert_xy2d(16, x, y) for x in range(16) for y in range(16)}
     inv = {d: xy for xy, d in got.items()}
     assert all(
         abs(inv[d][0] - inv[d + 1][0]) + abs(inv[d][1] - inv[d + 1][1]) == 1
