@@ -13,6 +13,44 @@ from time_series_databse_engine_spark.plans import (
 from time_series_databse_engine_spark.sources import load_table
 
 
+def _guard(spark) -> str:
+    """``operators._util._parallelize``'s exchange as the plan prints it:
+    ``repartition(defaultParallelism)``, a round-robin shuffle."""
+    n = spark.sparkContext.defaultParallelism
+    return f"Exchange RoundRobinPartitioning({n}), REPARTITION_BY_NUM"
+
+
+def test_shuffle_exchange_counter_sees_each_exchange_kind(spark):
+    """One plan per exchange kind: every shuffle counts once, the
+    broadcast and the reused exchange not at all."""
+    from time_series_databse_engine_spark.plans import (
+        has_reused_exchange,
+        num_shuffle_exchanges,
+        num_shuffles,
+        shuffle_exchanges,
+    )
+
+    r = spark.range(100)
+    kinds = {
+        "hashpartitioning": r.repartition(4, "id"),
+        "rangepartitioning": r.repartitionByRange(4, "id"),
+        "RoundRobinPartitioning": r.repartition(4),
+        "SinglePartition": r.agg(F.sum("id")),
+    }
+    for kind, df in kinds.items():
+        assert shuffle_exchanges(df) == [kind], kind
+    bcast = r.join(F.broadcast(spark.range(10)), "id")
+    assert num_shuffle_exchanges(bcast) == 0 and num_shuffles(bcast) == 1
+    # a self-join over one aggregate: AQE computes its exchange once and
+    # the other side reads it back; the final plan prints the initial one
+    # below it, which is not counted either
+    g = r.groupBy((F.col("id") % 10).alias("k")).count()
+    reused = g.alias("a").join(g.alias("b").hint("shuffle_merge"), "k")
+    reused.collect()
+    assert has_reused_exchange(reused)
+    assert shuffle_exchanges(reused) == ["hashpartitioning"]
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     df = li.filter(F.col("l_quantity") > 30).select("l_orderkey", "l_quantity")
@@ -84,27 +122,39 @@ def test_scan_shaped_ops_have_zero_shuffles(spark, sf_dir):
         redact_pii,
         winnow_fingerprint,
     )
-    from time_series_databse_engine_spark.plans import num_shuffle_exchanges, num_shuffles
+    from time_series_databse_engine_spark.plans import (
+        num_shuffle_exchanges,
+        num_shuffles,
+        shuffle_exchanges,
+        simple_plan,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    for op in (deterministic_sample, quality_score, redact_pii, winnow_fingerprint, chunk_documents):
+    for op in (deterministic_sample, redact_pii, winnow_fingerprint, chunk_documents):
         assert num_shuffle_exchanges(op(docs)) == 0, op.__name__
-    # num_shuffle_exchanges does not match a round-robin Exchange; chunking
-    # costs less than the guarded repartition's shuffle, so it has none
+    # chunking costs less than the guarded repartition's shuffle, so it has
+    # no exchange of any kind
     assert num_shuffles(chunk_documents(docs)) == 0
+    # quality_score's one exchange is _parallelize's guard, spreading the
+    # one-file documents table over the cores before its per-row scoring
+    scored = quality_score(docs)
+    assert shuffle_exchanges(scored) == ["RoundRobinPartitioning"]
+    assert _guard(spark) in simple_plan(scored)
 
 
 def test_cosine_topk_streams_candidates_once(spark, sf_dir):
     from time_series_databse_engine_spark.operators.similarity import cosine_topk
-    from time_series_databse_engine_spark.plans import num_shuffle_exchanges, simple_plan
+    from time_series_databse_engine_spark.plans import shuffle_exchanges, simple_plan
 
     emb = load_table(spark, sf_dir, "embeddings")
     df = cosine_topk(emb, emb.filter(F.col("vec_id") < 3))
     p = simple_plan(df)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p  # query set broadcast, big side streamed
-    # the only shuffle is the per-query top-k rank over scored triples
-    assert num_shuffle_exchanges(df) == 1
+    # two shuffles: the per-query top-k rank over scored triples, and
+    # _parallelize's guard spreading the one-file candidate side once
+    assert shuffle_exchanges(df) == ["hashpartitioning", "RoundRobinPartitioning"]
+    assert _guard(spark) in p
 
 
 def test_tfidf_single_corpus_exchange(spark, sf_dir):
@@ -172,7 +222,7 @@ def test_ivf_assignment_never_multiplies_corpus(spark, sf_dir):
     not plan a per-centroid row explosion (crossJoin with the 16-row
     centroid table followed by a rank window on cand_id)."""
     from time_series_databse_engine_spark.operators.similarity import ivf_topk
-    from time_series_databse_engine_spark.plans import num_shuffle_exchanges, simple_plan
+    from time_series_databse_engine_spark.plans import shuffle_exchanges, simple_plan
 
     emb = load_table(spark, sf_dir, "embeddings")
     df = ivf_topk(emb, emb.filter("vec_id < 5"), k=5)
@@ -183,7 +233,12 @@ def test_ivf_assignment_never_multiplies_corpus(spark, sf_dir):
 
     window_nodes = re.findall(r"[+:]- Window ", p)
     assert len(window_nodes) <= 2
-    assert num_shuffle_exchanges(df) <= 6
+    # final top-k rank, _parallelize's guard on the one-file candidate
+    # side, query probe rank; the codebook is a top-k, not a range sort
+    assert shuffle_exchanges(df) == [
+        "hashpartitioning", "RoundRobinPartitioning", "hashpartitioning"
+    ]
+    assert _guard(spark) in p
 
 
 def test_mad_anomaly_single_series_exchange(spark, sf_dir):

@@ -192,6 +192,17 @@ def test_read_ignores_hidden_files_asides_and_staging(spark, three_hours):
     assert_parity(store, 0, 3 * H)
     out = query_points(store, 0, 3 * H)
     assert [p["timestamp"] for p in out["points"]] == [t for _, t, _ in before]
+    # stray names under the bucket column, each a copy of hour 1: a bucket
+    # dir is spelled str(b), as every writer spells it, so none is read
+    strays = ["01", "+1", " 1", "1_0", "1.0", "", "abc", "__HIVE_DEFAULT_PARTITION__"]
+    for stray in strays:
+        shutil.copytree(part, os.path.join(store.path, "hour_bucket=" + stray))
+    n_listed = len(os.listdir(store.path))
+    # a range of fewer buckets than the listing has names looks each one
+    # up; a wider one parses the listing: both read hours 0-2 only
+    assert 4 < n_listed < 21
+    for start, end in [(0, 3 * H), (-1, 3 * H - 1), (-H, 20 * H), (-100 * H, 100 * H)]:
+        assert _rows(store.read_points(start, end)) == before, (start, end)
 
 
 def test_garbage_data_file_in_queried_hour_raises(three_hours):
@@ -232,3 +243,21 @@ def test_ingest_into_fresh_path_then_read(spark, tmp_path):
     assert resp["points_ingested"] == 1
     assert query_points(store, 0, 10)["points"] == [{"timestamp": 5, "value": 1.0}]
     assert store.query_range(0, 10).count() == 1
+
+
+def test_null_timestamp_dir_is_skipped_by_reads_and_expire(spark, tmp_path):
+    """Spark files a null ``ts_ms`` under ``hour_bucket=__HIVE_DEFAULT_PARTITION__``:
+    it lies in no range and has no age, so the Arrow read and ``expire``
+    pass it by, while ``stats`` counts it as ``points()`` does."""
+    H = 3_600_000
+    store = TimeSeriesStore(spark, str(tmp_path / "s"))
+    store.ingest(_df(spark, [("m", 5, 1.0), ("m", None, 2.0)]), target_partitions=2)
+    assert os.path.isdir(os.path.join(store.path, "hour_bucket=__HIVE_DEFAULT_PARTITION__"))
+    for start, end in [(0, H), (-10 * H, 10 * H), (0, 0)]:
+        assert_parity(store, start, end)
+    assert query_points(store, 0, H)["points"] == [{"timestamp": 5, "value": 1.0}]
+    stats = store.stats()
+    assert (stats["partitions"], stats["files"], stats["rows"]) == (2, 2, 2)
+    assert store.expire(2 * H) == 1
+    assert store.points().count() == 1
+    assert _rows(store.read_points(-10 * H, 10 * H)) == []

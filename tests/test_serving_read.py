@@ -92,7 +92,12 @@ def _write_store(root, layout):
     """A store written straight with Arrow, ``ROW_GROUP`` rows per row
     group: per bucket one file sorted by (metric, ts_ms) — the writers'
     order — and, in the first bucket, a second file in shuffled order,
-    whose row groups' ts ranges overlap."""
+    whose row groups' ts ranges overlap.  The last bucket has a second
+    file in ts order whose timestamps repeat across metrics, in
+    descending metric order, with a null metric and null values: its
+    ``ts_ms`` never decreases, yet its rows still need the sort.  Its
+    last row has a null ``ts_ms``, which its row group's statistics
+    count."""
     col, width = TimeSeriesStore.LAYOUTS[layout]
     step = width // 40
     files = {}
@@ -104,12 +109,18 @@ def _write_store(root, layout):
         )
     rows = [("a", 3 + 5 * i, float(-i)) for i in range(30)]
     files[(0, "shuffled")] = rows[::3] + rows[1::3] + rows[2::3]
+    files[(1, "ties")] = [
+        (m, width + (2 * j + 1) * step, v)
+        for j in range(5)
+        for m, v in (("b", float(j)), (None, None), ("a", -float(j) if j % 2 else None))
+    ] + [("a", None, 7.0)]  # a null timestamp: in no range, so never read
     for (b, name), rows in files.items():
         part = os.path.join(root, f"{col}={b}")
         os.makedirs(part, exist_ok=True)
         m, t, v = zip(*rows)
         pq.write_table(
-            pa.table({"metric": m, "ts_ms": pa.array(t, pa.int64()), "value": v}),
+            pa.table({"metric": pa.array(m, pa.string()), "ts_ms": pa.array(t, pa.int64()),
+                      "value": pa.array(v, pa.float64())}),
             os.path.join(part, f"part-{name}.parquet"),
             row_group_size=ROW_GROUP,
         )
@@ -139,7 +150,11 @@ def test_row_group_pruning_keeps_every_row_in_range(spark, tmp_path, layout, mon
     ranges += [(lo + 1, hi - 1) for lo, hi in groups]  # inside one group
     ranges += [(a, b) for a, b in zip(edges[::5], edges[7::5])]  # across edges
     ranges += [(hi, lo2) for (_, hi), (lo2, _) in zip(groups, groups[1:])]  # group to group
+    # one group wholly inside, the next only partly
+    ranges += [(lo, hi2 - 1) for (lo, _), (_, hi2) in zip(groups, groups[1:])]
     ranges += [(min(edges), max(edges))]
+    # only the rows of one timestamp shared by three metrics
+    ranges += sorted({(t, t) for m, t, _ in rows if m is None})
     shapes = [(None, None), (["a"], None), (["b", "zz"], None), (None, 1), (None, 3),
               (["a"], ROW_GROUP + 2), (None, 2 * ROW_GROUP - 1)]
     for i, (start, end) in enumerate(ranges):

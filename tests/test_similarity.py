@@ -274,6 +274,28 @@ def test_vectorized_cell_assignment_matches_fold(spark):
     assert fold == fast and len(fold) == emb.count()
 
 
+def test_hash_sampled_cells_is_a_top_k_not_a_sort(spark, sf_dir):
+    """The codebook is the n ids with the smallest md5(string(id)), taken
+    with a k-heap TakeOrderedAndProject: no range exchange and no global
+    sort of the corpus, whatever the norm column adds to the projection."""
+    import hashlib
+
+    from time_series_databse_engine_spark.operators.similarity import hash_sampled_cells
+    from time_series_databse_engine_spark.plans import shuffle_exchanges, simple_plan
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cells = hash_sampled_cells(emb, 16)
+    p = simple_plan(cells)
+    assert "TakeOrderedAndProject(limit=16" in p
+    assert "rangepartitioning" not in p and not shuffle_exchanges(cells)
+    ids = [r.vec_id for r in emb.select("vec_id").collect()]
+    want = sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:16]
+    got = cells.collect()
+    assert sorted(r.cell_id for r in got) == sorted(want)
+    for r in got:
+        assert r.cent_n == math.sqrt(sum(x * x for x in r.cent))
+
+
 def test_auto_bucket_sizing_holds_occupancy_constant(spark):
     """auto_n_cells scales the codebook with N so Σ|cell|² stays ~linear
     (the fix for the superlinear 10× bench measurement); at the

@@ -78,9 +78,12 @@ def query_points(
 
 def _pylist(col: pa.ChunkedArray) -> list:
     """``col.to_pylist()``, value for value and type for type, built from
-    one numpy array instead of an Arrow scalar per value: nulls are
-    filled with 0 for the conversion (so an int column stays ``int`` and
-    no NaN appears), then set back to ``None``."""
+    one numpy array instead of an Arrow scalar per value.  A column with
+    no nulls converts as it is; in one with nulls they are filled with 0
+    for the conversion (so an int column stays ``int`` and no NaN
+    appears), then set back to ``None``."""
+    if not col.null_count:
+        return col.to_numpy().tolist()
     out = col.fill_null(0).to_numpy().tolist()
     for i in np.flatnonzero(col.is_null().to_numpy()):
         out[i] = None

@@ -111,12 +111,21 @@ def hash_sampled_cells(
     (ordering by raw id would draw every cell from one corner of the
     keyspace), a k-heap TakeOrderedAndProject, never a full sort.  Norms
     precomputed per centroid.  Swap in trained :func:`kmeans_lloyd`
-    centroids in production."""
+    centroids in production.
+
+    The norm is taken of the vector column itself, in the one projection:
+    a second projection reading ``cent`` is not collapsed into the first
+    (it would evaluate ``cent`` twice), and the top-k strategy matches a
+    limit over at most one projection over the sort, so the plan would fall
+    back to a range exchange and a global sort of the whole corpus."""
     return (
         embeddings.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(n_cells)
-        .select(F.col(id_col).alias("cell_id"), as_double(vec_col).alias("cent"))
-        .withColumn("cent_n", norm(F.col("cent")))
+        .select(
+            F.col(id_col).alias("cell_id"),
+            as_double(vec_col).alias("cent"),
+            norm(as_double(vec_col)).alias("cent_n"),
+        )
     )
 
 

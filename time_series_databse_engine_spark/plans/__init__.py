@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import DataFrame
 
@@ -63,12 +64,27 @@ def num_shuffles(df: DataFrame) -> int:
     return simple_plan(df).count("Exchange")
 
 
-def num_shuffle_exchanges(df: DataFrame) -> int:
-    """Shuffle exchanges only — excludes BroadcastExchange (cheap dim-side
-    move) and ReusedExchange (free)."""
-    import re
+_SHUFFLE = re.compile(
+    r"(?:^|- )Exchange (hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)",
+    re.M,
+)
 
-    return len(re.findall(r"\bExchange (hash|range|rounds|SinglePartition)", simple_plan(df)))
+
+def shuffle_exchanges(df: DataFrame) -> list[str]:
+    """The partitioning of each shuffle exchange in the plan that runs, in
+    plan order: ``hashpartitioning``, ``rangepartitioning``,
+    ``RoundRobinPartitioning`` (``repartition(n)``) or ``SinglePartition``.
+    A BroadcastExchange (the small side moved whole) and a ReusedExchange
+    (one exchange's output read again, free) are not shuffles; only a node
+    that is itself an Exchange counts, not the exchange a ReusedExchange
+    line names.  Once AQE has run the query, the initial plan printed under
+    its final plan is not counted."""
+    return _SHUFFLE.findall(simple_plan(df).split("== Initial Plan ==")[0])
+
+
+def num_shuffle_exchanges(df: DataFrame) -> int:
+    """Count of :func:`shuffle_exchanges`."""
+    return len(shuffle_exchanges(df))
 
 
 def has_reused_exchange(df: DataFrame) -> bool:

@@ -152,17 +152,29 @@ class TimeSeriesStore:
         """Sibling staging dir ``<store>.<kind>-tmp`` (swept by :meth:`vacuum`)."""
         return self.path.rstrip("/") + f".{kind}-tmp"
 
-    def _partitions(self) -> list[tuple[int, str]]:
-        """(bucket, dir name) of every ``<bucket_col>=<b>`` dir in the
-        table, unordered; none for a missing store."""
-        if not os.path.isdir(self.path):
+    def _listing(self) -> list[str]:
+        """The names in the table's root dir; none for a missing store."""
+        try:
+            return os.listdir(self.path)
+        except (FileNotFoundError, NotADirectoryError):
             return []
+
+    def _partitions(self, names: list[str] | None = None) -> list[tuple[int, str]]:
+        """(bucket, dir name) of every bucket dir among ``names`` (default:
+        the table's listing), unordered.  A bucket dir is named
+        ``<bucket_col>=<b>`` with ``b`` spelled as ``str(b)``, the name every
+        writer gives it.  Any other ``<bucket_col>=`` name holds no bucket
+        and is skipped: Spark files a null timestamp under
+        ``__HIVE_DEFAULT_PARTITION__``, and such a point lies in no range
+        and has no age."""
         prefix = self.bucket_col + "="
-        return [
-            (int(entry.split("=", 1)[1]), entry)
-            for entry in os.listdir(self.path)
-            if entry.startswith(prefix)
-        ]
+        out = []
+        for entry in self._listing() if names is None else names:
+            if entry.startswith(prefix):
+                b = _canonical_int(entry[len(prefix):])
+                if b is not None:
+                    out.append((b, entry))
+        return out
 
     def _swap(self, tmp: str, touched=()) -> None:
         commit.swap_partitions(tmp, self.path, self.bucket_col, touched)
@@ -505,9 +517,13 @@ class TimeSeriesStore:
         (O(metadata)), row count from parquet footer statistics (Spark's
         count(*) over parquet reads footers, not data).  A files/partition
         ratio creeping up says "compact"; bytes/row says how the encoding
-        is doing."""
+        is doing.  Every ``<bucket_col>=`` dir counts, the null-timestamp
+        dir that :meth:`_partitions` skips included, as its rows count in
+        :meth:`points`."""
         n_parts = n_files = n_bytes = 0
-        for _, entry in self._partitions():
+        for entry in self._listing():
+            if not entry.startswith(self.bucket_col + "="):
+                continue
             n_parts += 1
             pdir = os.path.join(self.path, entry)
             for fname in os.listdir(pdir):
@@ -558,7 +574,8 @@ class TimeSeriesStore:
         ``before_ms``.  Pure partition-directory removal — O(expired
         partitions) metadata work, zero data scanned, exactly how TTL must
         work at 100 TB (a filtering rewrite would read the whole table).
-        Returns the number of partitions dropped."""
+        Returns the number of partitions dropped.  The null-timestamp dir
+        has no age and is kept (:meth:`_partitions`)."""
         # bucket b covers [b·H, (b+1)·H): expired iff (b+1)·H <= before_ms
         cutoff_bucket = before_ms // self.bucket_ms - 1
         dropped = 0
@@ -659,25 +676,39 @@ class TimeSeriesStore:
         shard files in range, engine/insight.cpp:26-49) without a Spark
         job per call.
 
-        Reads the files Spark's file index would: the ``<bucket>=<b>`` dirs
-        in [start, end]'s buckets, ascending, minus hidden names (``_*``,
-        ``.*``, ``*._COPYING_``).  Each file is opened with
-        ``pq.ParquetFile``; only its row groups whose ``ts_ms`` min/max
-        overlaps [start, end] are decoded (:func:`_read_file`).  A bucket
-        holds exactly the timestamps [b·bucket_ms, (b+1)·bucket_ms), so the
-        walk stops after the bucket that fills ``limit``.  No cache: every
-        call lists the directories again, so a read sees every earlier
-        write.  A read is not isolated from a write it overlaps: it may
-        return part of a batch that is still committing, or fail on an
-        hour a rewrite is swapping.  A missing store reads as empty; an
-        unreadable file raises."""
+        Reads the files Spark's file index would: the bucket dirs
+        (:meth:`_partitions`) in [start, end]'s buckets, ascending, minus
+        hidden names (``_*``, ``.*``, ``*._COPYING_``).  When the range
+        spans fewer buckets than the table's root lists names, each
+        bucket's dir name is looked up in the listing; otherwise every
+        listed name is parsed.  Both select the same dirs, because a bucket
+        dir has one spelling.  Each file is opened with ``pq.ParquetFile``;
+        only its row groups whose ``ts_ms`` min/max overlaps [start, end]
+        are decoded (:func:`_read_file`).  A bucket holds exactly the
+        timestamps [b·bucket_ms, (b+1)·bucket_ms), so the walk stops after
+        the bucket that fills ``limit``.  The rows come back in Spark's
+        ``orderBy("ts_ms", "metric")`` order, nulls first.  They are sorted
+        only when their ``ts_ms`` is not already strictly increasing (no
+        row read has a null ``ts_ms``), as one sorted file of one metric,
+        or several such files over disjoint times in bucket order, read:
+        with no two timestamps equal, the metric order cannot matter.
+        No cache: every call lists the directories again, so a read sees
+        every earlier write.  A read is not isolated from a write it
+        overlaps: it may return part of a batch that is still committing,
+        or fail on an hour a rewrite is swapping.  A missing store reads as
+        empty; an unreadable file raises."""
         if limit is not None and limit < 0:
             raise ValueError(f"limit must be >= 0, got {limit}")
         lo, hi = start_ms // self.bucket_ms, end_ms // self.bucket_ms
-        dirs = sorted((b, name) for b, name in self._partitions() if lo <= b <= hi)
+        names = self._listing()
+        if hi - lo + 1 < len(names):
+            listed = set(names)
+            dirs = [n for b in range(lo, hi + 1) if (n := f"{self.bucket_col}={b}") in listed]
+        else:
+            dirs = [n for b, n in sorted(self._partitions(names)) if lo <= b <= hi]
         wanted = pa.array(metrics, pa.string()) if metrics else None
         parts, rows = [], 0
-        for _, name in dirs:
+        for name in dirs:
             if limit is not None and rows >= limit:
                 break
             for e in os.scandir(os.path.join(self.path, name)):
@@ -686,10 +717,12 @@ class TimeSeriesStore:
                     parts.append(t)
                     rows += t.num_rows
         out = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
-        # Spark's orderBy: ascending, nulls first
-        out = out.sort_by(
-            [("ts_ms", "ascending"), ("metric", "ascending")], null_placement="at_start"
-        )
+        ts = out.column("ts_ms").to_numpy()
+        if not (ts[1:] > ts[:-1]).all():
+            # Spark's orderBy: ascending, nulls first
+            out = out.sort_by(
+                [("ts_ms", "ascending"), ("metric", "ascending")], null_placement="at_start"
+            )
         return out if limit is None else out.slice(0, limit)
 
     # --------------------------------------------------------------- rollups
@@ -793,22 +826,62 @@ def _read_file(path: str, start_ms: int, end_ms: int, metrics: pa.Array | None) 
     """One data file's rows with ``start_ms <= ts_ms <= end_ms`` (and
     ``metric`` in ``metrics``, when given), as :data:`ARROW_SCHEMA`.  Row
     groups whose ``ts_ms`` min/max lies outside the range are not read; a
-    group without min/max statistics is read and filtered."""
+    group without min/max statistics is read and filtered.
+
+    The row groups are decoded on the calling thread, and the rest of the
+    work each file needs is read off its metadata: a file already in
+    :data:`ARROW_SCHEMA`'s types is not cast, and when every row group read
+    has statistics that put its ``ts_ms`` min and max inside the range and
+    count no null ``ts_ms``, and no metric was asked for, every row read is
+    kept and nothing is filtered.  Otherwise the ``ts_ms`` mask is built
+    with numpy on the column's values, or with Arrow when the column holds
+    a null (a null timestamp is in no range)."""
     with pq.ParquetFile(path) as f:
         meta = f.metadata
         ts_col = f.schema_arrow.get_field_index("ts_ms")
-        groups = []
+        groups, inside = [], True
         for g in range(meta.num_row_groups):
             st = meta.row_group(g).column(ts_col).statistics
-            if st is None or not st.has_min_max or (st.min <= end_ms and st.max >= start_ms):
+            if st is None or not st.has_min_max:
                 groups.append(g)
-        t = f.read_row_groups(groups, columns=ARROW_SCHEMA.names)
-    t = t.select(ARROW_SCHEMA.names).cast(ARROW_SCHEMA)
+                inside = False
+            elif st.min <= end_ms and st.max >= start_ms:
+                groups.append(g)
+                inside = (
+                    inside
+                    and start_ms <= st.min
+                    and st.max <= end_ms
+                    and st.has_null_count
+                    and st.null_count == 0
+                )
+        # one thread: a file holds a few row groups in range, where
+        # handing its column chunks to Arrow's pool costs more CPU than the
+        # decode it spreads
+        t = f.read_row_groups(groups, columns=ARROW_SCHEMA.names, use_threads=False)
+    t = t.select(ARROW_SCHEMA.names)
+    if not t.schema.equals(ARROW_SCHEMA):
+        t = t.cast(ARROW_SCHEMA)
+    if inside and metrics is None:
+        return t
     ts = t.column("ts_ms")
-    keep = pc.and_(pc.greater_equal(ts, start_ms), pc.less_equal(ts, end_ms))
+    if ts.null_count:
+        keep = pc.and_(pc.greater_equal(ts, start_ms), pc.less_equal(ts, end_ms))
+    else:
+        a = ts.to_numpy()
+        keep = pa.array((a >= start_ms) & (a <= end_ms))
     if metrics is not None:
         keep = pc.and_(keep, pc.is_in(t.column("metric"), value_set=metrics))
     return t.filter(keep)
+
+
+def _canonical_int(s: str) -> int | None:
+    """``int(s)`` when ``s`` is spelled as ``str(int(s))``; None for any
+    other string (``01``, ``+1``, ``1_0``, `` 1``, ``__HIVE_DEFAULT_PARTITION__``)."""
+    try:
+        b = int(s)
+    except ValueError:
+        return None
+    return b if str(b) == s else None
 
 
 def _parquet_or_none(reader, path: str) -> DataFrame | None:

@@ -27,10 +27,11 @@ from time_series_databse_engine_spark.plans import (
 HEADER = """# PLANS — physical-plan audit of every driver query
 
 Generated by `tools/plan_audit.py` (re-run after operator changes).
-Columns: shuffle exchanges in the static plan (broadcast/reused excluded),
-broadcast join present, cartesian product present (bad), filters pushed to
-the Parquet scan, whole-stage codegen in the final plan, runtime exchange
-reuse (AQE), Arrow/Python stage present.
+Columns: shuffle exchanges in the static plan (hash, range, round-robin and
+single; broadcast/reused excluded), broadcast join present, cartesian
+product present (bad), filters pushed to the Parquet scan, whole-stage
+codegen in the final plan, runtime exchange reuse (AQE), Arrow/Python
+stage present.
 
 | query | shuffles | broadcast | cartesian | pushed filters | codegen | reuse | python |
 |---|---|---|---|---|---|---|---|
@@ -82,9 +83,10 @@ def main() -> None:
             " repartition + pair distinct; the band exchange is computed once"
             " and AQE-reused for both join sides), `ivf_ann_topk` (cell"
             " assignment is a zero-exchange broadcast-array argmax fold —"
-            " the remaining exchanges are the 16-row centroid limit/"
-            " collect, the 5-row query probe rank, and the final top-k"
-            " rank over probed candidates),"
+            " the 16-row codebook is a TakeOrderedAndProject top-k with no"
+            " exchange; the three exchanges are `_parallelize`'s round-robin"
+            " spread of the one-file candidate side, the 5-row query probe"
+            " rank, and the final top-k rank over probed candidates),"
             " `minhash_jaccard_est` (banding + two pair⋈signature joins),"
             " `clean_corpus` (the composed end-to-end pipeline — it inherits"
             " the LSH banding exchanges plus one doc-keyed gate join;"
@@ -109,7 +111,7 @@ def main() -> None:
             " them at runtime (ReusedExchange, test-asserted); the real"
             " data-sized exchanges are ONE cell-keyed repartition reused by"
             " both self-join sides plus the id-keyed distinct/anti-join;"
-            " the rest are 16-row centroid limits),"
+            " each 16-row codebook is a top-k with no exchange),"
             " `resample_1m_expr` (series-keyed bounds agg + grid-union"
             " window + the dedup pre-step — each keyed by series, grid"
             " rows are |series|×buckets, never the raw corpus),"
