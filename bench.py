@@ -94,6 +94,19 @@ def timed(fn):
     return time.perf_counter() - t0, out
 
 
+def timed_calls(fn, n: int) -> tuple[list[float], list[float]]:
+    """Wall and process-CPU seconds of each of ``fn(0)`` .. ``fn(n - 1)``.
+    On a shared host wall time moves with steal; CPU time is what the
+    serving benchmark bounds."""
+    wall, cpu = [], []
+    for k in range(n):
+        t0, c0 = time.perf_counter(), time.process_time()
+        fn(k)
+        cpu.append(time.process_time() - c0)
+        wall.append(time.perf_counter() - t0)
+    return wall, cpu
+
+
 def pct_extras(prefix: str, secs: list[float], ps=(50, 99)) -> dict[str, float]:
     """``{prefix}_p50``, ``{prefix}_p99``: nearest-rank percentiles of
     ``secs``, in seconds to 0.1 ms."""
@@ -373,32 +386,36 @@ def main():
         extra.update(pct_extras("query_cold_24h", cold_ts))
         # the same ranges through the serving path the reference measures
         # (api.query_points: Arrow read, 10,000-point cap); the rows above
-        # stay the Spark DataFrame path
-        api_hot = [
-            timed(lambda: query_points(store, hot_lo, hot_lo + 3_600_000))[0]
-            for _ in range(HOT_RUNS)
-        ]
+        # stay the Spark DataFrame path.  api_*_cpu: the same calls'
+        # process CPU time
+        api_hot, api_hot_cpu = timed_calls(
+            lambda _: query_points(store, hot_lo, hot_lo + 3_600_000), HOT_RUNS
+        )
         extra.update(pct_extras("api_hot_1h", api_hot))
-        api_cold = [
-            timed(lambda: query_points(store, START_MS, START_MS + 86_400_000))[0]
-            for _ in range(COLD_RUNS)
-        ]
+        extra.update(pct_extras("api_hot_1h_cpu", api_hot_cpu))
+        api_cold, api_cold_cpu = timed_calls(
+            lambda _: query_points(store, START_MS, START_MS + 86_400_000), COLD_RUNS
+        )
         extra.update(pct_extras("api_cold_24h", api_cold, ps=(99,)))
+        extra.update(pct_extras("api_cold_24h_cpu", api_cold_cpu, ps=(99,)))
         # the serving write: 1,000-point batches after the last point
         # through api.ingest_points (Arrow append), into a copy of the
         # store so every other row keeps reading the store it always read
         api_store = TimeSeriesStore(spark, tmp + "/points_api")
         shutil.copytree(store.path, api_store.path)
-        api_ingest = []
-        for k in range(INGEST_RUNS):
-            first = N_POINTS + k * 1_000
-            batch = [
+        batches = [
+            [
                 {"metric": "cpu.load.avg", "timestamp": START_MS + i * 1000,
                  "value": 50.0 + 20.0 * math.sin(i / 100.0)}
                 for i in range(first, first + 1_000)
             ]
-            api_ingest.append(timed(lambda: ingest_points(api_store, batch))[0])
+            for first in range(N_POINTS, N_POINTS + INGEST_RUNS * 1_000, 1_000)
+        ]
+        api_ingest, api_ingest_cpu = timed_calls(
+            lambda k: ingest_points(api_store, batches[k]), INGEST_RUNS
+        )
         extra.update(pct_extras("api_ingest_1k", api_ingest, ps=(50,)))
+        extra.update(pct_extras("api_ingest_1k_cpu", api_ingest_cpu, ps=(50,)))
 
         # --- concurrent hot queries: the multi-tenant dashboard shape.
         # Spark's scheduler interleaves independent actions from multiple

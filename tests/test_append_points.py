@@ -139,6 +139,35 @@ def test_api_writes_match_spark_ingest(spark, tmp_path, layout):
                 assert sorted(got) == sorted(want)
 
 
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_null_timestamp_is_filed_as_spark_files_it(spark, tmp_path, layout):
+    """A null ``ts_ms`` goes under ``__HIVE_DEFAULT_PARTITION__`` on both
+    writers, so it hides none of its batch's valid points."""
+    width = TimeSeriesStore.LAYOUTS[layout][1]
+    batches = [
+        [("m", None, 1.0), ("m", 5, 2.0)],
+        [("m", None, 3.0), ("n", None, 4.0), ("m", width + 1, 5.0), (None, 6, None)],
+        [("m", None, 6.0)],
+    ]
+    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"), bucket=layout)
+    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"), bucket=layout)
+    for pts in batches:
+        spark_store.ingest(_df(spark, pts), target_partitions=2)
+        m, t, v = zip(*pts)
+        api_store.append_points(list(m), list(t), list(v))
+        assert _part_dirs(api_store) == _part_dirs(spark_store)
+        assert _stored(api_store) == _stored(spark_store)
+    col = api_store.bucket_col
+    assert _part_dirs(api_store) == [f"{col}=0", f"{col}=1", f"{col}=__HIVE_DEFAULT_PARTITION__"]
+    want = [("m", 5, 2.0), (None, 6, None), ("m", width + 1, 5.0)]
+    for store in (api_store, spark_store):
+        assert _read(store, 0, 2 * width) == want
+        assert _read(store, 0, 10) == want[:2]
+        got = store.query_range(0, 2 * width).select("metric", "ts_ms", "value").collect()
+        assert [tuple(r) for r in got] == want
+    assert api_store.points().count() == sum(map(len, batches))
+
+
 def test_arrow_file_is_no_larger_than_spark_file(spark, tmp_path):
     """A 1,000-point single-hour API batch, the serving benchmark's write."""
     rng = random.Random(7)

@@ -198,8 +198,9 @@ def test_read_ignores_hidden_files_asides_and_staging(spark, three_hours):
     for stray in strays:
         shutil.copytree(part, os.path.join(store.path, "hour_bucket=" + stray))
     n_listed = len(os.listdir(store.path))
-    # a range of fewer buckets than the listing has names looks each one
-    # up; a wider one parses the listing: both read hours 0-2 only
+    # a range of no more buckets than the root has subdirectories opens
+    # each bucket dir by name; a wider one parses the listing: both read
+    # hours 0-2 only
     assert 4 < n_listed < 21
     for start, end in [(0, 3 * H), (-1, 3 * H - 1), (-H, 20 * H), (-100 * H, 100 * H)]:
         assert _rows(store.read_points(start, end)) == before, (start, end)
@@ -261,3 +262,54 @@ def test_null_timestamp_dir_is_skipped_by_reads_and_expire(spark, tmp_path):
     assert store.expire(2 * H) == 1
     assert store.points().count() == 1
     assert _rows(store.read_points(-10 * H, 10 * H)) == []
+
+
+def _stat_with_nlink(store, nlink):
+    """``os.stat`` reporting ``nlink`` links for the store's root."""
+    real = os.stat
+
+    def stat(path, *a, **k):
+        st = real(path, *a, **k)
+        if os.fspath(path) != store.path:
+            return st
+        return os.stat_result((st.st_mode, st.st_ino, st.st_dev, nlink, *st[4:10]))
+
+    return stat
+
+
+def test_bucket_dirs_by_name_and_by_listing_read_the_same(spark, three_hours, monkeypatch):
+    """A range of no more buckets than the root has subdirectories opens
+    its bucket dirs by name and never lists the root; with a link count
+    that counts no subdirectories (btrfs reports 1) every read lists it.
+    Both return the rows Spark returns."""
+    store, H = three_hours, 3_600_000
+    ingest_points(store, [{"metric": "m", "timestamp": 7 * H + 3, "value": 1.0}])  # a gap
+    narrow = [(0, 3 * H), (H, H + 2), (-H, 0), (3 * H, 8 * H - 1), (4 * H, 5 * H), (5, 4)]
+    wide = [(-H, 8 * H), (-100 * H, 100 * H)]
+    for r in narrow + wide:
+        assert_parity(store, *r)
+    want = {r: _rows(store.read_points(*r)) for r in narrow + wide}
+    # subdirectories that hold no bucket: a stray spelling and an aside
+    part = os.path.join(store.path, "hour_bucket=1")
+    shutil.copytree(part, os.path.join(store.path, "hour_bucket=01"))
+    shutil.copytree(part, os.path.join(store.path, ".compact-old-hour_bucket=1"))
+    n_dirs = sum(e.is_dir() for e in os.scandir(store.path))
+    assert os.stat(store.path).st_nlink - 2 == n_dirs == 6
+
+    listed = []
+    real_listdir = os.listdir
+    monkeypatch.setattr(os, "listdir", lambda p=".": listed.append(p) or real_listdir(p))
+    for r in narrow:
+        assert _rows(store.read_points(*r)) == want[r], r
+    assert listed == []
+    for r in wide:
+        assert _rows(store.read_points(*r)) == want[r], r
+    assert listed == [store.path] * len(wide)
+
+    listed.clear()
+    monkeypatch.setattr(os, "stat", _stat_with_nlink(store, 1))
+    for r in narrow + wide:
+        assert _rows(store.read_points(*r)) == want[r], r
+    assert listed == [store.path] * len(narrow + wide)
+    missing = TimeSeriesStore(spark, str(store.path) + "-missing")
+    assert _rows(missing.read_points(0, H)) == []

@@ -15,14 +15,16 @@ Endpoint parity:
     (api/main.py:85-102); ``metric`` echoes the queried series instead of
     the reference's hard-coded ``"cpu.load.avg"``.
 
-Read and write paths — neither starts a Spark job: ``query_points``
-reads in-process through Arrow (:meth:`TimeSeriesStore.read_points` —
-the row groups of the queried hour files that overlap the range, no
-cached file listing, so a read sees every earlier write) and builds the
-response lists from numpy arrays, not an Arrow scalar per value; a null
-stays ``None``.  ``ingest_points`` writes in-process through Arrow
+Read and write paths — neither enters the JVM, so neither starts a
+Spark job: ``query_points`` reads in-process through Arrow
+(:meth:`TimeSeriesStore.read_points` — the queried hour dirs, opened by
+name, and the row groups of their files that overlap the range; nothing
+cached, so a read sees every earlier write) and builds the response
+lists from numpy arrays, not an Arrow scalar per value; a null stays
+``None``.  ``ingest_points`` writes in-process through Arrow
 (:meth:`TimeSeriesStore.append_points` — one sorted Parquet file per
-touched bucket, staged and moved in); an empty batch writes nothing.
+touched bucket, staged and moved in) and leaves Spark's refresh of the
+store path to the next Spark read; an empty batch writes nothing.
 DataFrames go through :meth:`TimeSeriesStore.ingest` and the other Spark
 write paths.  The app serves both calls on a threadpool without a lock,
 so a query that runs while an ingest commits may return only part of

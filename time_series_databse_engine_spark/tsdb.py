@@ -56,6 +56,8 @@ POINT_SCHEMA = T.StructType(
 
 #: :meth:`TimeSeriesStore.read_points`' result schema
 ARROW_SCHEMA = pa.schema([("metric", pa.string()), ("ts_ms", pa.int64()), ("value", pa.float64())])
+#: the columns :func:`_read_file` decodes when ``metric`` holds one value
+_TS_VALUE = pa.schema([ARROW_SCHEMA.field("ts_ms"), ARROW_SCHEMA.field("value")])
 
 
 class TimeSeriesStore:
@@ -91,16 +93,22 @@ class TimeSeriesStore:
                     )
         # cached lazy handle over the table; see points()
         self._points_cache: DataFrame | None = None
+        # an API append since the last refreshByPath; see _read()
+        self._refresh_pending = False
 
     def _invalidate(self) -> None:
-        """Drop the cached reader after any write: the cached DataFrame
+        """Drop the cached reader after a Spark write: the cached DataFrame
         pins a file listing (InMemoryFileIndex), which would serve stale
         partition/file sets after ingest/compact/upsert/expire.
         ``refreshByPath`` also drops any other cached plan over the store
-        path in this SparkSession.  :meth:`points` does not see a writer in
-        another process until this store writes again;
-        :meth:`read_points` lists the files on every call."""
+        path in this SparkSession.  The API's Arrow append does not call
+        this: it drops the cached reader and leaves the refresh to the next
+        Spark read (:meth:`_read`), so the serving write never enters the
+        JVM.  :meth:`points` does not see a writer in another process until
+        this store writes again; :meth:`read_points` reads the directories
+        on every call."""
         self._points_cache = None
+        self._refresh_pending = False
         self.spark.catalog.refreshByPath(self.path)
 
     def _project(self, df: DataFrame) -> DataFrame:
@@ -159,9 +167,9 @@ class TimeSeriesStore:
         except (FileNotFoundError, NotADirectoryError):
             return []
 
-    def _partitions(self, names: list[str] | None = None) -> list[tuple[int, str]]:
-        """(bucket, dir name) of every bucket dir among ``names`` (default:
-        the table's listing), unordered.  A bucket dir is named
+    def _partitions(self) -> list[tuple[int, str]]:
+        """(bucket, dir name) of every bucket dir in the table's listing,
+        unordered.  A bucket dir is named
         ``<bucket_col>=<b>`` with ``b`` spelled as ``str(b)``, the name every
         writer gives it.  Any other ``<bucket_col>=`` name holds no bucket
         and is skipped: Spark files a null timestamp under
@@ -169,7 +177,7 @@ class TimeSeriesStore:
         and has no age."""
         prefix = self.bucket_col + "="
         out = []
-        for entry in self._listing() if names is None else names:
+        for entry in self._listing():
             if entry.startswith(prefix):
                 b = _canonical_int(entry[len(prefix):])
                 if b is not None:
@@ -190,7 +198,13 @@ class TimeSeriesStore:
         """The table with its fixed schema given explicitly (skips the
         schema-inference footer reads — measured 1.5 s → 0.6 s first-query
         latency on a 278-partition store); None when the store path does
-        not exist yet.  Any other read error propagates."""
+        not exist yet.  Any other read error propagates.  Every Spark read
+        and rewrite of the store builds its plan here, so the
+        ``refreshByPath`` an API append left pending runs first: a plan
+        cached over the store is not served stale."""
+        if self._refresh_pending:
+            self._refresh_pending = False
+            self.spark.catalog.refreshByPath(self.path)
         schema = T.StructType(
             list(POINT_SCHEMA.fields) + [T.StructField(self.bucket_col, T.LongType(), True)]
         )
@@ -263,19 +277,35 @@ class TimeSeriesStore:
         ``<store>.append-<uuid>-tmp`` dir (one per call, so concurrent
         appends never share one; :meth:`vacuum` sweeps a crashed one) and
         are published by :func:`commit.move_in`.  A batch that does not
-        convert to the point schema raises before anything is written."""
+        convert to the point schema raises before anything is written.
+        Points with a null ``ts_ms`` go where :meth:`ingest` files them,
+        under ``<bucket_col>=__HIVE_DEFAULT_PARTITION__``, which reads skip
+        and :meth:`points` reads.
+
+        No JVM call: the store's cached reader is dropped and the
+        ``refreshByPath`` a Spark write makes is left pending for the next
+        Spark read of the store (:meth:`_read`).  Spark keys its file
+        status cache by file index, so that read lists the new files."""
         t = pa.table([metrics, ts_ms, values], schema=ARROW_SCHEMA)
         if not t.num_rows:
             return
-        buckets = np.floor_divide(t.column("ts_ms").to_numpy(), self.bucket_ms)
-        t = t.append_column(self.bucket_col, pa.array(buckets)).sort_by(
+        ts = t.column("ts_ms")
+        n_null = ts.null_count
+        null = ts.is_null().to_numpy(zero_copy_only=False) if n_null else None
+        buckets = np.floor_divide(ts.fill_null(0).to_numpy(), self.bucket_ms)
+        t = t.append_column(self.bucket_col, pa.array(buckets, mask=null)).sort_by(
             [(self.bucket_col, "ascending"), ("metric", "ascending"), ("ts_ms", "ascending")]
         )
-        buckets, starts = np.unique(t.column(self.bucket_col).to_numpy(), return_index=True)
+        # a null bucket sorts last: the non-null rows come first
+        n = t.num_rows - n_null
+        buckets, starts = np.unique(t.column(self.bucket_col)[:n].to_numpy(), return_index=True)
+        groups = list(zip(buckets, starts, [*starts[1:], n]))
+        if n_null:
+            groups.append(("__HIVE_DEFAULT_PARTITION__", n, t.num_rows))
         t = t.drop_columns(self.bucket_col)
         uid = uuid.uuid4().hex
         tmp = self._staging(f"append-{uid}")
-        for b, lo, hi in zip(buckets, starts, [*starts[1:], t.num_rows]):
+        for b, lo, hi in groups:
             part = os.path.join(tmp, f"{self.bucket_col}={b}")
             os.makedirs(part)
             pq.write_table(
@@ -292,7 +322,8 @@ class TimeSeriesStore:
                 store_schema=False,
             )
         commit.move_in(tmp, self.path, self.bucket_col)
-        self._invalidate()
+        self._refresh_pending = True
+        self._points_cache = None
 
     def ingest_epoch(
         self,
@@ -613,6 +644,13 @@ class TimeSeriesStore:
 
     # ------------------------------------------------------------------- read
     def points(self) -> DataFrame:
+        """Every stored point as a lazy DataFrame (metric, ts_ms, value,
+        bucket, ``ts``): the Spark path's one reader, which query_range,
+        downsample, the rewrites and the analytics tier all build on.  The
+        handle is cached until the next write.  After an API append it is
+        rebuilt through :meth:`_read`, which first runs the
+        ``refreshByPath`` the append left pending, so Spark sees every API
+        write."""
         if self._points_cache is not None:
             return self._points_cache
         df = self._read()
@@ -626,9 +664,9 @@ class TimeSeriesStore:
         # downsample, rewrites, the analytics tier): re-creating the reader
         # re-lists every partition directory, a Spark listing job on an
         # hour-partitioned store.  The cached plan keeps the file index and
-        # is invalidated on every write, the API's Arrow appends
+        # is dropped on every write, the API's Arrow appends
         # (append_points) included.  The API's reads never use it: they
-        # list the files themselves (read_points).
+        # read the bucket dirs themselves (read_points).
         self._points_cache = out
         return out
 
@@ -678,52 +716,79 @@ class TimeSeriesStore:
 
         Reads the files Spark's file index would: the bucket dirs
         (:meth:`_partitions`) in [start, end]'s buckets, ascending, minus
-        hidden names (``_*``, ``.*``, ``*._COPYING_``).  When the range
-        spans fewer buckets than the table's root lists names, each
-        bucket's dir name is looked up in the listing; otherwise every
-        listed name is parsed.  Both select the same dirs, because a bucket
-        dir has one spelling.  Each file is opened with ``pq.ParquetFile``;
-        only its row groups whose ``ts_ms`` min/max overlaps [start, end]
-        are decoded (:func:`_read_file`).  A bucket holds exactly the
+        hidden names (``_*``, ``.*``, ``*._COPYING_``).  The root is not
+        listed when the range spans no more buckets than the root has
+        subdirectories (its link count less 2, one ``stat``): each bucket's
+        dir is opened by name, and a missing one is an empty bucket.  A
+        wider range, or a file system whose directory link count is not a
+        subdirectory count (btrfs reports 1), lists the root and parses
+        every name.  Both select the same dirs, because a bucket dir has
+        one spelling.  Each file is opened with ``pq.ParquetFile``; only
+        its row groups whose ``ts_ms`` min/max overlaps [start, end] are
+        decoded (:func:`_read_file`).  A bucket holds exactly the
         timestamps [b·bucket_ms, (b+1)·bucket_ms), so the walk stops after
         the bucket that fills ``limit``.  The rows come back in Spark's
-        ``orderBy("ts_ms", "metric")`` order, nulls first.  They are sorted
-        only when their ``ts_ms`` is not already strictly increasing (no
-        row read has a null ``ts_ms``), as one sorted file of one metric,
-        or several such files over disjoint times in bucket order, read:
-        with no two timestamps equal, the metric order cannot matter.
-        No cache: every call lists the directories again, so a read sees
-        every earlier write.  A read is not isolated from a write it
-        overlaps: it may return part of a batch that is still committing,
-        or fail on an hour a rewrite is swapping.  A missing store reads as
-        empty; an unreadable file raises."""
+        ``orderBy("ts_ms", "metric")`` order, nulls first.  A bucket's
+        files are concatenated in the order of their first timestamp read,
+        and the rows are sorted only when their ``ts_ms`` is not then
+        strictly increasing (no row read has a null ``ts_ms``), as sorted
+        files of one metric over disjoint times read, an hour with
+        appended files included: with no two timestamps equal, the metric
+        order cannot matter.  No cache: every call reads the directories
+        again, so a read sees every earlier write.  A read is not isolated
+        from a write it overlaps: it may return part of a batch that is
+        still committing, and an hour a rewrite is swapping may fail the
+        read, or, when its dir is opened by name, read as empty.  A missing
+        store reads as empty; an unreadable file raises."""
         if limit is not None and limit < 0:
             raise ValueError(f"limit must be >= 0, got {limit}")
         lo, hi = start_ms // self.bucket_ms, end_ms // self.bucket_ms
-        names = self._listing()
-        if hi - lo + 1 < len(names):
-            listed = set(names)
-            dirs = [n for b in range(lo, hi + 1) if (n := f"{self.bucket_col}={b}") in listed]
+        try:
+            n_dirs = os.stat(self.path).st_nlink - 2
+        except FileNotFoundError:
+            n_dirs = -1
+        by_name = hi - lo + 1 <= n_dirs
+        if by_name:
+            dirs = [f"{self.bucket_col}={b}" for b in range(lo, hi + 1)]
         else:
-            dirs = [n for b, n in sorted(self._partitions(names)) if lo <= b <= hi]
+            dirs = [n for b, n in sorted(self._partitions()) if lo <= b <= hi]
         wanted = pa.array(metrics, pa.string()) if metrics else None
         parts, rows = [], 0
         for name in dirs:
             if limit is not None and rows >= limit:
                 break
-            for e in os.scandir(os.path.join(self.path, name)):
+            try:
+                entries = os.scandir(os.path.join(self.path, name))
+            except FileNotFoundError:
+                if by_name:
+                    continue
+                raise
+            bucket = []
+            for e in entries:
                 if _is_data(e):
-                    t = _read_file(e.path, start_ms, end_ms, wanted)
-                    parts.append(t)
-                    rows += t.num_rows
-        out = pa.concat_tables(parts) if parts else ARROW_SCHEMA.empty_table()
+                    t, metric = _read_file(e.path, start_ms, end_ms, wanted)
+                    if t.num_rows:
+                        bucket.append((t, metric))
+                        rows += t.num_rows
+            if len(bucket) > 1:
+                bucket.sort(key=lambda p: p[0].column("ts_ms")[0].as_py())
+            parts += bucket
+        # when every file read holds one and the same metric, its column
+        # is built once, for the rows returned
+        one = {m for _, m in parts}
+        metric = one.pop() if len(one) == 1 else None
+        if metric is None:
+            tables = [t if m is None else _with_metric(t, m) for t, m in parts]
+        else:
+            tables = [t for t, _ in parts]
+        out = pa.concat_tables(tables) if tables else ARROW_SCHEMA.empty_table()
         ts = out.column("ts_ms").to_numpy()
         if not (ts[1:] > ts[:-1]).all():
-            # Spark's orderBy: ascending, nulls first
-            out = out.sort_by(
-                [("ts_ms", "ascending"), ("metric", "ascending")], null_placement="at_start"
-            )
-        return out if limit is None else out.slice(0, limit)
+            if metric is not None:
+                out, metric = _with_metric(out, metric), None
+            out = _spark_order(out)
+        out = out if limit is None else out.slice(0, limit)
+        return out if metric is None else _with_metric(out, metric)
 
     # --------------------------------------------------------------- rollups
     DAY_MS = 86_400_000
@@ -822,31 +887,52 @@ def _is_data(entry: os.DirEntry) -> bool:
     return entry.is_file() and not name.startswith(("_", ".")) and not name.endswith("._COPYING_")
 
 
-def _read_file(path: str, start_ms: int, end_ms: int, metrics: pa.Array | None) -> pa.Table:
+def _spark_order(t: pa.Table) -> pa.Table:
+    """``t`` in Spark's ``orderBy("ts_ms", "metric")`` order: ascending,
+    nulls first."""
+    return t.sort_by([("ts_ms", "ascending"), ("metric", "ascending")], null_placement="at_start")
+
+
+def _read_file(
+    path: str, start_ms: int, end_ms: int, metrics: pa.Array | None
+) -> tuple[pa.Table, str | None]:
     """One data file's rows with ``start_ms <= ts_ms <= end_ms`` (and
-    ``metric`` in ``metrics``, when given), as :data:`ARROW_SCHEMA`.  Row
+    ``metric`` in ``metrics``, when given), as :data:`ARROW_SCHEMA` and
+    None; or, when ``metric`` holds one value (below), as ``(ts_ms,
+    value)`` and that value, which :func:`_with_metric` puts back.  Row
     groups whose ``ts_ms`` min/max lies outside the range are not read; a
     group without min/max statistics is read and filtered.
 
     The row groups are decoded on the calling thread, and the rest of the
-    work each file needs is read off its metadata: a file already in
-    :data:`ARROW_SCHEMA`'s types is not cast, and when every row group read
-    has statistics that put its ``ts_ms`` min and max inside the range and
-    count no null ``ts_ms``, and no metric was asked for, every row read is
-    kept and nothing is filtered.  Otherwise the ``ts_ms`` mask is built
-    with numpy on the column's values, or with Arrow when the column holds
-    a null (a null timestamp is in no range)."""
-    with pq.ParquetFile(path) as f:
-        meta = f.metadata
-        ts_col = f.schema_arrow.get_field_index("ts_ms")
-        groups, inside = [], True
+    work each file needs is read off its metadata and its ``ts_ms``:
+
+    - a file already in :data:`ARROW_SCHEMA`'s types is not cast;
+    - when no metric was asked for and every row group read has
+      ``metric`` statistics showing one value (min == max, a null count
+      of 0, the same value in every group), ``metric`` is not decoded.
+      Parquet truncates only a long string's statistics, and a truncated
+      min and max are never equal;
+    - when no metric was asked for and every row group read has
+      statistics that put its ``ts_ms`` min and max inside the range and
+      count no null ``ts_ms``, every row read is kept;
+    - otherwise, when no metric was asked for and the ``ts_ms`` read holds
+      no null and never decreases, the range is cut out with a binary
+      search and a zero-copy slice;
+    - otherwise the rows are filtered, with a ``ts_ms`` mask built with
+      numpy on the column's values, or with Arrow when the column holds a
+      null (a null timestamp is in no range)."""
+    with pa.OSFile(path) as source, pq.ParquetFile(source) as f:
+        meta, schema = f.metadata, f.schema_arrow
+        ts_col = schema.get_field_index("ts_ms")
+        m_col = schema.get_field_index("metric")
+        one_value = metrics is None and m_col >= 0 and schema.field(m_col).type == pa.string()
+        groups, inside, metric_values = [], True, set()
         for g in range(meta.num_row_groups):
-            st = meta.row_group(g).column(ts_col).statistics
+            rg = meta.row_group(g)
+            st = rg.column(ts_col).statistics
             if st is None or not st.has_min_max:
-                groups.append(g)
                 inside = False
             elif st.min <= end_ms and st.max >= start_ms:
-                groups.append(g)
                 inside = (
                     inside
                     and start_ms <= st.min
@@ -854,20 +940,52 @@ def _read_file(path: str, start_ms: int, end_ms: int, metrics: pa.Array | None) 
                     and st.has_null_count
                     and st.null_count == 0
                 )
+            else:
+                continue
+            groups.append(g)
+            if one_value:
+                ms = rg.column(m_col).statistics
+                one_value = (
+                    ms is not None
+                    and ms.has_min_max
+                    and ms.has_null_count
+                    and ms.null_count == 0
+                    and ms.min == ms.max
+                )
+                if one_value:
+                    metric_values.add(ms.min)
+        one_value = one_value and len(metric_values) == 1
+        schema = _TS_VALUE if one_value else ARROW_SCHEMA
         # one thread: a file holds a few row groups in range, where
         # handing its column chunks to Arrow's pool costs more CPU than the
         # decode it spreads
-        t = f.read_row_groups(groups, columns=ARROW_SCHEMA.names, use_threads=False)
-    t = t.select(ARROW_SCHEMA.names)
-    if not t.schema.equals(ARROW_SCHEMA):
-        t = t.cast(ARROW_SCHEMA)
-    if inside and metrics is None:
-        return t
+        t = f.read_row_groups(groups, columns=schema.names, use_threads=False)
+    if not t.schema.equals(schema):
+        t = t.select(schema.names).cast(schema)
+    if not inside or metrics is not None:
+        t = _cut(t, start_ms, end_ms, metrics)
+    return t, metric_values.pop() if one_value else None
+
+
+def _with_metric(t: pa.Table, metric: str) -> pa.Table:
+    """``t``'s (ts_ms, value) rows as :data:`ARROW_SCHEMA`, every one of
+    ``metric``."""
+    column = pa.repeat(pa.scalar(metric, pa.string()), t.num_rows)
+    return pa.table([column, t.column("ts_ms"), t.column("value")], schema=ARROW_SCHEMA)
+
+
+def _cut(t: pa.Table, start_ms: int, end_ms: int, metrics: pa.Array | None) -> pa.Table:
+    """The rows of ``t`` in [start_ms, end_ms] with ``metric`` in
+    ``metrics`` (when given), by :func:`_read_file`'s rules."""
     ts = t.column("ts_ms")
     if ts.null_count:
         keep = pc.and_(pc.greater_equal(ts, start_ms), pc.less_equal(ts, end_ms))
     else:
         a = ts.to_numpy()
+        if metrics is None and (a[1:] >= a[:-1]).all():
+            i = np.searchsorted(a, start_ms, side="left")
+            j = np.searchsorted(a, end_ms, side="right")
+            return t.slice(i, max(j - i, 0))
         keep = pa.array((a >= start_ms) & (a <= end_ms))
     if metrics is not None:
         keep = pc.and_(keep, pc.is_in(t.column("metric"), value_set=metrics))
