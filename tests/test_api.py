@@ -1,13 +1,14 @@
 """API façade semantics — the reference's own API test scenarios
 (tests/test_api.py:23-66) through the in-process handlers."""
 
+import importlib.util
 import shutil
 import tempfile
 
 import pytest
 
 from time_series_databse_engine_spark import TimeSeriesStore
-from time_series_databse_engine_spark.api import ingest_points, query_points
+from time_series_databse_engine_spark.api import create_app, ingest_points, query_points
 
 
 @pytest.fixture()
@@ -65,3 +66,24 @@ def test_limit_cap(store):
     out = query_points(store, 0, 10_000, limit=5)
     assert len(out["points"]) == 5
     assert [p["timestamp"] for p in out["points"]] == [1000, 1001, 1002, 1003, 1004]
+
+
+def test_null_metric_stays_null(store):
+    # as append_points and ingest(df) store it: not the string "None"
+    ingest_points(
+        store,
+        [
+            {"metric": None, "timestamp": 5, "value": 1.0},
+            {"metric": "m", "timestamp": 6, "value": 2.0},
+        ],
+    )
+    t = store.read_points(0, 10)
+    assert t.column("metric").to_pylist() == [None, "m"]
+    assert [r.metric for r in store.query_range(0, 10).collect()] == [None, "m"]
+
+
+def test_create_app_without_fastapi_raises_import_error():
+    if importlib.util.find_spec("fastapi") is not None:
+        pytest.skip("fastapi is installed")
+    with pytest.raises(ImportError, match="fastapi"):
+        create_app(None, "unused")

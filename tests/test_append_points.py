@@ -18,7 +18,7 @@ from time_series_databse_engine_spark import TimeSeriesStore, commit, tsdb
 from time_series_databse_engine_spark.api import ingest_points, query_points
 
 SCHEMA = "metric string, ts_ms long, value double"
-LAYOUTS = ["hour", "date"]
+COL = tsdb.BUCKET_COL
 
 
 def _df(spark, pts):
@@ -31,7 +31,7 @@ def _api(store, pts):
 
 def _stored(store):
     """Every stored (metric, ts_ms, value, bucket) row, as a multiset."""
-    rows = store.points().select("metric", "ts_ms", "value", store.bucket_col).collect()
+    rows = store.points().select("metric", "ts_ms", "value", COL).collect()
     return Counter(tuple(r) for r in rows)
 
 
@@ -41,7 +41,7 @@ def _read(store, start, end, limit=None):
 
 
 def _part_dirs(store):
-    return sorted(e for e in os.listdir(store.path) if e.startswith(store.bucket_col + "="))
+    return sorted(e for e in os.listdir(store.path) if e.startswith(COL + "="))
 
 
 def _data_files(store):
@@ -77,15 +77,14 @@ def _trap_points(width):
     return [("m", t, float(i)) for i, t in enumerate(big + plain)]
 
 
-@pytest.mark.parametrize("layout", LAYOUTS)
-def test_bucket_is_exact_floor_division_on_both_writers(spark, tmp_path, layout):
-    width = TimeSeriesStore.LAYOUTS[layout][1]
+def test_bucket_is_exact_floor_division_on_both_writers(spark, tmp_path):
+    width = tsdb.SHARD_DURATION_MS
     pts = _trap_points(width)
-    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"), bucket=layout)
+    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"))
     spark_store.ingest(_df(spark, pts), target_partitions=2)
-    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"), bucket=layout)
+    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"))
     _api(api_store, pts)
-    want_dirs = sorted({f"{spark_store.bucket_col}={t // width}" for _, t, _ in pts})
+    want_dirs = sorted({f"{COL}={t // width}" for _, t, _ in pts})
     for store in (spark_store, api_store):
         assert _part_dirs(store) == want_dirs
         for m, t, v in pts:
@@ -104,12 +103,11 @@ def _batch(rng, width, n):
     return pts + pts[: n // 5]  # exact duplicates, as a retried request sends
 
 
-@pytest.mark.parametrize("layout", LAYOUTS)
-def test_api_writes_match_spark_ingest(spark, tmp_path, layout):
-    width = TimeSeriesStore.LAYOUTS[layout][1]
-    rng = random.Random(layout)
-    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"), bucket=layout)
-    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"), bucket=layout)
+def test_api_writes_match_spark_ingest(spark, tmp_path):
+    width = tsdb.SHARD_DURATION_MS
+    rng = random.Random("hour")
+    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"))
+    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"))
     for n in (1, 40, 300):
         pts = _batch(rng, width, n)
         spark_store.ingest(_df(spark, pts), target_partitions=3)
@@ -139,26 +137,24 @@ def test_api_writes_match_spark_ingest(spark, tmp_path, layout):
                 assert sorted(got) == sorted(want)
 
 
-@pytest.mark.parametrize("layout", LAYOUTS)
-def test_null_timestamp_is_filed_as_spark_files_it(spark, tmp_path, layout):
+def test_null_timestamp_is_filed_as_spark_files_it(spark, tmp_path):
     """A null ``ts_ms`` goes under ``__HIVE_DEFAULT_PARTITION__`` on both
     writers, so it hides none of its batch's valid points."""
-    width = TimeSeriesStore.LAYOUTS[layout][1]
+    width = tsdb.SHARD_DURATION_MS
     batches = [
         [("m", None, 1.0), ("m", 5, 2.0)],
         [("m", None, 3.0), ("n", None, 4.0), ("m", width + 1, 5.0), (None, 6, None)],
         [("m", None, 6.0)],
     ]
-    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"), bucket=layout)
-    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"), bucket=layout)
+    spark_store = TimeSeriesStore(spark, str(tmp_path / "spark" / "s"))
+    api_store = TimeSeriesStore(spark, str(tmp_path / "api" / "s"))
     for pts in batches:
         spark_store.ingest(_df(spark, pts), target_partitions=2)
         m, t, v = zip(*pts)
         api_store.append_points(list(m), list(t), list(v))
         assert _part_dirs(api_store) == _part_dirs(spark_store)
         assert _stored(api_store) == _stored(spark_store)
-    col = api_store.bucket_col
-    assert _part_dirs(api_store) == [f"{col}=0", f"{col}=1", f"{col}=__HIVE_DEFAULT_PARTITION__"]
+    assert _part_dirs(api_store) == [f"{COL}=0", f"{COL}=1", f"{COL}=__HIVE_DEFAULT_PARTITION__"]
     want = [("m", 5, 2.0), (None, 6, None), ("m", width + 1, 5.0)]
     for store in (api_store, spark_store):
         assert _read(store, 0, 2 * width) == want

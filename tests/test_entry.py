@@ -27,24 +27,13 @@ def test_oracle_keys_subset_of_queries():
     q = set(entry_mod.queries())
     o = set(entry_mod.oracle_sql())
     assert o <= q
-    # all but the explicitly non-SQL-expressible ops have oracles
-    # (resample_1m and ewma gained SQL oracles in round 2; simhash's exact
-    # anchor is simhash_md5)
-    rows_only = q - o
-    assert rows_only <= {
-        "simhash",            # xxhash64 — no cross-engine hash; anchored by simhash_md5
+    # every query has an oracle except these, which DuckDB cannot replay
+    assert q - o == {
         "column_profile_fast",  # xxhash64 HLL — anchored by column_profile (md5)
-        "bpe_tokenize",       # iterative rank-priority merge — not SQL-expressible
-        "pca_fit_project",    # driver eigensolve — not SQL-replayable
-                              # (pca_project pins the committed basis and
-                              # IS oracle-backed since round 7)
         "frame_sample",       # binary container payloads — exactness in tests
-        "approx_stats",       # engine-specific sketch values
         "multimodal_features",  # binary mapInPandas, fake decoder
         "multimodal_decode",  # binary construction — codec exactness in tests
         "multimodal_resize",  # binary payloads — pixel exactness in tests
-        "pack_sequences",     # greedy FFD recursion, invariant-tested
-        "hll_distinct_daily",  # DataSketches binary state, accuracy-tested
         "image_neardup",      # binary payloads; planted twins — pHash tests
         "audio_neardup",      # binary payloads; planted twins — BER tests
         "video_neardup",      # binary payloads; planted twins — frame-hash tests
@@ -60,27 +49,11 @@ def test_three_representative_queries_run(spark, sf_dir):
 
 def test_driver_window_rows_only_entries_are_the_designated_rotation():
     """The first 50 queries() keys are the driver's correctness window.
-    Round-2 rule: rows-only entries don't belong there (they can never
-    hash-match).  Round-6 exception (VERDICT r5 'Next round' #2): the 8
-    rows-only entries that never received ANY driver row are deliberately
-    in-window ONCE so the driver records their "ran, returned rows" rows.
-    Guard both: every in-window no-oracle key must be on that designated
-    list, and the window must still be majority oracle-backed."""
+    A rows-only query can never hash-match, so none sits there."""
     q = list(entry_mod.queries())
     o = set(entry_mod.oracle_sql())
-    designated = {
-        # r6 designees still in-window (video_neardup, frame_sample and
-        # simhash rotated out r7 after their clean r6 rows; pca_project
-        # graduated to oracle-backed)
-        "image_neardup", "audio_neardup", "multimodal_resize",
-        "bpe_tokenize",
-        # r7: new rows-only lifecycle entry, in-window for its first row
-        "pca_fit_project",
-    }
     rows_only_in_window = {k for k in q[:50] if k not in o}
-    stray = rows_only_in_window - designated
-    assert not stray, f"undesignated no-oracle queries in the window: {stray}"
-    assert len(rows_only_in_window) <= len(designated)
+    assert not rows_only_in_window, f"no-oracle queries in the window: {rows_only_in_window}"
 
 
 def test_docs_count_memo_distinguishes_scale_factors(spark):

@@ -92,16 +92,15 @@ def _apply(spark, store, op):
         store.expire(op[1])
 
 
-@pytest.mark.parametrize("layout", ["hour", "date"])
 @settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(data=st.data())
-def test_read_points_matches_query_range(spark, tmp_path_factory, layout, data):
-    width = TimeSeriesStore.LAYOUTS[layout][1]
-    store = TimeSeriesStore(spark, str(tmp_path_factory.mktemp("p") / "s"), bucket=layout)
+def test_read_points_matches_query_range(spark, tmp_path_factory, data):
+    width = tsdb.SHARD_DURATION_MS
+    store = TimeSeriesStore(spark, str(tmp_path_factory.mktemp("p") / "s"))
     base = data.draw(_points(width), label="base")
     store.ingest(_df(spark, base), target_partitions=2)
     for op in data.draw(_ops(width), label="ops"):
@@ -125,13 +124,12 @@ def test_read_points_matches_query_range(spark, tmp_path_factory, layout, data):
 QUERY_SHAPES = [(None, None), (["a"], None), (["a", "c"], 3), (None, 0), (None, 1), (None, 5)]
 
 
-@pytest.mark.parametrize("layout", ["hour", "date"])
-def test_read_points_parity_after_every_write(spark, tmp_path, layout):
+def test_read_points_parity_after_every_write(spark, tmp_path):
     """One store taken through every write path; after each, a grid of
     ranges (empty, inverted, on points, across bucket edges, negative
     start) × metrics × limits must match Spark."""
-    W = TimeSeriesStore.LAYOUTS[layout][1]
-    store = TimeSeriesStore(spark, str(tmp_path / "s"), bucket=layout)
+    W = tsdb.SHARD_DURATION_MS
+    store = TimeSeriesStore(spark, str(tmp_path / "s"))
     grid = itertools.product("ab", range(3), (0, 1, 7, W - 1))
     base = [(m, b * W + o, float(i)) for i, (m, b, o) in enumerate(grid)]
     base += [("a", 0, 99.0), ("a", 0, 99.0), ("b", 7, -1.0)]  # duplicates, ts 0

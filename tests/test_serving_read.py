@@ -10,7 +10,6 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from test_read_points import METRICS, _apply, _df, _ops, _points, assert_parity
 
@@ -44,16 +43,15 @@ def assert_same_response(store, start, end, metric=None, limit=10_000):
     assert all(type(p["value"]) in (float, type(None)) for p in got["points"])
 
 
-@pytest.mark.parametrize("layout", ["hour", "date"])
 @settings(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(data=st.data())
-def test_response_matches_to_pylist_on_random_stores(spark, tmp_path_factory, layout, data):
-    width = TimeSeriesStore.LAYOUTS[layout][1]
-    store = TimeSeriesStore(spark, str(tmp_path_factory.mktemp("p") / "s"), bucket=layout)
+def test_response_matches_to_pylist_on_random_stores(spark, tmp_path_factory, data):
+    width = tsdb.SHARD_DURATION_MS
+    store = TimeSeriesStore(spark, str(tmp_path_factory.mktemp("p") / "s"))
     base = data.draw(_points(width), label="base")
     store.ingest(_df(spark, base), target_partitions=2)
     for op in data.draw(_ops(width), label="ops"):
@@ -91,7 +89,7 @@ def test_null_values_and_metric_come_back_as_none(spark, tmp_path):
 ROW_GROUP = 7
 
 
-def _write_store(root, layout):
+def _write_store(root):
     """A store written straight with Arrow, ``ROW_GROUP`` rows per row
     group: per bucket one file sorted by (metric, ts_ms) — the writers'
     order — and, in the first bucket, a second file in shuffled order,
@@ -101,7 +99,7 @@ def _write_store(root, layout):
     ``ts_ms`` never decreases, yet its rows still need the sort.  Its
     last row has a null ``ts_ms``, which its row group's statistics
     count."""
-    col, width = TimeSeriesStore.LAYOUTS[layout]
+    col, width = tsdb.BUCKET_COL, tsdb.SHARD_DURATION_MS
     step = width // 40
     files = {}
     for b in range(-1, 2):
@@ -142,11 +140,10 @@ def _row_group_ranges(root):
     return out
 
 
-@pytest.mark.parametrize("layout", ["hour", "date"])
-def test_row_group_pruning_keeps_every_row_in_range(spark, tmp_path, layout, monkeypatch):
+def test_row_group_pruning_keeps_every_row_in_range(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "s")
-    rows = _write_store(root, layout)
-    store = TimeSeriesStore(spark, root, bucket=layout)
+    rows = _write_store(root)
+    store = TimeSeriesStore(spark, root)
     groups = _row_group_ranges(root)
     edges = sorted({x for lo, hi in groups for x in (lo - 1, lo, lo + 1, hi - 1, hi, hi + 1)})
     ranges = [(lo, hi) for lo, hi in groups]  # exactly one group

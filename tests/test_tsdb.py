@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from time_series_databse_engine_spark import TimeSeriesStore
+from time_series_databse_engine_spark.tsdb import BUCKET_COL
 
 CPP_FIXTURE = [  # engine/test_engine.cpp:28-35 — 5 points across 3 hour-shards
     ("cpu.load.avg", 1000, 10.0),
@@ -19,12 +20,10 @@ CPP_FIXTURE = [  # engine/test_engine.cpp:28-35 — 5 points across 3 hour-shard
 ]
 
 
-@pytest.fixture(scope="module", params=["hour", "date"])
-def store(spark, request):
-    """Every reference-parity assertion runs against BOTH partition
-    layouts — the layout must never change answers."""
+@pytest.fixture(scope="module")
+def store(spark):
     d = tempfile.mkdtemp()
-    s = TimeSeriesStore(spark, d + "/points", bucket=request.param)
+    s = TimeSeriesStore(spark, d + "/points")
     s.ingest(
         spark.createDataFrame(CPP_FIXTURE, "metric string, ts_ms long, value double"),
         target_partitions=2,
@@ -84,13 +83,7 @@ def test_metric_filter(spark):
 def test_partition_pruning_in_plan(store):
     plan = store.query_range(0, 3000)._jdf.queryExecution().executedPlan().toString()
     # the bucket predicate must reach the scan as a partition filter
-    assert store.bucket_col in plan
-
-
-def test_layout_mismatch_refused(store, spark):
-    other = "date" if store.bucket_col == "hour_bucket" else "hour"
-    with pytest.raises(ValueError, match="partitioned by"):
-        TimeSeriesStore(spark, store.path, bucket=other)
+    assert BUCKET_COL in plan
 
 
 def test_downsample(store):
@@ -309,30 +302,6 @@ def test_vacuum_removes_only_stale_staging_dirs(spark, tmp_path):
     assert os.path.isdir(tmp_path / "p-other")
     assert store.points().count() == 1  # table untouched
     assert store.vacuum() == 0
-
-
-def test_ingest_observe_metrics_piggyback_write(spark, tmp_path):
-    from time_series_databse_engine_spark import TimeSeriesStore
-
-    store = TimeSeriesStore(spark, str(tmp_path / "p"))
-    m = store.ingest(
-        spark.createDataFrame(
-            [("a", 1000, 1.0), ("a", 2000, None), ("b", 5000, 3.0)],
-            "metric string, ts_ms long, value double",
-        ),
-        observe=True,
-    )
-    assert m == {
-        "rows": 3,
-        "null_values": 1,
-        "min_ts_ms": 1000,
-        "max_ts_ms": 5000,
-    }
-    # default path still returns None and writes identically
-    assert store.ingest(
-        spark.createDataFrame([("c", 9000, 4.0)], "metric string, ts_ms long, value double")
-    ) is None
-    assert store.points().count() == 4
 
 
 def test_ingest_checked_publishes_good_and_rejects_bad(spark, tmp_path):

@@ -52,8 +52,9 @@ BUFFER_CAPACITY = 10_000  # reference api/main.py:85
 def ingest_points(store: TimeSeriesStore, points: list[dict[str, Any]]) -> dict[str, Any]:
     """Batch ingest; each point is {metric, timestamp(ms), value}.  Every
     point converts before anything is written, so a bad one raises and
-    the store is left as it was."""
-    metrics = [str(p["metric"]) for p in points]
+    the store is left as it was.  A null metric is stored null, as
+    :meth:`TimeSeriesStore.ingest` stores it."""
+    metrics = [None if p["metric"] is None else str(p["metric"]) for p in points]
     ts_ms = [int(p["timestamp"]) for p in points]
     values = [float(p["value"]) for p in points]
     store.append_points(metrics, ts_ms, values)

@@ -2008,15 +2008,8 @@ from .index_maintenance import (  # noqa: E402
     epoch_append as _epoch_append,
     leased as _leased,
     maintenance_lease as _maintenance_lease,
-    recover_compact as _recover_compact_generic,
     vacuum_index as _vacuum_index,
 )
-
-
-def _recover_compact(idx: str) -> None:
-    """Self-heal a crashed IVF compaction swap (see
-    :func:`index_maintenance.recover_compact`)."""
-    _recover_compact_generic(idx, "cell_id")
 
 
 @_leased(1)
@@ -2076,8 +2069,8 @@ def ivf_index_compact(
       (``.compact-old-…``, a dot-dir Spark never reads) before the new
       one moves in, and the asides are deleted only after every swap
       completes; a crash at any point leaves all data recoverable, and
-      :func:`_recover_compact` (run on the next compact or vacuum)
-      restores any cell whose swap was interrupted.  Nothing is ever
+      :func:`index_maintenance.recover_compact` (run on the next compact
+      or vacuum) restores any cell whose swap was interrupted.  Nothing is ever
       rmtree'd while it is the only copy.
 
     * **Replay-aware.**  ``committed_through`` is the last epoch id the
@@ -2105,8 +2098,8 @@ def ivf_index_vacuum(path: str) -> int:
     """Remove crashed staging state from a persisted ANN index: an
     epoch append or compaction that died mid-write leaves its
     ``index-epoch-<id>-tmp`` / ``index-compact-tmp`` sibling behind.
-    Before sweeping, :func:`_recover_compact` restores any cell whose
-    compaction swap was interrupted (its data lives in a
+    Before sweeping, :func:`index_maintenance.recover_compact` restores
+    any cell whose compaction swap was interrupted (its data lives in a
     ``.compact-old-…`` move-aside, never only in the tmp dir) — so the
     sweep removes staging copies, never the last copy of anything.
     Partially-moved epoch files INSIDE the index need no GC either: the

@@ -15,12 +15,6 @@ from ._util import _shuffle_width
 MS_PER_HOUR = 3_600_000
 
 
-def hour_bucket_ms(col: str = "ts_ms") -> F.Column:
-    """Hour-aligned bucket start in ms — the reference's shard key
-    floor(ts/3600000)*3600000 (engine/insight.cpp:9-14) as an expression."""
-    return (F.col(col) - (F.col(col) % MS_PER_HOUR)).alias("bucket_ms")
-
-
 def downsample(
     df: DataFrame,
     bucket_ms: int,

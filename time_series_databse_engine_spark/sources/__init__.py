@@ -95,56 +95,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view so SQL-form queries can run."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    """CSV source; pass an explicit schema in production (inference = 2 scans)."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines source; explicit schema avoids a full inference pass."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (native Spark reader — same vectorized scan, predicate
-    pushdown, and column pruning guarantees as the parquet path)."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, partition_by: tuple[str, ...] = (), mode: str = "append"
-) -> None:
-    """Partitioned ORC sink — interop with Hive/Trino warehouses where ORC
-    is the table format; ZLIB default codec, partition layout identical
-    to the parquet sink."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: tuple[str, ...] = (), mode: str = "append") -> None:
-    """Partitioned ZSTD parquet sink (the engine's native table layout)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from . import commit
 
 SHARD_DURATION_MS = 3_600_000  # one-hour buckets, reference engine/insight.cpp:6
+#: the partition column: ``floor(ts_ms / SHARD_DURATION_MS)``
+BUCKET_COL = "hour_bucket"
 
 POINT_SCHEMA = T.StructType(
     [
@@ -63,34 +65,14 @@ _TS_VALUE = pa.schema([ARROW_SCHEMA.field("ts_ms"), ARROW_SCHEMA.field("value")]
 class TimeSeriesStore:
     """Hour-partitioned Parquet time-series table with the reference's two
     operations (ingest, inclusive range scan) plus the aggregation surface a
-    real TSDB needs (downsample etc.)."""
+    real TSDB needs (downsample etc.).  The one layout is the reference's
+    one-hour shard (engine/insight.cpp:6): every point lives under
+    ``<path>/hour_bucket=<floor(ts_ms / 3600000)>`` (:data:`BUCKET_COL`,
+    :data:`SHARD_DURATION_MS`).  Opening a store touches no file."""
 
-    #: bucket layouts: partition-column name + bucket width.  ``hour`` is
-    #: the reference's shard duration (engine/insight.cpp:6); ``date``
-    #: coarsens the partition grid 24× for extreme-retention stores where
-    #: hour-level dirs would mean millions of partitions (SCALE.md §tsdb)
-    #: — hour-level pruning is preserved by the (bucket, metric, ts_ms)
-    #: row-group sort: min/max stats on ts_ms skip row groups inside a day.
-    LAYOUTS = {"hour": ("hour_bucket", 3_600_000), "date": ("date_bucket", 86_400_000)}
-
-    def __init__(self, spark: SparkSession, path: str, bucket: str = "hour"):
-        if bucket not in self.LAYOUTS:
-            raise ValueError(f"bucket must be hour|date, got {bucket!r}")
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.bucket_col, self.bucket_ms = self.LAYOUTS[bucket]
-        # a store's layout is a property of its FILES: opening an existing
-        # store with the other layout would write a second partition scheme
-        # into the same directory — sniff and refuse
-        if os.path.isdir(path):
-            for other_col, _ in self.LAYOUTS.values():
-                if other_col != self.bucket_col and any(
-                    e.startswith(other_col + "=") for e in os.listdir(path)
-                ):
-                    raise ValueError(
-                        f"store at {path} is partitioned by {other_col}; "
-                        f"open it with the matching bucket= layout"
-                    )
         # cached lazy handle over the table; see points()
         self._points_cache: DataFrame | None = None
         # an API append since the last refreshByPath; see _read()
@@ -118,16 +100,17 @@ class TimeSeriesStore:
         if "ts_ms" not in df.columns:
             df = df.withColumn("ts_ms", F.unix_millis(F.col("ts")))
         ts = F.col("ts_ms").cast("long")
-        # floor(ts / bucket_ms) in exact long arithmetic, the readers' `//`:
-        # `div` truncates toward zero, so a negative remainder steps down
-        # one.  A double division rounds above 2^53 and would file a point
-        # in the next bucket, where no read looks for it.
-        quotient = F.expr(f"CAST(ts_ms AS BIGINT) div {self.bucket_ms}")
+        # floor(ts / SHARD_DURATION_MS) in exact long arithmetic, the
+        # readers' `//`: `div` truncates toward zero, so a negative
+        # remainder steps down one.  A double division rounds above 2^53
+        # and would file a point in the next bucket, where no read looks
+        # for it.
+        quotient = F.expr(f"CAST(ts_ms AS BIGINT) div {SHARD_DURATION_MS}")
         return df.select(
             F.col("metric").cast("string"),
             ts.alias("ts_ms"),
             F.col("value").cast("double"),
-            (quotient - (ts % self.bucket_ms < 0).cast("long")).alias(self.bucket_col),
+            (quotient - (ts % SHARD_DURATION_MS < 0).cast("long")).alias(BUCKET_COL),
         )
 
     def _hashed(self, pts: DataFrame, n: int | None) -> DataFrame:
@@ -139,20 +122,20 @@ class TimeSeriesStore:
         fixed count wrote up to ``n`` files per hour; a batch big enough
         to fill every partition keeps all of them."""
         if not n:
-            return pts.repartition(self.bucket_col, "metric")
-        return pts.repartition(n, self.bucket_col, "metric")
+            return pts.repartition(BUCKET_COL, "metric")
+        return pts.repartition(n, BUCKET_COL, "metric")
 
     def _write(self, pts: DataFrame, path: str, mode: str = "overwrite") -> None:
         """The store's one writer: files sorted by (bucket, metric, ts_ms)
         for row-group min/max pruning, partitioned by bucket."""
         (
-            pts.sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
+            pts.sortWithinPartitions(BUCKET_COL, "metric", "ts_ms")
             .write.mode(mode)
             # parquet v2 data pages: DELTA_BINARY_PACKED on the sorted ts_ms
             # column ≈ the reference's delta-of-delta codec (shard.cpp:107-126)
             # at the format layer — measured 7.78 B/pt vs the reference's 8.2
             .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
+            .partitionBy(BUCKET_COL)
             .parquet(path)
         )
 
@@ -170,12 +153,12 @@ class TimeSeriesStore:
     def _partitions(self) -> list[tuple[int, str]]:
         """(bucket, dir name) of every bucket dir in the table's listing,
         unordered.  A bucket dir is named
-        ``<bucket_col>=<b>`` with ``b`` spelled as ``str(b)``, the name every
-        writer gives it.  Any other ``<bucket_col>=`` name holds no bucket
+        ``hour_bucket=<b>`` with ``b`` spelled as ``str(b)``, the name every
+        writer gives it.  Any other ``hour_bucket=`` name holds no bucket
         and is skipped: Spark files a null timestamp under
         ``__HIVE_DEFAULT_PARTITION__``, and such a point lies in no range
         and has no age."""
-        prefix = self.bucket_col + "="
+        prefix = BUCKET_COL + "="
         out = []
         for entry in self._listing():
             if entry.startswith(prefix):
@@ -185,13 +168,13 @@ class TimeSeriesStore:
         return out
 
     def _swap(self, tmp: str, touched=()) -> None:
-        commit.swap_partitions(tmp, self.path, self.bucket_col, touched)
+        commit.swap_partitions(tmp, self.path, BUCKET_COL, touched)
         self._invalidate()
 
     def _recover(self) -> None:
         """Heal an interrupted partition swap before a rewrite reads the
         table (a partition still moved aside would be read as absent)."""
-        if commit.recover_compact(self.path, self.bucket_col):
+        if commit.recover_compact(self.path, BUCKET_COL):
             self._invalidate()
 
     def _read(self) -> DataFrame | None:
@@ -206,7 +189,7 @@ class TimeSeriesStore:
             self._refresh_pending = False
             self.spark.catalog.refreshByPath(self.path)
         schema = T.StructType(
-            list(POINT_SCHEMA.fields) + [T.StructField(self.bucket_col, T.LongType(), True)]
+            list(POINT_SCHEMA.fields) + [T.StructField(BUCKET_COL, T.LongType(), True)]
         )
         return _parquet_or_none(self.spark.read.schema(schema), self.path)
 
@@ -216,8 +199,7 @@ class TimeSeriesStore:
         df: DataFrame,
         target_partitions: int | None = None,
         layout: str = "hash",
-        observe: bool = False,
-    ) -> dict | None:
+    ) -> None:
         """Batch ingest: the Spark-native replacement for the reference's
         per-point ``ingest_point`` FFI loop (engine/insight.cpp:18-23), which
         re-decoded a whole shard per appended point.  One immutable sorted
@@ -238,11 +220,8 @@ class TimeSeriesStore:
           across tasks; costs the sampling pass (persist expensive inputs
           first).  Use for known-skewed batches at scale.
 
-        ``observe=True`` returns ingestion-quality metrics (rows,
-        null-value count, min/max ts) via Spark's Observation API:
-        the counters piggyback the WRITE job's own pass over the data —
-        zero extra scan, unlike a count()/agg() audit query, which at
-        100 TB would double the ingest cost.
+        For the batch's quality metrics (rows, null values, min/max ts)
+        use :meth:`ingest_checked`, which takes them from its write pass.
         """
         if layout not in ("hash", "range"):
             raise ValueError(f"layout must be hash|range, got {layout!r}")
@@ -251,22 +230,9 @@ class TimeSeriesStore:
             pts = self._hashed(pts, target_partitions)
         else:
             n = target_partitions or self.spark.sparkContext.defaultParallelism
-            pts = pts.repartitionByRange(n, self.bucket_col, "metric", "ts_ms")
-        obs = None
-        if observe:
-            from pyspark.sql import Observation
-
-            obs = Observation("ingest")
-            pts = pts.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("value").isNull().cast("long")).alias("null_values"),
-                F.min("ts_ms").alias("min_ts_ms"),
-                F.max("ts_ms").alias("max_ts_ms"),
-            )
+            pts = pts.repartitionByRange(n, BUCKET_COL, "metric", "ts_ms")
         self._write(pts, self.path, mode="append")
         self._invalidate()
-        return obs.get if obs is not None else None
 
     def append_points(self, metrics: list[str], ts_ms: list[int], values: list[float]) -> None:
         """Append a batch of Python values — the API's write —
@@ -279,7 +245,7 @@ class TimeSeriesStore:
         are published by :func:`commit.move_in`.  A batch that does not
         convert to the point schema raises before anything is written.
         Points with a null ``ts_ms`` go where :meth:`ingest` files them,
-        under ``<bucket_col>=__HIVE_DEFAULT_PARTITION__``, which reads skip
+        under ``hour_bucket=__HIVE_DEFAULT_PARTITION__``, which reads skip
         and :meth:`points` reads.
 
         No JVM call: the store's cached reader is dropped and the
@@ -292,21 +258,21 @@ class TimeSeriesStore:
         ts = t.column("ts_ms")
         n_null = ts.null_count
         null = ts.is_null().to_numpy(zero_copy_only=False) if n_null else None
-        buckets = np.floor_divide(ts.fill_null(0).to_numpy(), self.bucket_ms)
-        t = t.append_column(self.bucket_col, pa.array(buckets, mask=null)).sort_by(
-            [(self.bucket_col, "ascending"), ("metric", "ascending"), ("ts_ms", "ascending")]
+        buckets = np.floor_divide(ts.fill_null(0).to_numpy(), SHARD_DURATION_MS)
+        t = t.append_column(BUCKET_COL, pa.array(buckets, mask=null)).sort_by(
+            [(BUCKET_COL, "ascending"), ("metric", "ascending"), ("ts_ms", "ascending")]
         )
         # a null bucket sorts last: the non-null rows come first
         n = t.num_rows - n_null
-        buckets, starts = np.unique(t.column(self.bucket_col)[:n].to_numpy(), return_index=True)
+        buckets, starts = np.unique(t.column(BUCKET_COL)[:n].to_numpy(), return_index=True)
         groups = list(zip(buckets, starts, [*starts[1:], n]))
         if n_null:
             groups.append(("__HIVE_DEFAULT_PARTITION__", n, t.num_rows))
-        t = t.drop_columns(self.bucket_col)
+        t = t.drop_columns(BUCKET_COL)
         uid = uuid.uuid4().hex
         tmp = self._staging(f"append-{uid}")
         for b, lo, hi in groups:
-            part = os.path.join(tmp, f"{self.bucket_col}={b}")
+            part = os.path.join(tmp, f"{BUCKET_COL}={b}")
             os.makedirs(part)
             pq.write_table(
                 t.slice(lo, hi - lo),
@@ -321,7 +287,7 @@ class TimeSeriesStore:
                 column_encoding={"ts_ms": "DELTA_BINARY_PACKED", "value": "PLAIN"},
                 store_schema=False,
             )
-        commit.move_in(tmp, self.path, self.bucket_col)
+        commit.move_in(tmp, self.path, BUCKET_COL)
         self._refresh_pending = True
         self._points_cache = None
 
@@ -360,7 +326,7 @@ class TimeSeriesStore:
         """
         tmp = self._staging(f"epoch-{int(epoch_id)}")
         self._write(self._hashed(self._project(df), target_partitions), tmp)
-        commit.move_in(tmp, self.path, self.bucket_col, prefix=f"epoch{int(epoch_id)}-")
+        commit.move_in(tmp, self.path, BUCKET_COL, prefix=f"epoch{int(epoch_id)}-")
         self._invalidate()
 
     def ingest_checked(
@@ -374,8 +340,9 @@ class TimeSeriesStore:
         """Write-audit-publish ingest (the Iceberg WAP / Delta-constraint
         pattern): the batch is WRITTEN to an invisible staging dir,
         AUDITED against data-quality gates using metrics that piggyback
-        that same write pass (the :meth:`ingest` ``observe`` trick — no
-        second scan), and PUBLISHED by O(touched partitions) file moves
+        that same write pass (Spark's Observation API — no second scan,
+        unlike a count()/agg() audit query, which at 100 TB would double
+        the ingest cost), and PUBLISHED by O(touched partitions) file moves
         only if every check passes.  A failing batch leaves the table
         bit-for-bit untouched — the property a blind append cannot give
         (half-ingested garbage needs a purge).
@@ -415,7 +382,7 @@ class TimeSeriesStore:
         if problems:
             shutil.rmtree(tmp, ignore_errors=True)
             raise ValueError(f"WAP audit failed: {'; '.join(problems)} | metrics={m}")
-        commit.move_in(tmp, self.path, self.bucket_col)  # publish (append)
+        commit.move_in(tmp, self.path, BUCKET_COL)  # publish (append)
         self._invalidate()
         m["published"] = True
         return m
@@ -445,10 +412,10 @@ class TimeSeriesStore:
         if df is None:
             return  # empty store — nothing to compact
         if dedupe:
-            df = df.dropDuplicates(["metric", "ts_ms", "value", self.bucket_col])
+            df = df.dropDuplicates(["metric", "ts_ms", "value", BUCKET_COL])
         tmp = self._staging("compact")
         n = target_partitions or self.spark.sparkContext.defaultParallelism
-        self._write(df.repartitionByRange(n, self.bucket_col, "metric", "ts_ms"), tmp)
+        self._write(df.repartitionByRange(n, BUCKET_COL, "metric", "ts_ms"), tmp)
         self._swap(tmp)
 
     def upsert(self, df: DataFrame, target_partitions: int | None = None) -> None:
@@ -465,24 +432,24 @@ class TimeSeriesStore:
         self._recover()
         new = (
             self._project(df)
-            .groupBy(self.bucket_col, "metric", "ts_ms")
+            .groupBy(BUCKET_COL, "metric", "ts_ms")
             .agg(F.max("value").alias("value"))
             .withColumn("pri", F.lit(1))
         )
         # touched-partition list: O(hours in the batch) driver-side metadata,
         # same cost class as expire(); NOT a data collect
-        buckets = [r[0] for r in new.select(self.bucket_col).distinct().collect()]
+        buckets = [r[0] for r in new.select(BUCKET_COL).distinct().collect()]
         if not buckets:
             return
         existing = (
             self.points()
-            .filter(F.col(self.bucket_col).isin(buckets))
-            .select(self.bucket_col, "metric", "ts_ms", "value")
+            .filter(F.col(BUCKET_COL).isin(buckets))
+            .select(BUCKET_COL, "metric", "ts_ms", "value")
             .withColumn("pri", F.lit(0))
         )
         merged = (
             existing.unionByName(new)
-            .groupBy(self.bucket_col, "metric", "ts_ms")
+            .groupBy(BUCKET_COL, "metric", "ts_ms")
             .agg(F.max_by("value", "pri").alias("value"))
         )
         tmp = self._staging("upsert")
@@ -525,13 +492,13 @@ class TimeSeriesStore:
             cond = cond & (F.col("ts_ms") <= end_ms)
         pts = self.points()
         buckets = [
-            r[0] for r in pts.filter(cond).select(self.bucket_col).distinct().collect()
+            r[0] for r in pts.filter(cond).select(BUCKET_COL).distinct().collect()
         ]
         if not buckets:
             return 0
-        affected = pts.filter(F.col(self.bucket_col).isin(buckets))
+        affected = pts.filter(F.col(BUCKET_COL).isin(buckets))
         n_deleted = affected.filter(cond).count()
-        keep = affected.filter(~cond).select("metric", "ts_ms", "value", self.bucket_col)
+        keep = affected.filter(~cond).select("metric", "ts_ms", "value", BUCKET_COL)
         tmp = self._staging("purge")
         n = target_partitions or max(
             2, min(len(buckets), self.spark.sparkContext.defaultParallelism)
@@ -539,7 +506,7 @@ class TimeSeriesStore:
         self._write(self._hashed(keep, n), tmp)
         # partitions whose every row matched the predicate produce no dir
         # in the staging write — the swap drops them from the table
-        self._swap(tmp, touched=[f"{self.bucket_col}={b}" for b in buckets])
+        self._swap(tmp, touched=[f"{BUCKET_COL}={b}" for b in buckets])
         return n_deleted
 
     def stats(self) -> dict:
@@ -548,12 +515,12 @@ class TimeSeriesStore:
         (O(metadata)), row count from parquet footer statistics (Spark's
         count(*) over parquet reads footers, not data).  A files/partition
         ratio creeping up says "compact"; bytes/row says how the encoding
-        is doing.  Every ``<bucket_col>=`` dir counts, the null-timestamp
+        is doing.  Every ``hour_bucket=`` dir counts, the null-timestamp
         dir that :meth:`_partitions` skips included, as its rows count in
         :meth:`points`."""
         n_parts = n_files = n_bytes = 0
         for entry in self._listing():
-            if not entry.startswith(self.bucket_col + "="):
+            if not entry.startswith(BUCKET_COL + "="):
                 continue
             n_parts += 1
             pdir = os.path.join(self.path, entry)
@@ -608,7 +575,7 @@ class TimeSeriesStore:
         Returns the number of partitions dropped.  The null-timestamp dir
         has no age and is kept (:meth:`_partitions`)."""
         # bucket b covers [b·H, (b+1)·H): expired iff (b+1)·H <= before_ms
-        cutoff_bucket = before_ms // self.bucket_ms - 1
+        cutoff_bucket = before_ms // SHARD_DURATION_MS - 1
         dropped = 0
         for b, entry in self._partitions():
             if b <= cutoff_bucket:
@@ -658,7 +625,7 @@ class TimeSeriesStore:
             # empty database → empty result, matching the reference's
             # query-on-empty behaviour (tests/test_api.py:59-66), not an error
             empty = self.spark.createDataFrame([], POINT_SCHEMA)
-            df = empty.withColumn(self.bucket_col, F.lit(0).cast("long"))
+            df = empty.withColumn(BUCKET_COL, F.lit(0).cast("long"))
         out = df.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
         # cache the lazy handle for DataFrame consumers (query_range,
         # downsample, rewrites, the analytics tier): re-creating the reader
@@ -685,11 +652,11 @@ class TimeSeriesStore:
         on any cluster size; the ``ts_ms`` predicate additionally prunes row
         groups via min/max stats (which the reference lacked — SURVEY §4.2).
         """
-        lo = start_ms // self.bucket_ms
-        hi = end_ms // self.bucket_ms
+        lo = start_ms // SHARD_DURATION_MS
+        hi = end_ms // SHARD_DURATION_MS
         df = (
             self.points()
-            .filter(F.col(self.bucket_col).between(lo, hi))
+            .filter(F.col(BUCKET_COL).between(lo, hi))
             .filter(F.col("ts_ms").between(start_ms, end_ms))
         )
         if metrics:
@@ -726,8 +693,8 @@ class TimeSeriesStore:
         one spelling.  Each file is opened with ``pq.ParquetFile``; only
         its row groups whose ``ts_ms`` min/max overlaps [start, end] are
         decoded (:func:`_read_file`).  A bucket holds exactly the
-        timestamps [b·bucket_ms, (b+1)·bucket_ms), so the walk stops after
-        the bucket that fills ``limit``.  The rows come back in Spark's
+        timestamps [b·H, (b+1)·H) for H = :data:`SHARD_DURATION_MS`, so
+        the walk stops after the bucket that fills ``limit``.  The rows come back in Spark's
         ``orderBy("ts_ms", "metric")`` order, nulls first.  A bucket's
         files are concatenated in the order of their first timestamp read,
         and the rows are sorted only when their ``ts_ms`` is not then
@@ -742,14 +709,14 @@ class TimeSeriesStore:
         store reads as empty; an unreadable file raises."""
         if limit is not None and limit < 0:
             raise ValueError(f"limit must be >= 0, got {limit}")
-        lo, hi = start_ms // self.bucket_ms, end_ms // self.bucket_ms
+        lo, hi = start_ms // SHARD_DURATION_MS, end_ms // SHARD_DURATION_MS
         try:
             n_dirs = os.stat(self.path).st_nlink - 2
         except FileNotFoundError:
             n_dirs = -1
         by_name = hi - lo + 1 <= n_dirs
         if by_name:
-            dirs = [f"{self.bucket_col}={b}" for b in range(lo, hi + 1)]
+            dirs = [f"{BUCKET_COL}={b}" for b in range(lo, hi + 1)]
         else:
             dirs = [n for b, n in sorted(self._partitions()) if lo <= b <= hi]
         wanted = pa.array(metrics, pa.string()) if metrics else None
